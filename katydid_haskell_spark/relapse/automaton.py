@@ -14,58 +14,37 @@ equivalent of broadcasting the transition table, with the table itself built
 on first use and amortized across the partition, exactly like the
 reference's shared ``State Mem`` across trees (``Relapse.hs:65-70``).
 
-Batch amortization (two levels, both per Arrow batch):
-- :func:`factorized_map` validates each DISTINCT document once and
-  gathers (validation is pure; duplicated corpora collapse to their
-  value cardinality);
-- JSON decode goes through ``labels._loads`` (orjson when present,
-  stdlib-fallback for >64-bit ints), so the remaining per-unique-doc
-  loop does no stdlib parsing on the hot path.
+One engine for every encoding: JSON, XML and protobuf columns all run the
+int-table VPA (:class:`~.vpa.TableValidator`) from one executor cache.
+Its tables key on condition bitmasks, never on an encoding, so one spec
+shares one automaton across all three.  Per Arrow batch:
+
+- labels are interned once per distinct value and their condition masks
+  evaluated in numpy lanes;
+- documents factorize by (structure, symbol) signature, so each distinct
+  walk runs once;
+- JSON text flattens straight into the event buffer (``labels._loads``:
+  orjson when present, stdlib fallback for >64-bit ints); XML and
+  protobuf decode to forests first (:meth:`~.vpa.TableValidator.
+  validate_forests`).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Callable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .derive import Validator
-from .labels import decode_json
 from .parser import parse_grammar
 from .smart import compile_grammar
-from .vpa import try_table_validator
+from .vpa import TableValidator
 
-# per-process (executor) cache: spec source → Validator with warm memo tables
-_VALIDATORS: dict = {}
-
-# per-process cache: spec source → TableValidator (int-table VPA with
-# vectorized condition evaluation — the unique-doc fast path) or False
-# when the grammar's shape needs the per-doc Validator
-_TABLE_VALIDATORS: dict = {}
-
-
-def factorized_map(docs: pd.Series, one: Callable[[str], bool]) -> pd.Series:
-    """Evaluate ``one`` once per DISTINCT value in the Arrow batch, gather.
-
-    Validation is a pure function of the document text, so identical
-    documents share one decode+validate.  Event/web corpora are heavily
-    duplicated (the sf0.1 events fixture: 100 distinct props in 100k
-    rows → 1000× fewer validator calls); an all-unique batch pays one
-    O(n) hash pass (milliseconds) on top of the unavoidable per-doc work.
-    NULLs (factorize sentinel -1) → False, matching the row semantics.
-    """
-    codes, uniques = pd.factorize(docs)
-    n = len(docs)
-    if len(uniques) == 0:
-        return pd.Series(np.zeros(n, dtype=bool))
-    vals = np.fromiter((one(u) for u in uniques), dtype=bool,
-                       count=len(uniques))
-    out = np.where(codes >= 0, vals[np.where(codes >= 0, codes, 0)], False)
-    return pd.Series(out)
+# per-process (executor) cache: (spec source, user-lib key) → int-table
+# VPA with warm tables, shared by the JSON, XML and protobuf columns
+_TABLES: dict = {}
 
 
 def _lib_cache_key(user_lib):
@@ -97,28 +76,14 @@ def _lib_cache_key(user_lib):
     return tuple(parts)
 
 
-def _validator_for(source: str, user_lib=None) -> Validator:
+def table_validator_for(source: str, user_lib=None) -> TableValidator:
+    """The executor's cached VPA for a spec source (and user library)."""
     key = (source, _lib_cache_key(user_lib))
-    v = _VALIDATORS.get(key)
-    if v is None:
-        v = Validator(compile_grammar(parse_grammar(source, user_lib)))
-        _VALIDATORS[key] = v
-    return v
-
-
-def _table_validator_for(source: str, user_lib=None):
-    import os
-    if os.environ.get("SPARK_GRAFT_NO_VPA") == "1":
-        # operational escape hatch + A/B lever for the bench: force the
-        # per-doc Validator path
-        return None
-    key = (source, _lib_cache_key(user_lib))
-    tv = _TABLE_VALIDATORS.get(key)
+    tv = _TABLES.get(key)
     if tv is None:
-        tv = try_table_validator(
-            compile_grammar(parse_grammar(source, user_lib))) or False
-        _TABLE_VALIDATORS[key] = tv
-    return tv or None
+        tv = TableValidator(compile_grammar(parse_grammar(source, user_lib)))
+        _TABLES[key] = tv
+    return tv
 
 
 def json_matches_udf(spec_source: str, user_lib=None) -> Callable[[Column], Column]:
@@ -132,26 +97,9 @@ def json_matches_udf(spec_source: str, user_lib=None) -> Callable[[Column], Colu
 
     @pandas_udf("boolean")
     def match(docs: pd.Series) -> pd.Series:
-        tv = _table_validator_for(spec_source, user_lib)
-        if tv is not None:
-            # int-table VPA: vectorized condition eval over distinct
-            # labels + signature-factorized walks (vpa.py) — the
-            # unique-doc fast path.  No demotion catch: VpaUnsupported
-            # was retired (round-6 soak, scripts/vpa_soak.py) — a batch
-            # failure here is a bug and must propagate.
-            return pd.Series(tv.validate_batch(docs.tolist()))
-        v = _validator_for(spec_source, user_lib)
-
-        def one(doc: Optional[str]) -> bool:
-            if doc is None:
-                return False
-            try:
-                forest = decode_json(doc)  # orjson-backed batch decode
-            except Exception:
-                return False
-            return v.validate(forest)
-
-        return factorized_map(docs, one)
+        # no demotion catch: a batch failure is a bug and must propagate
+        tv = table_validator_for(spec_source, user_lib)
+        return pd.Series(tv.validate_batch(docs.tolist()))
 
     return match
 

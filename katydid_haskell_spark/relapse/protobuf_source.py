@@ -276,32 +276,31 @@ def decode_protobuf(desc: DescMap, msg_name: str, data: bytes) -> tuple:
 def validate_protobuf_column(col, spec_source: str, desc: DescMap,
                              msg_name: str):
     """Boolean Column: protobuf-encoded binary column matches the Relapse
-    spec (decode → forest → memoized derivative validator, Arrow-batched;
-    same contract as xml_source.validate_xml_column — undecodable or null
-    payloads are False, never errors)."""
+    spec.  Each Arrow batch decodes to forests and runs the same cached
+    int-table VPA as the JSON and XML columns
+    (:func:`~.automaton.table_validator_for`); null payloads and
+    :class:`ProtoError` payloads are False, never errors."""
     from pyspark.sql.functions import pandas_udf
 
-    from .derive import Validator
+    from .automaton import table_validator_for
     from .parser import parse_grammar
     from .smart import compile_grammar
 
     compile_grammar(parse_grammar(spec_source))  # fail fast on driver
 
+    def forest_or_none(raw):
+        if raw is None:
+            return None
+        try:
+            return decode_protobuf(desc, msg_name, bytes(raw))
+        except ProtoError:
+            return None
+
     @pandas_udf("boolean")
     def match(payloads: pd.Series) -> pd.Series:
-        v = Validator(compile_grammar(parse_grammar(spec_source)))
-
-        def one(raw):
-            if raw is None:
-                return False
-            try:
-                forest = decode_protobuf(desc, msg_name, bytes(raw))
-            except ProtoError:
-                return False
-            return v.validate(forest)
-
-        from .automaton import factorized_map
-        return factorized_map(payloads, one)
+        forests = [forest_or_none(r) for r in payloads.tolist()]
+        tv = table_validator_for(spec_source)
+        return pd.Series(tv.validate_forests(forests))
 
     return match(col)
 

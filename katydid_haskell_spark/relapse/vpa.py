@@ -30,8 +30,13 @@ per-label step a vectorized batch operation:
 3. **Documents collapse by signature.**  A document's walk depends only on
    its event structure + per-node symbol sequence, so an Arrow batch is
    factorized by that signature and each distinct signature is walked ONCE
-   — the generalization of ``factorized_map``'s exact-text dedup: corpora
-   with all-unique text but shared shape validate in O(distinct shapes).
+   — corpora with all-unique text but shared shape validate in
+   O(distinct shapes).
+
+Two front ends feed the same event buffer: :meth:`TableValidator.
+validate_batch` flattens JSON text directly (the hot path: no forest is
+ever built), :meth:`TableValidator.validate_forests` flattens any decoded
+forest (XML, protobuf) with its labels exactly as the decoder typed them.
 
 Fallback: user libs whose conditions the vectorizer cannot batch run the
 scalar per-distinct-label fallback inside the table path.  There is no
@@ -427,16 +432,14 @@ class CondBatch:
 
 
 # ---------------------------------------------------------------------------
-# document flattening: JSON → event stream
+# document flattening: JSON text or decoded forest → event stream
 # ---------------------------------------------------------------------------
 #
 # One int32 list per document: a CALL is the distinct-label index (>= 0), a
 # RETURN is -1 — the bracket structure fully determines the tree shape.
 # Labels are interned through PER-TYPE dicts keyed on the raw Python value
-# (no Label tuple construction on the hot path; separate dicts also keep
-# bool True distinct from int 1).  Semantics of ``json_value_to_forest`` /
-# ``Json.hs:39-58``: field → String node, array element → Int index node,
-# integral number → Int, ``null`` → NO node.
+# (no Label tuple construction on the JSON hot path; separate dicts also
+# keep bool True distinct from int 1, and Int 1 distinct from Uint 1).
 
 RET_EV = -1
 
@@ -445,23 +448,58 @@ class _LabelIntern:
     """Per-type value→index intern maps plus the distinct-label arrays the
     condition evaluator consumes."""
 
-    __slots__ = ("strs", "ints", "bools", "dbls", "tys", "vals")
+    __slots__ = ("strs", "ints", "uints", "bools", "dbls", "bytes", "tys",
+                 "vals")
 
     def __init__(self):
         self.strs: Dict[str, int] = {}
         self.ints: Dict[int, int] = {}
+        self.uints: Dict[int, int] = {}
         self.bools: Dict[bool, int] = {}
-        self.dbls: Dict[float, int] = {}
+        self.dbls: Dict[object, int] = {}
+        self.bytes: Dict[bytes, int] = {}
         self.tys: List[int] = []    # _TY_CODE per distinct label
         self.vals: List[object] = []
+
+    def by_type(self) -> Dict[str, Tuple[dict, int]]:
+        """Label type → (its intern map, its type code)."""
+        return {BOOL: (self.bools, 0), INT: (self.ints, 1),
+                UINT: (self.uints, 2), DOUBLE: (self.dbls, 3),
+                STRING: (self.strs, 4), BYTES: (self.bytes, 5)}
 
     def labels(self) -> List[Label]:
         rev = {v: k for k, v in _TY_CODE.items()}
         return [Label(rev[t], v) for t, v in zip(self.tys, self.vals)]
 
 
+def _flatten_forest(forest, ev: list, it: _LabelIntern, maps) -> None:
+    """Flatten a decoded forest into the event list ``ev``, interning each
+    ``(label.ty, label.value)`` exactly as given (``maps`` is
+    ``it.by_type()``).  No JSON coercion: an integral Double stays a
+    Double.  Zero doubles intern by sign, so ``-0.0`` and ``0.0`` stay
+    distinct labels as they are to a user function."""
+    tys, vals = it.tys, it.vals
+    for t in forest:
+        ty, v = t.label
+        ids, code = maps[ty]
+        key = (v, _math.copysign(1.0, v)) if code == 3 and v == 0 else v
+        li = ids.get(key)
+        if li is None:
+            li = len(tys)
+            ids[key] = li
+            tys.append(code)
+            vals.append(v)
+        ev.append(li)
+        if t.children:
+            _flatten_forest(t.children, ev, it, maps)
+        ev.append(RET_EV)
+
+
 def _flatten_json(v, ev: list, it: _LabelIntern) -> None:
-    """Flatten a parsed JSON value into the event list ``ev``.
+    """Flatten a parsed JSON value into the event list ``ev``, with the
+    semantics of ``json_value_to_forest`` / ``Json.hs:39-58``: field →
+    String node, array element → Int index node, integral number → Int,
+    ``null`` → NO node.
 
     The two overwhelmingly common leaf types under a field (str, int)
     are interned INLINE in the dict/list loops — on web-doc shapes the
@@ -729,16 +767,15 @@ class TableValidator:
     def validate_batch(self, docs) -> np.ndarray:
         """Verdicts for an iterable of JSON document strings (None /
         malformed → False), factorized by walk signature."""
-        n = len(docs)
-        out = np.zeros(n, dtype=bool)
         it = _LabelIntern()
         loads = _loads
         # ONE growing event buffer + (doc, start, end) spans: the label
-        # gather below is a single fancy-index over the whole batch
-        # instead of one small gather per document (round-6 hot-loop fix)
+        # gather in :meth:`_verdicts` is a single fancy-index over the
+        # whole batch instead of one small gather per document (round-6
+        # hot-loop fix)
         buf: list = []
         spans = []
-        for di in range(n):
+        for di in range(len(docs)):
             s = docs[di]
             if s is None:
                 continue
@@ -753,6 +790,31 @@ class TableValidator:
                 del buf[start:]
                 continue
             spans.append((di, start, len(buf)))
+        return self._verdicts(len(docs), it, buf, spans)
+
+    def validate_forests(self, forests) -> np.ndarray:
+        """Verdicts for a sequence of decoded forests (``None`` =
+        undecodable → False), factorized by walk signature.  The front end
+        for every encoding that decodes to :class:`~.labels.TreeNode`
+        forests (XML, protobuf)."""
+        it = _LabelIntern()
+        maps = it.by_type()
+        buf: list = []
+        spans = []
+        for di, forest in enumerate(forests):
+            if forest is None:
+                continue
+            start = len(buf)
+            _flatten_forest(forest, buf, it, maps)
+            spans.append((di, start, len(buf)))
+        return self._verdicts(len(forests), it, buf, spans)
+
+    def _verdicts(self, n: int, it: _LabelIntern, buf: list,
+                  spans: list) -> np.ndarray:
+        """Label masks → one gathered signature array → one walk per
+        distinct signature.  ``spans`` holds ``(doc, start, end)`` slices
+        of the event buffer ``buf``; documents without a span are False."""
+        out = np.zeros(n, dtype=bool)
         if not spans:
             return out
         all_ev = np.asarray(buf, dtype=np.int32)
@@ -790,17 +852,3 @@ class TableValidator:
                 return out
             except _CondsChanged:
                 continue
-
-
-def try_table_validator(g: SGrammar) -> Optional[TableValidator]:
-    """A TableValidator for the grammar.
-
-    Historically returned None for shapes the tables couldn't express
-    (``VpaUnsupported``); that class was retired in round 6 after a
-    10k-case soak (``scripts/vpa_soak.py``, seeds 99+7: 6000+4000
-    random AST / wide / recursive grammars, zero construction or batch
-    failures, 250 full engine cross-checks) — construction now always
-    succeeds, and a genuine future failure should propagate as the bug
-    it is rather than silently demote to the 100x-slower per-doc path.
-    The Optional signature is kept for the callers' None-checks."""
-    return TableValidator(g)

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 
-from .derive import Validator
+from .automaton import table_validator_for
 from .labels import INT, STRING, Label, node
 from .parser import parse_grammar
 from .smart import compile_grammar
@@ -66,36 +66,32 @@ def decode_xml(s: str, attrs: bool = True) -> tuple:
     return _elem_to_node(ET.fromstring(s), attrs)
 
 
-_VALIDATORS: dict = {}
+def _forest_or_none(doc: Optional[str], attrs: bool):
+    """The column's decode contract: null or unparseable XML → None."""
+    if doc is None:
+        return None
+    try:
+        return decode_xml(doc, attrs=attrs)
+    except Exception:
+        return None
 
 
 def validate_xml_column(col: Column, spec_source: str,
                         attrs: bool = True) -> Column:
-    """Boolean Column: XML document column matches the Relapse spec
-    (automaton path, Arrow-batched).
+    """Boolean Column: XML document column matches the Relapse spec.
+
+    Each Arrow batch decodes to forests and runs the same cached int-table
+    VPA as the JSON column (:func:`~.automaton.table_validator_for`);
+    null or malformed documents are False, never errors.
 
     ``attrs=True`` (default) decodes attributes as leading child nodes;
     ``attrs=False`` restores reference parity (Xml.hs:40 drops them)."""
     compile_grammar(parse_grammar(spec_source))  # fail fast on driver
-    cache_key = (spec_source, attrs)
 
     @pandas_udf("boolean")
     def match(docs: pd.Series) -> pd.Series:
-        v = _VALIDATORS.get(cache_key)
-        if v is None:
-            v = Validator(compile_grammar(parse_grammar(spec_source)))
-            _VALIDATORS[cache_key] = v
-
-        def one(doc):
-            if doc is None:
-                return False
-            try:
-                forest = decode_xml(doc, attrs=attrs)
-            except Exception:
-                return False
-            return v.validate(forest)
-
-        from .automaton import factorized_map
-        return factorized_map(docs, one)
+        forests = [_forest_or_none(d, attrs) for d in docs.tolist()]
+        tv = table_validator_for(spec_source)
+        return pd.Series(tv.validate_forests(forests))
 
     return match(col)

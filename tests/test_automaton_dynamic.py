@@ -74,28 +74,6 @@ def test_interleave_order_insensitivity():
     assert not v.validate(decode_json('{"p": {"a": 1, "b": 2, "c": 3}}'))
 
 
-def test_factorized_map_semantics():
-    """Batch vectorization: one decode+validate per DISTINCT doc, NULLs and
-    malformed docs False, duplicates gathered from the unique result."""
-    import pandas as pd
-
-    from katydid_haskell_spark.relapse.automaton import factorized_map
-
-    calls = []
-
-    def one(d):
-        calls.append(d)
-        return d == "hit"
-
-    s = pd.Series(["hit", None, "miss", "hit", "hit", None])
-    assert list(factorized_map(s, one)) == [True, False, False, True, True,
-                                            False]
-    assert calls == ["hit", "miss"]  # distinct non-null values only
-    assert list(factorized_map(pd.Series([None, None]), one)) == [False,
-                                                                  False]
-    assert list(factorized_map(pd.Series([], dtype=object), one)) == []
-
-
 def test_decode_json_bigint_fallback():
     """orjson rejects >64-bit integers; decode_json must fall back to
     stdlib (the reference's Aeson JSRational is arbitrary-precision)."""
@@ -108,8 +86,8 @@ def test_decode_json_bigint_fallback():
 
 
 def test_udf_duplicated_docs_match_engine(spark):
-    """The factorized UDF path must agree with the pure engine on a column
-    dominated by duplicate documents (the shape the vectorization targets)."""
+    """The VPA UDF must agree with the pure engine on a column dominated
+    by duplicate documents, nulls and malformed JSON."""
     docs = (['{"k": 60}'] * 5 + ['{"k": 10}'] * 4 + [None, "not json"]) * 3
     g = compile_grammar(parse_grammar(".k >= 50"))
     v = Validator(g)

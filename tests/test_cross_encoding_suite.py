@@ -19,11 +19,12 @@ encoding round-trips to the identical forest:
 - no arrays (XML has no Int-labeled index nodes — its Int labels only
   arise from text leaves).
 
-Engines exercised per case:
-- JSON: pure derivative engine + table-VPA (+ the Spark automaton UDF in
-  the Spark test);
-- XML:  pure derivative engine over decode_xml (+ validate_xml_column);
-- PB:   pure derivative engine over decode_protobuf
+Engines exercised per case — the pure derivative engine and the
+table-VPA, over every encoding:
+- JSON: ``validate_batch`` on the text (+ the Spark automaton UDF in the
+  Spark test);
+- XML:  ``validate_forests`` over decode_xml (+ validate_xml_column);
+- PB:   ``validate_forests`` over decode_protobuf
   (+ validate_protobuf_column).
 """
 
@@ -36,7 +37,7 @@ from katydid_haskell_spark.relapse.derive import Validator
 from katydid_haskell_spark.relapse.labels import decode_json
 from katydid_haskell_spark.relapse.parser import parse_grammar
 from katydid_haskell_spark.relapse.smart import compile_grammar
-from katydid_haskell_spark.relapse.vpa import try_table_validator
+from katydid_haskell_spark.relapse.vpa import TableValidator
 from katydid_haskell_spark.relapse.xml_source import decode_xml
 
 
@@ -280,12 +281,15 @@ def _verdicts(spec: str, tree: dict) -> dict:
     out = {}
     js = to_json(tree)
     out["json/derive"] = v.validate(decode_json(js))
-    tv = try_table_validator(g)
-    assert tv is not None, spec
+    tv = TableValidator(g)
     out["json/vpa"] = bool(tv.validate_batch([js])[0])
-    out["xml/derive"] = v.validate(decode_xml(to_xml(tree)))
+    xf = decode_xml(to_xml(tree))
+    out["xml/derive"] = v.validate(xf)
+    out["xml/vpa"] = bool(tv.validate_forests([xf])[0])
     desc, root, payload = to_protobuf(tree)
-    out["pb/derive"] = v.validate(pb.decode_protobuf(desc, root, payload))
+    pf = pb.decode_protobuf(desc, root, payload)
+    out["pb/derive"] = v.validate(pf)
+    out["pb/vpa"] = bool(tv.validate_forests([pf])[0])
     return out
 
 

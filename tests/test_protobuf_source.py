@@ -24,6 +24,7 @@ from katydid_haskell_spark.relapse.protobuf_source import (
     encode_string,
     encode_varint,
 )
+from katydid_haskell_spark.relapse.vpa import TableValidator
 
 DESC: DescMap = {
     "Person": {
@@ -36,6 +37,16 @@ DESC: DescMap = {
     },
     "Address": {1: Field("street", "string"), 2: Field("zip", "uint64")},
 }
+
+
+def verdict(spec, forest):
+    """The reference engine's verdict, asserted equal to the table VPA's
+    (the engine every Spark protobuf column runs)."""
+    g = parse(spec)
+    want = validate(g, forest)
+    vpa = TableValidator(g.sgrammar).validate_forests([forest, None])
+    assert list(vpa) == [want, False], spec
+    return want
 
 
 def person_bytes():
@@ -97,6 +108,8 @@ def test_negative_int_and_zigzag():
     f = decode_protobuf(desc, "M", data)
     assert f[0] == node(Label(STRING, "a"), (node(Label(INT, -5)),))
     assert f[1] == node(Label(STRING, "b"), (node(Label(INT, -3)),))
+    assert verdict('(.a == -5 & .b == -3)', f)
+    assert not verdict('.b: >= 0', f)
 
 
 def test_truncated_errors():
@@ -155,8 +168,9 @@ def test_packed_repeated_scalars_match_unpacked():
         )),
     )
     # and the forest validates through the Relapse engine
-    g = parse('.xs: .1 == 270')
-    assert validate(g, fp)
+    assert verdict('.xs: .1 == 270', fp)
+    assert verdict('(.ds: ._ == double(-1.25) & .ss: ._ == -1)', fp)
+    assert not verdict('.xs: .0 == 270', fp)
 
 
 def test_packed_mixed_with_unpacked_runs():
@@ -217,12 +231,12 @@ def test_repeated_message_groups_validate():
         + encode_message_field(1, encode_string(1, "b"))
     )
     f = decode_protobuf(desc, "Doc", payload)
-    g = parse('entry: (_: {k: -> type($string); (vs: (_: >= 0)*)?})*')
-    assert validate(g, f)
+    spec = 'entry: (_: {k: -> type($string); (vs: (_: >= 0)*)?})*'
+    assert verdict(spec, f)
     # order: ordered concat over the repeated group's indexed elements
-    assert validate(parse('entry: [_: .k == "a", _: .k == "b"]'), f)
-    assert not validate(parse('entry: [_: .k == "b", _: .k == "a"]'), f)
+    assert verdict('entry: [_: .k == "a", _: .k == "b"]', f)
+    assert not verdict('entry: [_: .k == "b", _: .k == "a"]', f)
     # a negative value deep inside the third occurrence flips the verdict
     bad = payload + encode_message_field(
         1, encode_string(1, "c") + encode_int64(2, -5))
-    assert not validate(g, decode_protobuf(desc, "Doc", bad))
+    assert not verdict(spec, decode_protobuf(desc, "Doc", bad))

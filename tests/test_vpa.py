@@ -27,7 +27,6 @@ from katydid_haskell_spark.relapse.vpa import (
     CondBatch,
     TableValidator,
     collect_conds,
-    try_table_validator,
 )
 
 CORPUS = os.path.join(os.path.dirname(__file__), "corpus")
@@ -53,8 +52,7 @@ def test_vpa_matches_engine_on_corpus(name):
     with open(os.path.join(d, "rows.jsonl")) as f:
         docs = [line.strip() for line in f if line.strip()]
     g = compile_grammar(parse_grammar(spec))
-    tv = try_table_validator(g)
-    assert tv is not None, f"{name}: corpus grammar must be table-walkable"
+    tv = TableValidator(g)
     v = Validator(g)
     want = [_engine_verdict(v, doc) for doc in docs]
     got = list(tv.validate_batch(docs))
@@ -101,8 +99,7 @@ def test_vpa_fuzz_matches_engine():
              '[1, 2.5, "x"]', '{"k": 2e400}']
     for spec in FUZZ_SPECS:
         g = compile_grammar(parse_grammar(spec))
-        tv = try_table_validator(g)
-        assert tv is not None, spec
+        tv = TableValidator(g)
         v = Validator(g)
         want = [_engine_verdict(v, doc) for doc in docs]
         got = list(tv.validate_batch(docs))
@@ -138,8 +135,7 @@ def test_vpa_many_conditions_stays_on_table_path():
     multi-word masks keep the table path engaged (round 5)."""
     spec = "(" + " | ".join(f'.f{i} == {i}' for i in range(70)) + ")"
     g = compile_grammar(parse_grammar(spec))
-    tv = try_table_validator(g)
-    assert tv is not None
+    tv = TableValidator(g)
     v = Validator(g)
     docs = [json.dumps({"f64": 64}), json.dumps({"f64": 63}),
             json.dumps({"f0": 0}), json.dumps({})]
@@ -214,8 +210,7 @@ def test_vpa_minted_condition_restart():
     the engine (found by the dynamic-shape fuzz in round 4)."""
     spec = '.tags: {_: == "x"; (_: == "t1")?; _: ^= "x"}'
     g = compile_grammar(parse_grammar(spec))
-    tv = try_table_validator(g)
-    assert tv is not None
+    tv = TableValidator(g)
     n0 = len(tv.conds)
     docs = [json.dumps({"tags": t}) for t in (
         ["x", "xy"], ["xy", "x"], ["x", "t1", "xy"], ["x"],
@@ -236,8 +231,7 @@ def test_vpa_deep_vertical_recursion():
     must agree with the engine, including a violation planted mid-chain."""
     spec = "#main = .node: @chain\n#chain = {v: >= 0; (next: (@chain)?)?}"
     g = compile_grammar(parse_grammar(spec))
-    tv = try_table_validator(g)
-    assert tv is not None
+    tv = TableValidator(g)
     v = Validator(g)
 
     def _n(depth, bad_at=None):
@@ -267,8 +261,7 @@ def test_vpa_multiword_masks_over_63_conditions():
     g = compile_grammar(parse_grammar(spec))
     conds = collect_conds(g)
     assert len(conds) > 63, len(conds)
-    tv = try_table_validator(g)
-    assert tv is not None, "wide grammars must stay on the table path"
+    tv = TableValidator(g)
     v = Validator(g)
     docs = (
         [json.dumps({f"a{i}": i}) for i in range(0, 100, 7)]    # matches
@@ -303,9 +296,36 @@ def test_grammar_compile_budget_200_rules():
     for _ in range(3):
         t0 = time.perf_counter()
         g = compile_grammar(parse_grammar(spec))
-        tv = try_table_validator(g)
-        assert tv is not None
+        tv = TableValidator(g)
         verdicts = list(tv.validate_batch(docs))
         best = min(best, time.perf_counter() - t0)
         assert all(verdicts)
     assert best < 10.0, f"200-rule compile+first-batch best-of-3 {best:.2f}s"
+
+
+def test_vpa_forests_keep_zero_sign_apart():
+    """``validate_forests`` interns labels exactly as decoded: ``-0.0``
+    and ``0.0`` compare equal (and share a dict slot), but a user function
+    can tell them apart, so they must stay distinct labels."""
+    import math
+
+    from katydid_haskell_spark.relapse.exprs import RelapseError, simple_udf
+    from katydid_haskell_spark.relapse.labels import node
+
+    signbit = simple_udf("signbit", (DOUBLE,), BOOL,
+                         lambda x: math.copysign(1.0, x) < 0)
+
+    def user_lib(name, args):
+        if name == "signbit":
+            return signbit(args)
+        raise RelapseError(f"undefined function: {name}")
+
+    g = compile_grammar(parse_grammar(".x: -> signbit($double)", user_lib))
+    forests = [
+        (node(Label(STRING, "x"), (node(Label(DOUBLE, z)),)),)
+        for z in (0.0, -0.0, -0.0, 0.0)
+    ]
+    v = Validator(g)
+    want = [v.validate(f) for f in forests]
+    assert want == [False, True, True, False]
+    assert list(TableValidator(g).validate_forests(forests)) == want
