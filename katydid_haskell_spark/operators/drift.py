@@ -3,8 +3,9 @@
 
 The heavy pass is one ``groupBy(bucket).count()`` per metric (partial+final
 hash agg).  The resulting histogram is tiny (hundreds of buckets), so the
-baseline comparison is a broadcast full-outer join + Column arithmetic —
-no second scan, no driver-side math.
+baseline comparison is a full-outer join of two tiny histograms (a sort-merge
+join: Spark cannot broadcast either side of a full outer join) + Column
+arithmetic — no second scan, no driver-side math.
 
 PSI = Σ (p_i − q_i) · ln(p_i / q_i)   (current p vs baseline q)
 KL  = Σ p_i · ln(p_i / q_i)
@@ -38,11 +39,11 @@ def divergences(current: DataFrame, baseline: DataFrame,
                 eps: float = 1e-6) -> DataFrame:
     """One row: psi, kl, n_current, n_baseline.
 
-    Both inputs are (bucket, cnt) histograms; baseline is broadcast.
+    Both inputs are (bucket, cnt) histograms.
     """
     cur = current.select("bucket", F.col("cnt").alias("cnt_p"))
     base = baseline.select("bucket", F.col("cnt").alias("cnt_q"))
-    joined = cur.join(F.broadcast(base), "bucket", "full_outer").select(
+    joined = cur.join(base, "bucket", "full_outer").select(
         F.coalesce("cnt_p", F.lit(0)).alias("cnt_p"),
         F.coalesce("cnt_q", F.lit(0)).alias("cnt_q"),
     )

@@ -9,7 +9,7 @@ constraint classes compile on the driver into a plan of
     explode from the same pass;
   - **table rules** — stats (one fused agg), uniqueness (key shuffle),
     referential integrity (broadcast anti-join), drift (histogram + tiny
-    broadcast join).
+    full-outer join).
 
 Sinks (FIXTURES.md §6):
   violations: url string, rule_id string, detail string
@@ -189,9 +189,7 @@ def run_table_rules(df: DataFrame, plan: CheckPlan,
     if plan.stat_rules:
         verdict_frames.append(stats_ops.run_stat_rules(df, plan.stat_rules))
     for r in plan.unique_rules:
-        # persist the (small) duplicate-key aggregate: the verdict rollup
-        # and the violations listing both consume it — one shuffle, not two
-        dups = uniq_ops.duplicate_keys(df, [r.key]).persist()
+        dups = uniq_ops.duplicate_keys(df, [r.key])
         verdict_frames.append(
             dups.agg(
                 F.count(F.lit(1)).alias("dup_keys"),
@@ -216,7 +214,7 @@ def run_table_rules(df: DataFrame, plan: CheckPlan,
         )
     for r in plan.ref_rules:
         dim = dims[r.dim_name]
-        orphans = ref_ops.orphan_rows(df, r.fk, dim, r.dim_key).persist()
+        orphans = ref_ops.orphan_rows(df, r.fk, dim, r.dim_key)
         verdict_frames.append(
             orphans.agg(F.count(F.lit(1)).alias("orphans")).select(
                 F.lit(r.rule_id).alias("rule_id"),
@@ -403,7 +401,7 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
             exact_rules.append((i, r))
         else:
             raise ValueError(f"unknown stat metric: {r.metric}")
-    rolled = checked.groupBy("__bucket").agg(*aggs).persist()
+    rolled = checked.groupBy("__bucket").agg(*aggs)
 
     verdict_structs = [
         F.struct(
@@ -542,7 +540,6 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
             .groupingSets([[n] for n in names], *[F.col(n) for n in names])
             .agg(F.count(F.lit(1)).alias("cnt"),
                  F.grouping_id().alias("__gid"))
-            .persist()
         )
         n_drift = len(plan.drift_rules)
         for i, r in enumerate(plan.drift_rules):
@@ -566,9 +563,9 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
     violation_frames: List[DataFrame] = []
     for r in plan.unique_rules:
         if skew is not None:
-            dups = _salted_duplicate_keys(df, r.key, skew).persist()
+            dups = _salted_duplicate_keys(df, r.key, skew)
         else:
-            dups = uniq_ops.duplicate_keys(df, [r.key]).persist()
+            dups = uniq_ops.duplicate_keys(df, [r.key])
         verdict_frames.append(
             dups.agg(F.count(F.lit(1)).alias("dup_keys")).select(
                 F.lit(TABLE_SCOPE_BUCKET).alias("bucket_id"),

@@ -23,10 +23,11 @@ shares one automaton across all three.  Per Arrow batch:
   evaluated in numpy lanes;
 - documents factorize by (structure, symbol) signature, so each distinct
   walk runs once;
-- JSON text flattens straight into the event buffer (``labels._loads``:
-  orjson when present, stdlib fallback for >64-bit ints); XML and
-  protobuf decode to forests first (:meth:`~.vpa.TableValidator.
-  validate_forests`).
+- every encoding decodes straight into the event buffer, with no forest
+  built: JSON text through ``labels._loads`` (orjson when present, stdlib
+  fallback for >64-bit ints) and the inline flattener, XML and protobuf
+  through their one event decoder each (``xml_source.xml_verdicts``,
+  ``protobuf_source.protobuf_verdicts``).
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Protobuf wire-format → labeled forest (descriptor-driven).
+"""Protobuf wire-format → tree events (descriptor-driven).
 
 Behavioral parity with the reference's decoder
 (``/root/reference/src/Data/Katydid/Parser/Protobuf/Protobuf.hs:165-293``):
@@ -17,6 +17,11 @@ Behavioral parity with the reference's decoder
   Protobuf.hs:280; the resulting tree shape is identical to the unpacked
   encoding of the same values;
 - ``group`` wire type unsupported.
+
+One decoder, :func:`_message_events`, appends CALL label ids and returns
+straight into the VPA's event buffer, grouping repeated runs as it goes.
+The column runs those events through :class:`~.vpa.TableValidator`;
+:func:`decode_protobuf` rebuilds the forest from the same events.
 
 No protobuf library needed: the wire format (varint / fixed32 / fixed64 /
 length-delimited) is decoded directly.  The descriptor is a plain dict
@@ -39,9 +44,22 @@ import struct
 from dataclasses import dataclass
 from typing import Dict, Optional, Tuple
 
+import numpy as np
 import pandas as pd
 
-from .labels import BOOL, BYTES, DOUBLE, INT, STRING, UINT, Label, TreeNode, node
+from .vpa import (
+    C_BOOL,
+    C_BYTES,
+    C_DOUBLE,
+    C_INT,
+    C_STRING,
+    C_UINT,
+    RET_EV,
+    TableValidator,
+    _LabelIntern,
+    batch_events,
+    events_to_forest,
+)
 
 
 class ProtoError(Exception):
@@ -94,76 +112,85 @@ _VARINT_TYPES = ("int32", "int64", "uint32", "uint64", "sint32", "sint64",
                  "bool", "enum")
 _FIXED32_TYPES = ("float", "fixed32", "sfixed32")
 _FIXED64_TYPES = ("double", "fixed64", "sfixed64")
+_PACKABLE = _VARINT_TYPES + _FIXED32_TYPES + _FIXED64_TYPES
 
 
-def _fixed32_label(ftype: str, raw: bytes) -> Label:
+def _fixed32_label(ftype: str, raw: bytes) -> Tuple[int, object]:
     if ftype == "float":
-        return Label(DOUBLE, struct.unpack("<f", raw)[0])
+        return C_DOUBLE, struct.unpack("<f", raw)[0]
     if ftype == "fixed32":
-        return Label(UINT, struct.unpack("<I", raw)[0])
+        return C_UINT, struct.unpack("<I", raw)[0]
     if ftype == "sfixed32":
-        return Label(INT, struct.unpack("<i", raw)[0])
+        return C_INT, struct.unpack("<i", raw)[0]
     raise ProtoError(f"{ftype} cannot use fixed32 wire")
 
 
-def _fixed64_label(ftype: str, raw: bytes) -> Label:
+def _fixed64_label(ftype: str, raw: bytes) -> Tuple[int, object]:
     if ftype == "double":
-        return Label(DOUBLE, struct.unpack("<d", raw)[0])
+        return C_DOUBLE, struct.unpack("<d", raw)[0]
     if ftype == "fixed64":
-        return Label(UINT, struct.unpack("<Q", raw)[0])
+        return C_UINT, struct.unpack("<Q", raw)[0]
     if ftype == "sfixed64":
-        return Label(INT, struct.unpack("<q", raw)[0])
+        return C_INT, struct.unpack("<q", raw)[0]
     raise ProtoError(f"{ftype} cannot use fixed64 wire")
 
 
-def _decode_packed(field: Field, raw: bytes) -> list:
+def _packed_labels(field: Field, raw: bytes) -> list:
     """Packed repeated scalars (proto3 packs by default).
 
     The reference punts on these (Protobuf.hs:280 TODO); we decode them —
     any real proto3 corpus hits packed encoding immediately.  Each value
-    becomes one occurrence, so adjacent-run grouping in decode_message
-    produces the same index-labeled tree shape as the unpacked encoding.
+    becomes one occurrence, so adjacent-run grouping produces the same
+    index-labeled tree shape as the unpacked encoding.
     """
-    vals = []
-    if field.type in _VARINT_TYPES:
+    ftype = field.type
+    if ftype in _VARINT_TYPES:
+        out = []
         pos = 0
         while pos < len(raw):
             v, pos = _read_varint(raw, pos)
-            vals.append((node(_varint_label(field.type, v)),))
-    elif field.type in _FIXED32_TYPES:
+            out.append(_varint_label(ftype, v))
+        return out
+    if ftype in _FIXED32_TYPES:
         if len(raw) % 4:
             raise ProtoError("packed fixed32 run not a multiple of 4 bytes")
-        for i in range(0, len(raw), 4):
-            vals.append((node(_fixed32_label(field.type, raw[i:i + 4])),))
-    elif field.type in _FIXED64_TYPES:
-        if len(raw) % 8:
-            raise ProtoError("packed fixed64 run not a multiple of 8 bytes")
-        for i in range(0, len(raw), 8):
-            vals.append((node(_fixed64_label(field.type, raw[i:i + 8])),))
-    else:
-        raise ProtoError(f"{field.type} is not packable")
-    return vals
+        return [_fixed32_label(ftype, raw[i:i + 4])
+                for i in range(0, len(raw), 4)]
+    if len(raw) % 8:
+        raise ProtoError("packed fixed64 run not a multiple of 8 bytes")
+    return [_fixed64_label(ftype, raw[i:i + 8])
+            for i in range(0, len(raw), 8)]
 
 
-def _varint_label(ftype: str, v: int) -> Label:
+def _varint_label(ftype: str, v: int) -> Tuple[int, object]:
     if ftype in ("int64", "int32"):
-        return Label(INT, _signed(v, 64))
-    if ftype in ("uint64", "uint32"):
-        return Label(UINT, v)
-    if ftype == "enum":
-        return Label(UINT, v)
+        return C_INT, _signed(v, 64)
+    if ftype in ("uint64", "uint32", "enum"):
+        return C_UINT, v
     if ftype == "bool":
-        return Label(BOOL, v != 0)
+        return C_BOOL, v != 0
     if ftype == "sint32":
-        return Label(INT, _zigzag(v, 32))
+        return C_INT, _zigzag(v, 32)
     if ftype == "sint64":
-        return Label(INT, _zigzag(v, 64))
+        return C_INT, _zigzag(v, 64)
     raise ProtoError(f"field type {ftype} cannot use varint wire")
 
 
-def _decode_fields(desc: DescMap, msg: MessageDesc, data: bytes) -> list:
-    """→ list of (field_number, children_forest) in wire order."""
-    out = []
+def _message(desc: DescMap, msg_name: Optional[str]) -> MessageDesc:
+    msg = desc.get(msg_name or "")
+    if msg is None:
+        raise ProtoError(f"unknown message type: {msg_name}")
+    return msg
+
+
+def _message_events(desc: DescMap, msg: MessageDesc, data: bytes,
+                    ev: list, label_id) -> None:
+    """Append one message's field nodes to ``ev`` in wire order.  A
+    repeated field's CONSECUTIVE occurrences share one name node whose
+    children are ``Int index`` nodes; unknown fields are skipped without
+    breaking a run."""
+    run = -1  # field number of the open repeated group, -1 for none
+    idx = 0
     pos = 0
     n = len(data)
     while pos < n:
@@ -186,100 +213,105 @@ def _decode_fields(desc: DescMap, msg: MessageDesc, data: bytes) -> list:
             if pos > n:
                 raise ProtoError("truncated field")
             continue
+        # the occurrence values: (type code, value) scalars, or a
+        # sub-message's bytes
+        sub = None
         if wire == _VARINT:
             v, pos = _read_varint(data, pos)
-            children = (node(_varint_label(field.type, v)),)
+            vals = (_varint_label(field.type, v),)
         elif wire == _FIXED32:
             if pos + 4 > n:
                 raise ProtoError("truncated fixed32")
-            raw = data[pos : pos + 4]
+            vals = (_fixed32_label(field.type, data[pos:pos + 4]),)
             pos += 4
-            children = (node(_fixed32_label(field.type, raw)),)
         elif wire == _FIXED64:
             if pos + 8 > n:
                 raise ProtoError("truncated fixed64")
-            raw = data[pos : pos + 8]
+            vals = (_fixed64_label(field.type, data[pos:pos + 8]),)
             pos += 8
-            children = (node(_fixed64_label(field.type, raw)),)
         elif wire == _LENGTHY:
             ln, pos = _read_varint(data, pos)
             if pos + ln > n:
                 raise ProtoError("truncated length-delimited field")
-            raw = data[pos : pos + ln]
+            raw = data[pos:pos + ln]
             pos += ln
             if field.type == "bytes":
-                children = (node(Label(BYTES, raw)),)
+                vals = ((C_BYTES, raw),)
             elif field.type == "string":
                 try:
-                    children = (node(Label(STRING, raw.decode("utf-8"))),)
+                    vals = ((C_STRING, raw.decode("utf-8")),)
                 except UnicodeDecodeError as e:
                     raise ProtoError(str(e)) from None
             elif field.type == "message":
-                sub = desc.get(field.message or "")
-                if sub is None:
-                    raise ProtoError(f"unknown message type: {field.message}")
-                children = decode_message(desc, field.message, raw)
-            elif field.repeated and field.type in (
-                _VARINT_TYPES + _FIXED32_TYPES + _FIXED64_TYPES
-            ):
-                # packed repeated scalars: one occurrence per packed value
-                # (beyond the reference, which TODOs this — Protobuf.hs:280)
-                for ch in _decode_packed(field, raw):
-                    out.append((number, field, ch))
-                continue
+                sub = _message(desc, field.message)
+                vals = (raw,)
+            elif field.repeated and field.type in _PACKABLE:
+                vals = _packed_labels(field, raw)
             else:
                 raise ProtoError(
-                    f"{field.type} cannot use length-delimited wire"
-                )
+                    f"{field.type} cannot use length-delimited wire")
         else:
             raise ProtoError(f"unsupported wire type {wire}")
-        out.append((number, field, children))
-    return out
-
-
-def decode_message(desc: DescMap, msg_name: str, data: bytes) -> tuple:
-    """Decode one message's bytes into its field-node forest."""
-    msg = desc.get(msg_name)
-    if msg is None:
-        raise ProtoError(f"unknown message type: {msg_name}")
-    fields = _decode_fields(desc, msg, data)
-    # merge CONSECUTIVE runs of a repeated field into index-labeled groups
-    out = []
-    i = 0
-    while i < len(fields):
-        number, field, children = fields[i]
+        if not vals:  # an empty packed run: no node, an open run goes on
+            continue
         if field.repeated:
-            run = [children]
-            j = i + 1
-            while j < len(fields) and fields[j][0] == number:
-                run.append(fields[j][2])
-                j += 1
-            indexed = tuple(
-                node(Label(INT, idx), ch) for idx, ch in enumerate(run)
-            )
-            out.append(node(Label(STRING, field.name), indexed))
-            i = j
-        else:
-            out.append(node(Label(STRING, field.name), children))
-            i += 1
-    return tuple(out)
+            if run != number:  # close the open run, open this field's
+                if run >= 0:
+                    ev.append(RET_EV)
+                ev.append(label_id(C_STRING, field.name))
+                run, idx = number, 0
+        elif run >= 0:
+            ev.append(RET_EV)
+            run = -1
+        for val in vals:
+            # one occurrence: an index node inside a run, else a name node
+            if run >= 0:
+                ev.append(label_id(C_INT, idx))
+                idx += 1
+            else:
+                ev.append(label_id(C_STRING, field.name))
+            if sub is not None:
+                _message_events(desc, sub, val, ev, label_id)
+            else:
+                ev.append(label_id(*val))
+                ev.append(RET_EV)
+            ev.append(RET_EV)
+    if run >= 0:
+        ev.append(RET_EV)
 
 
 def decode_protobuf(desc: DescMap, msg_name: str, data: bytes) -> tuple:
     """Protobuf message bytes → forest (the reference's ``decode``)."""
-    return decode_message(desc, msg_name, data)
+    it = _LabelIntern()
+    ev: list = []
+    _message_events(desc, _message(desc, msg_name), data, ev, it.label_id)
+    return events_to_forest(ev, it.labels())
 
 
 # -- Spark column path -------------------------------------------------------
 
 
+def protobuf_verdicts(tv: TableValidator, payloads, desc: DescMap,
+                      msg_name: str) -> np.ndarray:
+    """Verdicts for one batch of protobuf payloads: every payload decodes
+    into one event buffer, walked by ``tv``.  Null payloads and
+    :class:`ProtoError` payloads are False."""
+    def emit(raw, ev, it):
+        _message_events(desc, _message(desc, msg_name), bytes(raw), ev,
+                        it.label_id)
+
+    return tv.verdicts(len(payloads),
+                       *batch_events(payloads, emit, ProtoError))
+
+
 def validate_protobuf_column(col, spec_source: str, desc: DescMap,
                              msg_name: str):
     """Boolean Column: protobuf-encoded binary column matches the Relapse
-    spec.  Each Arrow batch decodes to forests and runs the same cached
-    int-table VPA as the JSON and XML columns
-    (:func:`~.automaton.table_validator_for`); null payloads and
-    :class:`ProtoError` payloads are False, never errors."""
+    spec.  Each Arrow batch decodes straight to events
+    (:func:`protobuf_verdicts`) and runs the same cached int-table VPA as
+    the JSON and XML columns (:func:`~.automaton.table_validator_for`);
+    null payloads and :class:`ProtoError` payloads are False, never
+    errors."""
     from pyspark.sql.functions import pandas_udf
 
     from .automaton import table_validator_for
@@ -288,19 +320,11 @@ def validate_protobuf_column(col, spec_source: str, desc: DescMap,
 
     compile_grammar(parse_grammar(spec_source))  # fail fast on driver
 
-    def forest_or_none(raw):
-        if raw is None:
-            return None
-        try:
-            return decode_protobuf(desc, msg_name, bytes(raw))
-        except ProtoError:
-            return None
-
     @pandas_udf("boolean")
     def match(payloads: pd.Series) -> pd.Series:
-        forests = [forest_or_none(r) for r in payloads.tolist()]
         tv = table_validator_for(spec_source)
-        return pd.Series(tv.validate_forests(forests))
+        return pd.Series(protobuf_verdicts(tv, payloads.tolist(), desc,
+                                           msg_name))
 
     return match(col)
 

@@ -33,10 +33,14 @@ per-label step a vectorized batch operation:
    — corpora with all-unique text but shared shape validate in
    O(distinct shapes).
 
-Two front ends feed the same event buffer: :meth:`TableValidator.
-validate_batch` flattens JSON text directly (the hot path: no forest is
-ever built), :meth:`TableValidator.validate_forests` flattens any decoded
-forest (XML, protobuf) with its labels exactly as the decoder typed them.
+Every front end fills the same event buffer and ends in
+:meth:`TableValidator.verdicts`: :meth:`TableValidator.validate_batch`
+flattens JSON text inline; the XML and protobuf decoders append their
+events straight into it through :func:`batch_events` (no forest is built
+on any column path); :meth:`TableValidator.validate_forests` flattens
+forests that callers decoded themselves.  All of them intern labels
+through :meth:`_LabelIntern.label_id`, and :func:`events_to_forest`
+turns one document's events back into a forest for the reference API.
 
 Fallback: user libs whose conditions the vectorizer cannot batch run the
 scalar per-distinct-label fallback inside the table path.  There is no
@@ -68,7 +72,7 @@ from .exprs import (
     Var,
     eval_bool_or_false,
 )
-from .labels import Label, _loads
+from .labels import Label, TreeNode, _loads
 from .smart import (
     CONCAT,
     CONTAINS,
@@ -143,7 +147,11 @@ def collect_conds(g: SGrammar) -> List[Expr]:
 # vectorized condition evaluation over distinct labels
 # ---------------------------------------------------------------------------
 
-_TY_CODE = {BOOL: 0, INT: 1, UINT: 2, DOUBLE: 3, STRING: 4, BYTES: 5}
+# label type codes: the decoders intern labels by these
+C_BOOL, C_INT, C_UINT, C_DOUBLE, C_STRING, C_BYTES = range(6)
+_TY_CODE = {BOOL: C_BOOL, INT: C_INT, UINT: C_UINT, DOUBLE: C_DOUBLE,
+            STRING: C_STRING, BYTES: C_BYTES}
+_TY_NAME = tuple(sorted(_TY_CODE, key=_TY_CODE.get))
 
 
 class CondBatch:
@@ -432,67 +440,113 @@ class CondBatch:
 
 
 # ---------------------------------------------------------------------------
-# document flattening: JSON text or decoded forest → event stream
+# the event buffer: documents → one event stream per batch
 # ---------------------------------------------------------------------------
 #
 # One int32 list per document: a CALL is the distinct-label index (>= 0), a
 # RETURN is -1 — the bracket structure fully determines the tree shape.
 # Labels are interned through PER-TYPE dicts keyed on the raw Python value
-# (no Label tuple construction on the JSON hot path; separate dicts also
+# (no Label tuple construction on any column path; separate dicts also
 # keep bool True distinct from int 1, and Int 1 distinct from Uint 1).
 
 RET_EV = -1
 
+# Label / TreeNode built without the namedtuple ``__new__`` frame: the
+# forest rebuild makes one of each per node, and the plain constructors
+# are measurably slower there
+_new = tuple.__new__
+
 
 class _LabelIntern:
     """Per-type value→index intern maps plus the distinct-label arrays the
-    condition evaluator consumes."""
+    condition evaluator consumes.  :meth:`label_id` holds the interning
+    rules every decoder shares; :func:`_flatten_json` inlines the same
+    lookups on its STRING and INT maps."""
 
-    __slots__ = ("strs", "ints", "uints", "bools", "dbls", "bytes", "tys",
-                 "vals")
+    __slots__ = ("maps", "strs", "ints", "tys", "vals")
 
     def __init__(self):
-        self.strs: Dict[str, int] = {}
-        self.ints: Dict[int, int] = {}
-        self.uints: Dict[int, int] = {}
-        self.bools: Dict[bool, int] = {}
-        self.dbls: Dict[object, int] = {}
-        self.bytes: Dict[bytes, int] = {}
+        # one map per type code (_TY_CODE order): bool True stays apart
+        # from Int 1, Uint 1 from Int 1, Bytes b"a" from String "a"
+        self.maps: Tuple[dict, ...] = tuple({} for _ in _TY_CODE)
+        self.ints: Dict[int, int] = self.maps[C_INT]
+        self.strs: Dict[str, int] = self.maps[C_STRING]
         self.tys: List[int] = []    # _TY_CODE per distinct label
         self.vals: List[object] = []
 
-    def by_type(self) -> Dict[str, Tuple[dict, int]]:
-        """Label type → (its intern map, its type code)."""
-        return {BOOL: (self.bools, 0), INT: (self.ints, 1),
-                UINT: (self.uints, 2), DOUBLE: (self.dbls, 3),
-                STRING: (self.strs, 4), BYTES: (self.bytes, 5)}
-
-    def labels(self) -> List[Label]:
-        rev = {v: k for k, v in _TY_CODE.items()}
-        return [Label(rev[t], v) for t, v in zip(self.tys, self.vals)]
-
-
-def _flatten_forest(forest, ev: list, it: _LabelIntern, maps) -> None:
-    """Flatten a decoded forest into the event list ``ev``, interning each
-    ``(label.ty, label.value)`` exactly as given (``maps`` is
-    ``it.by_type()``).  No JSON coercion: an integral Double stays a
-    Double.  Zero doubles intern by sign, so ``-0.0`` and ``0.0`` stay
-    distinct labels as they are to a user function."""
-    tys, vals = it.tys, it.vals
-    for t in forest:
-        ty, v = t.label
-        ids, code = maps[ty]
-        key = (v, _math.copysign(1.0, v)) if code == 3 and v == 0 else v
+    def label_id(self, code: int, v) -> int:
+        """The distinct-label index of ``(code, v)``, interned as decoded:
+        no coercion between types (an integral Double stays a Double), and
+        zero doubles key by sign, so ``-0.0`` and ``0.0`` stay distinct
+        labels as they are to a user function."""
+        ids = self.maps[code]
+        if code == C_DOUBLE and v == 0:
+            key = (v, _math.copysign(1.0, v))
+        else:
+            key = v
         li = ids.get(key)
         if li is None:
-            li = len(tys)
+            li = len(self.tys)
             ids[key] = li
-            tys.append(code)
-            vals.append(v)
-        ev.append(li)
+            self.tys.append(code)
+            self.vals.append(v)
+        return li
+
+    def labels(self) -> List[Label]:
+        return [_new(Label, (_TY_NAME[t], v))
+                for t, v in zip(self.tys, self.vals)]
+
+
+def _flatten_forest(forest, ev: list, it: _LabelIntern) -> None:
+    """Flatten a decoded forest into the event list ``ev``, interning each
+    ``(label.ty, label.value)`` exactly as given."""
+    label_id = it.label_id
+    for t in forest:
+        ty, v = t.label
+        ev.append(label_id(_TY_CODE[ty], v))
         if t.children:
-            _flatten_forest(t.children, ev, it, maps)
+            _flatten_forest(t.children, ev, it)
         ev.append(RET_EV)
+
+
+def events_to_forest(ev: list, labels: List[Label]) -> tuple:
+    """The forest an event list encodes (``labels[i]`` is distinct label
+    ``i``): the inverse of :func:`_flatten_forest`, built with an explicit
+    stack so document depth is not bounded by Python recursion."""
+    kids: list = []
+    stack: list = []
+    for x in ev:
+        if x >= 0:
+            stack.append((labels[x], kids))
+            kids = []
+        else:
+            label, parent = stack.pop()
+            parent.append(_new(TreeNode, (label, tuple(kids))))
+            kids = parent
+    return tuple(kids)
+
+
+def batch_events(docs, emit, errors) -> Tuple[_LabelIntern, list, list]:
+    """One Arrow batch → (interned labels, event buffer, spans) for
+    :meth:`TableValidator.verdicts`.  ``emit(doc, ev, it)`` appends one
+    document's events to ``ev``; a ``None`` document, or one whose decode
+    raises ``errors``, gets no span (False) and its partial events are
+    rolled back, so they never reach a neighbour's slice."""
+    it = _LabelIntern()
+    buf: list = []
+    spans = []
+    for di in range(len(docs)):
+        d = docs[di]
+        if d is None:
+            continue
+        start = len(buf)
+        try:
+            emit(d, buf, it)
+        except errors:
+            del buf[start:]
+            continue
+        spans.append((di, start, len(buf)))
+    return it, buf, spans
 
 
 def _flatten_json(v, ev: list, it: _LabelIntern) -> None:
@@ -558,19 +612,20 @@ def _flatten_json(v, ev: list, it: _LabelIntern) -> None:
         return
     # scalar leaf
     if t is bool:
-        ids, code = it.bools, 0
+        code = 0
     elif t is int:
-        ids, code = it.ints, 1
+        code = 1
     elif t is float:
         if _math.isfinite(v) and v.is_integer():
             v = int(v)
-            ids, code = it.ints, 1
+            code = 1
         else:
-            ids, code = it.dbls, 3
+            code = 3  # never zero: integral doubles are Int above
     elif t is str:
-        ids, code = it.strs, 4
+        code = 4
     else:
         raise TypeError(f"cannot encode {t} as a label")
+    ids = it.maps[code]
     li = ids.get(v)
     if li is None:
         li = len(it.tys)
@@ -770,7 +825,7 @@ class TableValidator:
         it = _LabelIntern()
         loads = _loads
         # ONE growing event buffer + (doc, start, end) spans: the label
-        # gather in :meth:`_verdicts` is a single fancy-index over the
+        # gather in :meth:`verdicts` is a single fancy-index over the
         # whole batch instead of one small gather per document (round-6
         # hot-loop fix)
         buf: list = []
@@ -790,30 +845,21 @@ class TableValidator:
                 del buf[start:]
                 continue
             spans.append((di, start, len(buf)))
-        return self._verdicts(len(docs), it, buf, spans)
+        return self.verdicts(len(docs), it, buf, spans)
 
     def validate_forests(self, forests) -> np.ndarray:
-        """Verdicts for a sequence of decoded forests (``None`` =
-        undecodable → False), factorized by walk signature.  The front end
-        for every encoding that decodes to :class:`~.labels.TreeNode`
-        forests (XML, protobuf)."""
-        it = _LabelIntern()
-        maps = it.by_type()
-        buf: list = []
-        spans = []
-        for di, forest in enumerate(forests):
-            if forest is None:
-                continue
-            start = len(buf)
-            _flatten_forest(forest, buf, it, maps)
-            spans.append((di, start, len(buf)))
-        return self._verdicts(len(forests), it, buf, spans)
+        """Verdicts for a sequence of forests the caller decoded itself
+        (``None`` = undecodable → False), factorized by walk signature."""
+        return self.verdicts(len(forests),
+                             *batch_events(forests, _flatten_forest, ()))
 
-    def _verdicts(self, n: int, it: _LabelIntern, buf: list,
-                  spans: list) -> np.ndarray:
-        """Label masks → one gathered signature array → one walk per
-        distinct signature.  ``spans`` holds ``(doc, start, end)`` slices
-        of the event buffer ``buf``; documents without a span are False."""
+    def verdicts(self, n: int, it: _LabelIntern, buf: list,
+                 spans: list) -> np.ndarray:
+        """The batch entry every front end ends in: label masks → one
+        gathered signature array → one walk per distinct signature.
+        ``spans`` holds ``(doc, start, end)`` slices of the event buffer
+        ``buf`` (see :func:`batch_events`); documents without a span are
+        False."""
         out = np.zeros(n, dtype=bool)
         if not spans:
             return out

@@ -23,8 +23,9 @@ Engines exercised per case — the pure derivative engine and the
 table-VPA, over every encoding:
 - JSON: ``validate_batch`` on the text (+ the Spark automaton UDF in the
   Spark test);
-- XML:  ``validate_forests`` over decode_xml (+ validate_xml_column);
-- PB:   ``validate_forests`` over decode_protobuf
+- XML:  ``xml_verdicts``, the event-decoder batch entry that
+  validate_xml_column calls (+ validate_xml_column);
+- PB:   ``protobuf_verdicts``, the batch entry of validate_protobuf_column
   (+ validate_protobuf_column).
 """
 
@@ -38,7 +39,7 @@ from katydid_haskell_spark.relapse.labels import decode_json
 from katydid_haskell_spark.relapse.parser import parse_grammar
 from katydid_haskell_spark.relapse.smart import compile_grammar
 from katydid_haskell_spark.relapse.vpa import TableValidator
-from katydid_haskell_spark.relapse.xml_source import decode_xml
+from katydid_haskell_spark.relapse.xml_source import decode_xml, xml_verdicts
 
 
 # ---------------------------------------------------------------------------
@@ -283,13 +284,13 @@ def _verdicts(spec: str, tree: dict) -> dict:
     out["json/derive"] = v.validate(decode_json(js))
     tv = TableValidator(g)
     out["json/vpa"] = bool(tv.validate_batch([js])[0])
-    xf = decode_xml(to_xml(tree))
-    out["xml/derive"] = v.validate(xf)
-    out["xml/vpa"] = bool(tv.validate_forests([xf])[0])
+    xs = to_xml(tree)
+    out["xml/derive"] = v.validate(decode_xml(xs))
+    out["xml/vpa"] = bool(xml_verdicts(tv, [xs])[0])
     desc, root, payload = to_protobuf(tree)
     pf = pb.decode_protobuf(desc, root, payload)
     out["pb/derive"] = v.validate(pf)
-    out["pb/vpa"] = bool(tv.validate_forests([pf])[0])
+    out["pb/vpa"] = bool(pb.protobuf_verdicts(tv, [payload], desc, root)[0])
     return out
 
 

@@ -269,3 +269,40 @@ def test_percentile_stat_rules_fused_parity(spark):
     n_tot = df.count()
     rank = df.where(F.col("text_len") <= kll_v).count() / n_tot
     assert 0.90 <= rank <= 1.0, (kll_v, rank)
+
+
+def test_fused_plan_reads_rewritten_input_not_a_stale_cache(spark, tmp_path):
+    """Failure injection: the input directory is rewritten between two
+    runs of the same plan.  The second run must see the new rows — a
+    DataFrame persisted by the first run, never released, would match
+    the identical plan and replay the old verdict — and no run may leave
+    anything in Spark's cache manager."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from katydid_haskell_spark.plans.checkplan import (
+        CheckPlan,
+        UniqueRule,
+        run_plan_fused,
+    )
+
+    spark.catalog.clearCache()
+    path = str(tmp_path / "urls")
+    plan = CheckPlan(unique_rules=[UniqueRule("unique_url", "url")])
+
+    def unique_verdict(urls):
+        import shutil
+
+        shutil.rmtree(path, ignore_errors=True)
+        (tmp_path / "urls").mkdir()
+        pq.write_table(pa.table({"url": urls, "bucket": [0] * len(urls)}),
+                       path + "/part-0.parquet")
+        df = spark.read.parquet(path)
+        assert df.count() == len(urls)
+        verdicts, _ = run_plan_fused(df, plan, {}, {})
+        (row,) = verdicts.where(F.col("rule_id") == "unique_url").collect()
+        return row["pass"], row["metric"]
+
+    assert unique_verdict(["a", "b", "c"]) == (True, 0.0)
+    assert unique_verdict(["a", "a", "b", "b"]) == (False, 2.0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -98,6 +98,31 @@ def test_unknown_fields_skipped():
     assert len(f) == 6  # unknown field produced no node
 
 
+def _emails(*vals):
+    return node(Label(STRING, "emails"), tuple(
+        node(Label(INT, i), (node(Label(STRING, v)),))
+        for i, v in enumerate(vals)))
+
+
+def test_repeated_runs_group_by_adjacency():
+    """A run broken by another field and then resumed decodes to two
+    groups, each indexed from 0; an unknown field inside a run does not
+    break it (the reference drops unknown fields before grouping)."""
+    broken = (encode_string(3, "a") + encode_string(3, "b")
+              + encode_string(1, "ann") + encode_string(3, "c"))
+    f = decode_protobuf(DESC, "Person", broken)
+    assert f == (_emails("a", "b"),
+                 node(Label(STRING, "name"), (node(Label(STRING, "ann")),)),
+                 _emails("c"))
+    assert verdict('.emails: .1 == "b"', f)
+    assert not verdict('.emails: .2 == "c"', f)
+    unknown_inside = (encode_string(3, "a") + encode_int64(99, 7)
+                      + encode_string(3, "b"))
+    f = decode_protobuf(DESC, "Person", unknown_inside)
+    assert f == (_emails("a", "b"),)
+    assert verdict('.emails: .1 == "b"', f)
+
+
 def test_negative_int_and_zigzag():
     desc = {"M": {1: Field("a", "int64"), 2: Field("b", "sint64")}}
     data = encode_int64(1, -5 & ((1 << 64) - 1)) + encode_field(
@@ -117,6 +142,13 @@ def test_truncated_errors():
         decode_protobuf(DESC, "Person", person_bytes()[:-3])
     with pytest.raises(ProtoError):
         decode_protobuf(DESC, "Nope", b"")
+    # fields that decode fine, then a tag whose value is missing
+    with pytest.raises(ProtoError):
+        decode_protobuf(DESC, "Person", person_bytes() + b"\x10")
+    # bad UTF-8 in a string field
+    with pytest.raises(ProtoError):
+        decode_protobuf(DESC, "Person", encode_string(1, "ann")
+                        + encode_field(3, 2, encode_varint(1) + b"\xff"))
 
 
 def test_packed_repeated_scalars_match_unpacked():
@@ -171,6 +203,31 @@ def test_packed_repeated_scalars_match_unpacked():
     assert verdict('.xs: .1 == 270', fp)
     assert verdict('(.ds: ._ == double(-1.25) & .ss: ._ == -1)', fp)
     assert not verdict('.xs: .0 == 270', fp)
+
+
+def test_empty_packed_field_adds_no_node():
+    """A packed field with no values (tag plus length 0) decodes to no
+    node, alone or inside a run of another repeated field, the same as
+    omitting it."""
+    from katydid_haskell_spark.relapse.protobuf_source import (
+        encode_packed_varints,
+    )
+
+    desc: DescMap = {"M": {1: Field("name", "string"),
+                           2: Field("tags", "string", repeated=True),
+                           4: Field("xs", "int64", repeated=True)}}
+    alone = encode_string(1, "t") + encode_packed_varints(4, [])
+    f = decode_protobuf(desc, "M", alone)
+    assert f == (node(Label(STRING, "name"), (node(Label(STRING, "t")),)),)
+    assert verdict('name == "t"', f)  # exactly one node
+    inside = (encode_string(2, "a") + encode_packed_varints(4, [])
+              + encode_string(2, "b"))
+    f = decode_protobuf(desc, "M", inside)
+    assert f == (node(Label(STRING, "tags"), (
+        node(Label(INT, 0), (node(Label(STRING, "a")),)),
+        node(Label(INT, 1), (node(Label(STRING, "b")),)),
+    )),)
+    assert verdict('.tags: .1 == "b"', f)
 
 
 def test_packed_mixed_with_unpacked_runs():

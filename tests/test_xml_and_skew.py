@@ -6,7 +6,12 @@ from pyspark.sql import functions as F
 from katydid_haskell_spark.operators import skew
 from katydid_haskell_spark.relapse import parse, validate
 from katydid_haskell_spark.relapse.labels import INT, STRING, Label, node
-from katydid_haskell_spark.relapse.xml_source import decode_xml, validate_xml_column
+from katydid_haskell_spark.relapse.vpa import TableValidator
+from katydid_haskell_spark.relapse.xml_source import (
+    decode_xml,
+    validate_xml_column,
+    xml_verdicts,
+)
 
 
 def test_decode_xml_shapes():
@@ -21,6 +26,36 @@ def test_decode_xml_shapes():
     # whitespace between elements produces no node
     f2 = decode_xml("<a>\n  <b>1</b>\n</a>")
     assert f2 == (node(Label(STRING, "a"), (node(Label(STRING, "b"), (node(Label(INT, 1)),)),)),)
+    # whitespace-only text and tails: no node; other text keeps its spaces
+    assert decode_xml("<a> <b>  </b>\n<c/> t </a>") == (
+        node(Label(STRING, "a"), (
+            node(Label(STRING, "b")),
+            node(Label(STRING, "c")),
+            node(Label(STRING, " t ")),
+        )),
+    )
+    # mixed content: text, child, tail in document order
+    assert decode_xml("<a>x<b/>y</a>") == (
+        node(Label(STRING, "a"), (
+            node(Label(STRING, "x")),
+            node(Label(STRING, "b")),
+            node(Label(STRING, "y")),
+        )),
+    )
+    # int-like text is parsed: "-0" → Int 0, "007" → Int 7
+    assert decode_xml("<n><z>-0</z><s>007</s></n>") == (
+        node(Label(STRING, "n"), (
+            node(Label(STRING, "z"), (node(Label(INT, 0)),)),
+            node(Label(STRING, "s"), (node(Label(INT, 7)),)),
+        )),
+    )
+    # namespaced tags and attributes decode to their local names
+    assert decode_xml('<p:a xmlns:p="urn:p" p:href="x"><p:b/></p:a>') == (
+        node(Label(STRING, "a"), (
+            node(Label(STRING, "href"), (node(Label(STRING, "x")),)),
+            node(Label(STRING, "b")),
+        )),
+    )
 
 
 def test_xml_validate_python():
@@ -35,6 +70,23 @@ def test_xml_validate_column(spark):
     got = [r["m"] for r in df.select(
         validate_xml_column(F.col("doc"), "a: b == 5").alias("m")).collect()]
     assert got == [True, False, False, False]
+
+
+def test_xml_deep_document(spark):
+    """A valid 3000-deep document decodes without recursion: the column,
+    the event batch and decode_xml + validate all accept it."""
+    deep = "<a>" * 3000 + "</a>" * 3000
+    docs = [deep, deep.replace("<a></a>", "<b></b>")]
+    for spec, want in (("a: a: a: *", [True, True]),
+                       ("a: a: b: *", [False, False]),
+                       ("a: .a: .a: .a: .a: *", [True, True])):
+        g = parse(spec)
+        assert [validate(g, decode_xml(d)) for d in docs] == want, spec
+        assert list(xml_verdicts(TableValidator(g.sgrammar), docs)) == want
+        df = spark.createDataFrame([(d,) for d in docs], "doc string")
+        got = [r["m"] for r in df.select(
+            validate_xml_column(F.col("doc"), spec).alias("m")).collect()]
+        assert got == want, spec
 
 
 def test_host_and_heavy_hitters(spark):
@@ -131,6 +183,12 @@ def test_xml_column_sees_attributes(spark):
         validate_xml_column(F.col("doc"), "p: .id == 7",
                             attrs=False).alias("m")).collect()]
     assert got0 == [False, False, False]
+    # the event batch the column runs gives the same verdicts
+    g = parse("p: .id == 7")
+    tv = TableValidator(g.sgrammar)
+    assert list(xml_verdicts(tv, docs)) == got
+    assert list(xml_verdicts(tv, docs, attrs=False)) == got0
+    assert [validate(g, decode_xml(d, attrs=False)) for d in docs] == got0
 
 
 def test_heavy_hitters_approx_property_zipf_100k(spark):
