@@ -49,7 +49,10 @@ class ParseFailure(Exception):
 
 
 _ID_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-_FLOAT_RE = re.compile(r"\d+\.?\d*(?:[eE][+-]?\d+)?")
+# ASCII digits only, as Parsec's ``digit``: ``\d`` and ``str.isdigit``
+# also accept other Unicode digits (``١٢``, ``²``)
+_DEC_RE = re.compile(r"[0-9]+")
+_FLOAT_RE = re.compile(r"[0-9]+\.?[0-9]*(?:[eE][+-]?[0-9]+)?")
 _ESCAPES = {
     "a": "\a", "b": "\b", "n": "\n", "f": "\f", "r": "\r", "t": "\t",
     "v": "\v", "'": "'", "\\": "\\", '"': '"', "/": "/",
@@ -145,11 +148,11 @@ class _P:
                 self.pos += m.end()
                 return int(m.group(), 8)
             return 0
-        if c.isdigit():
-            m = re.match(r"\d+", self.s[self.pos:])
-            self.pos += m.end()
-            return int(m.group(), 10)
-        self.fail("expected int")
+        m = _DEC_RE.match(self.s, self.pos)
+        if not m:
+            self.fail("expected int")
+        self.pos = m.end()
+        return int(m.group(), 10)
 
     def _signed_int(self) -> int:
         neg = self.try_eat("-")

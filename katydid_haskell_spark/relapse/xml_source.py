@@ -43,7 +43,8 @@ from .vpa import (
     events_to_forest,
 )
 
-_INT_RE = re.compile(r"^-?\d+$")
+# ASCII digits only: the reference's ``read`` gives String for ``١٢``
+_INT_RE = re.compile(r"^-?[0-9]+$")
 
 
 def _text_events(text: str, ev: list, label_id) -> None:

@@ -79,6 +79,17 @@ def test_double_fail():
     fails("double_cast_lit", "double(1/2)")
 
 
+@pytest.mark.parametrize("inp", [
+    ".a == \u00b2",                      # superscript two: isdigit() only
+    ".a == \u0661\u0662",                # Arabic-Indic 12: \d matches
+    ".a == double(\u0663.5)",            # Arabic-Indic 3 in a double
+])
+def test_non_ascii_digits_fail(inp):
+    # Parsec's `digit` is ASCII-only; no other Unicode digit is a number
+    with pytest.raises(RelapseError):
+        parse_grammar(inp)
+
+
 @pytest.mark.parametrize(
     "inp,want",
     [

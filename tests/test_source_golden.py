@@ -98,6 +98,10 @@ XML_CASES = [
      [("<a><b>1</b></a>", True),
       ("<a><b>1</b>", False),
       ("<a><b>1</b></a>", True)]),
+    # only ASCII digits make an Int: Arabic-Indic "١٢" stays String
+    ('a: == "\u0661\u0662"',
+     [("<a>\u0661\u0662</a>", True),
+      ("<a>12</a>", False)]),
 ]
 
 DESC: DescMap = {

@@ -49,6 +49,12 @@ def test_decode_xml_shapes():
             node(Label(STRING, "s"), (node(Label(INT, 7)),)),
         )),
     )
+    # only ASCII digits are int-like: Arabic-Indic "١٢" is a String
+    assert decode_xml("<n><d>\u0661\u0662</d></n>") == (
+        node(Label(STRING, "n"), (
+            node(Label(STRING, "d"), (node(Label(STRING, "\u0661\u0662")),)),
+        )),
+    )
     # namespaced tags and attributes decode to their local names
     assert decode_xml('<p:a xmlns:p="urn:p" p:href="x"><p:b/></p:a>') == (
         node(Label(STRING, "a"), (
