@@ -1,10 +1,11 @@
 """Per-column statistics constraints (SURVEY.md §2.6).
 
-One single-pass aggregation computes every requested column stat — Catalyst
-gives partial+final hash aggregation for free, so at 10^12 rows this is one
-scan + a tiny all-to-one reduce of pre-aggregated values.  Distinct counts
-use HyperLogLog (``approx_count_distinct``), mergeable across partitions;
-per-bucket HLL sketches (``hll_sketch_agg``) enable incremental rollup.
+Stat rules are evaluated by the fused CheckPlan
+(:func:`..plans.checkplan.run_plan_fused`): mergeable metrics ride its
+per-bucket rollup — Catalyst gives partial+final hash aggregation for free,
+so at 10^12 rows this is one scan + a tiny all-to-one reduce of
+pre-aggregated values.  Distinct counts use per-bucket HLL sketches
+(``hll_sketch_agg``), mergeable across buckets and runs.
 """
 
 from __future__ import annotations
@@ -20,7 +21,8 @@ from pyspark.sql import functions as F
 class StatRule:
     """A threshold check over a column statistic.
 
-    metric: one of null_rate, min, max, count, approx_distinct, mean
+    metric: one of null_rate, min, max, count, mean, approx_distinct,
+    distinct, pNN (exact percentile) or approx_pNN (KLL sketch)
     op: one of le, ge, lt, gt, eq, between
     """
 
@@ -33,39 +35,16 @@ class StatRule:
 
 
 def _metric_col(metric: str, c: str) -> Column:
-    if metric == "null_rate":
-        return (F.count(F.lit(1)) - F.count(c)) / F.count(F.lit(1))
-    if metric == "min":
-        return F.min(c)
-    if metric == "max":
-        return F.max(c)
-    if metric == "count":
-        return F.count(c)
-    if metric == "approx_distinct":
-        return F.approx_count_distinct(c)
+    """The exact, non-mergeable metrics — ``distinct`` and exact ``pNN``
+    — which the fused plan evaluates in its one extra global pass."""
     if metric == "distinct":
         # exact distinct — a full shuffle at scale; prefer approx_distinct
         # (HLL, mergeable) unless exact parity with an external oracle is
         # required.
         return F.count_distinct(F.col(c))
-    if metric == "mean":
-        return F.avg(c)
     p = _parse_percentile_metric(metric)
-    if p is not None:
-        fn, q = p
-        if fn == "kll":
-            # approx percentiles ride a DataSketches KLL sketch — the
-            # MERGEABLE estimator (round 6): per-bucket partials roll up
-            # (checkplan), and this single-agg form keeps the unfused
-            # path on the same estimator family.  Spark dedups the twin
-            # kll_sketch_agg aggregates; the get_n guard returns NULL on
-            # an all-null column (empty sketch) like approx_percentile.
-            s = f"kll_sketch_agg_double(CAST(`{c}` AS DOUBLE))"
-            return F.expr(
-                f"CASE WHEN kll_sketch_get_n_double({s}) = 0 "
-                f"THEN CAST(NULL AS DOUBLE) "
-                f"ELSE kll_sketch_get_quantile_double({s}, {q!r}) END")
-        return F.expr(f"{fn}(`{c}`, {q!r})")
+    if p is not None and p[0] == "percentile":
+        return F.expr(f"percentile(`{c}`, {p[1]!r})")
     raise ValueError(f"unknown stat metric: {metric}")
 
 
@@ -137,36 +116,6 @@ def column_profile(df: DataFrame, columns: Sequence[str]) -> DataFrame:
             )
         )
     return wide.select(F.explode(F.array(*stacks)).alias("s")).select("s.*")
-
-
-def run_stat_rules(df: DataFrame, rules: Sequence[StatRule]) -> DataFrame:
-    """Evaluate all stat rules in ONE aggregation pass.
-
-    Output: rule_id, scope='table', pass, metric (double where castable),
-    detail.
-    """
-    aggs = []
-    for i, r in enumerate(rules):
-        aggs.append(_metric_col(r.metric, r.column).alias(f"m{i}"))
-    wide = df.agg(*aggs)
-    rows = []
-    for i, r in enumerate(rules):
-        m = F.col(f"m{i}")
-        rows.append(
-            F.struct(
-                F.lit(r.rule_id).alias("rule_id"),
-                F.lit("table").alias("scope"),
-                _check(r.op, m, r.value, r.value_hi).alias("pass"),
-                m.cast("double").alias("metric"),
-                F.concat(
-                    F.lit(f"{r.metric}({r.column})="), m.cast("string"),
-                    F.lit(f" {r.op} "),
-                    (r.value if isinstance(r.value, Column)
-                     else F.lit(str(r.value))).cast("string"),
-                ).alias("detail"),
-            )
-        )
-    return wide.select(F.explode(F.array(*rows)).alias("s")).select("s.*")
 
 
 def hll_bucket_sketches(df: DataFrame, column: str,

@@ -658,6 +658,24 @@ def retrieval_pairs_sql(sf_dir: str, k_pos: int = 3, k_neg: int = 3,
     """
 
 
+def _pages_row_rule_sql() -> list:
+    """``(rule_id, DuckDB condition)`` for the six pages row rules of
+    plans/pages_plan.default_pages_plan; a row passes iff its condition
+    is TRUE."""
+    from .plans.pages_plan import TS_MAX, TS_MIN
+
+    return [
+        ("url_scheme", "regexp_matches(url, '^https?://')"),
+        ("url_host_dot", r"regexp_matches(url, '^https?://[^/]+\.')"),
+        ("text_nonempty", "length(text) > 0"),
+        ("lang_shape",
+         "lang IS NOT NULL AND regexp_matches(lang, '^[a-z]{2}$')"),
+        ("warc_ts_range",
+         f"epoch(warc_ts) >= {TS_MIN} AND epoch(warc_ts) < {TS_MAX}"),
+        ("html_title", "starts_with(text, 'Page ')"),
+    ]
+
+
 def pages_verdicts_sql(n_rows: int = 2000, seed: int = 42,
                        buckets: int = 16, snapshot: str = "bench") -> str:
     """The pages constraint-suite verdicts, re-derived end-to-end in SQL.
@@ -680,16 +698,7 @@ def pages_verdicts_sql(n_rows: int = 2000, seed: int = 42,
     iso = ", ".join(f"'{c}'" for c in ISO_639_1)
     expect = int(n_rows * 0.9)
 
-    row_rules = [
-        ("url_scheme", "regexp_matches(url, '^https?://')"),
-        ("url_host_dot", r"regexp_matches(url, '^https?://[^/]+\.')"),
-        ("text_nonempty", "length(text) > 0"),
-        ("lang_shape",
-         "lang IS NOT NULL AND regexp_matches(lang, '^[a-z]{2}$')"),
-        ("warc_ts_range",
-         f"epoch(warc_ts) >= {TS_MIN} AND epoch(warc_ts) < {TS_MAX}"),
-        ("html_title", "starts_with(text, 'Page ')"),
-    ]
+    row_rules = _pages_row_rule_sql()
     np_cols = ",\n        ".join(
         f"SUM(CASE WHEN {cond} THEN 1 ELSE 0 END) AS np{i}"
         for i, (_, cond) in enumerate(row_rules)
@@ -773,6 +782,37 @@ def pages_verdicts_sql(n_rows: int = 2000, seed: int = 42,
     SELECT -1 AS bucket_id, rule_id, pass, metric,
            CAST(0 AS BIGINT) AS rows_checked, '{snapshot}' AS snapshot
     FROM tablev
+    """
+
+
+def pages_violations_sql(n_rows: int = 2000, seed: int = 42,
+                         buckets: int = 16) -> str:
+    """The pages constraint-suite violations ``(url, rule_id, detail)``,
+    re-derived in SQL over the same Spark-free fixture as
+    pages_verdicts_sql: one row per (row, failing row rule), one per
+    ``lang_in_iso639`` orphan, one per duplicated url with its count."""
+    from .plans.pages_plan import default_pages_plan
+    from .sources.pages import ISO_639_1
+    from .sources.pages_fixture import ensure_pages_fixture
+
+    pd_path = ensure_pages_fixture(n_rows, seed, buckets, drifted=True)
+    iso = ", ".join(f"'{c}'" for c in ISO_639_1)
+    details = {r.rule_id: r.detail for r in default_pages_plan().row_rules}
+    rowviol = "\n      UNION ALL ".join(
+        f"SELECT url, '{rid}' AS rule_id, '{details[rid]}' AS detail "
+        f"FROM pages WHERE NOT COALESCE({cond}, FALSE)"
+        for rid, cond in _pages_row_rule_sql()
+    )
+    return f"""
+    WITH pages AS (SELECT * FROM read_parquet('{pd_path}'))
+    {rowviol}
+    UNION ALL
+    SELECT url, 'lang_in_iso639',
+           'lang=' || COALESCE(lang, 'NULL') || ' not in dimension'
+    FROM pages WHERE lang IS NULL OR lang NOT IN ({iso})
+    UNION ALL
+    SELECT url, 'unique_url', 'duplicate count=' || CAST(COUNT(*) AS VARCHAR)
+    FROM pages GROUP BY url HAVING COUNT(*) > 1
     """
 
 

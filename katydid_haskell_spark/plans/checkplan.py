@@ -7,9 +7,11 @@ constraint classes compile on the driver into a plan of
     (:mod:`..relapse.lower`), ALL evaluated in a single scan, with a fused
     per-bucket rollup (one partial+final aggregation) and a violations
     explode from the same pass;
-  - **table rules** — stats (one fused agg), uniqueness (key shuffle),
-    referential integrity (broadcast anti-join), drift (histogram + tiny
-    full-outer join).
+  - **table rules** — stats and referential integrity (riding the same
+    rollup), drift (one grouping-sets histogram scan + tiny full-outer
+    join), uniqueness (key shuffle).
+
+:func:`run_plan_fused` runs the whole plan; :mod:`.runner` writes its sinks.
 
 Sinks (FIXTURES.md §6):
   violations: url string, rule_id string, detail string
@@ -26,7 +28,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import drift as drift_ops
-from ..operators import referential as ref_ops
 from ..operators import skew as skew_ops
 from ..operators import stats as stats_ops
 from ..operators import uniqueness as uniq_ops
@@ -112,155 +113,6 @@ class CheckPlan:
         return out
 
 
-def run_row_rules(df: DataFrame, plan: CheckPlan, key_col: str = "url",
-                  bucket_col: str = "bucket",
-                  snapshot: str = "na") -> tuple:
-    """ONE pass over the table: all row rules as boolean columns.
-
-    Returns (verdicts, violations). The rollup aggregates per bucket
-    (partial+final — the shuffle carries one row per bucket per task);
-    violations are exploded from the same cached projection.
-    """
-    rules = plan.row_rules
-    if not rules:
-        return None, None
-    cols = plan.compile_row_columns(df.schema)
-    checked = df.select(
-        F.col(key_col).alias("__key"),
-        F.col(bucket_col).alias("__bucket"),
-        *[cols[r.rule_id].alias(f"ok_{i}") for i, r in enumerate(rules)],
-    )
-    aggs = [F.count(F.lit(1)).alias("rows_checked")]
-    for i, _ in enumerate(rules):
-        aggs.append(F.sum(F.col(f"ok_{i}").cast("long")).alias(f"npass_{i}"))
-    rolled = checked.groupBy("__bucket").agg(*aggs)
-    verdict_structs = [
-        F.struct(
-            F.col("__bucket").cast("int").alias("bucket_id"),
-            F.lit(r.rule_id).alias("rule_id"),
-            (F.col(f"npass_{i}") == F.col("rows_checked")).alias("pass"),
-            (F.col(f"npass_{i}") / F.col("rows_checked"))
-            .cast("double").alias("metric"),
-            F.col("rows_checked").cast("long").alias("rows_checked"),
-            F.lit(snapshot).alias("snapshot"),
-        )
-        for i, r in enumerate(rules)
-    ]
-    verdicts = rolled.select(
-        F.explode(F.array(*verdict_structs)).alias("v")
-    ).select("v.*")
-
-    viol_structs = [
-        F.when(
-            ~F.coalesce(F.col(f"ok_{i}"), F.lit(False)),
-            F.struct(
-                F.lit(r.rule_id).alias("rule_id"),
-                F.lit(r.detail or r.spec).alias("detail"),
-            ),
-        )
-        for i, r in enumerate(rules)
-    ]
-    violations = (
-        checked.select(
-            F.col("__key"),
-            F.array_compact(F.array(*viol_structs)).alias("fails"),
-        )
-        .filter(F.size("fails") > 0)
-        .select(F.col("__key"), F.explode("fails").alias("f"))
-        .select(
-            F.col("__key").cast("string").alias("url"),
-            F.col("f.rule_id").alias("rule_id"),
-            F.col("f.detail").alias("detail"),
-        )
-    )
-    return verdicts, violations
-
-
-def run_table_rules(df: DataFrame, plan: CheckPlan,
-                    dims: Dict[str, DataFrame],
-                    baselines: Dict[str, DataFrame],
-                    key_col: str = "url",
-                    snapshot: str = "na") -> tuple:
-    """Table-scope rules → (verdicts, violations)."""
-    verdict_frames: List[DataFrame] = []
-    violation_frames: List[DataFrame] = []
-    n_rows_col = F.lit(None).cast("long")
-
-    if plan.stat_rules:
-        verdict_frames.append(stats_ops.run_stat_rules(df, plan.stat_rules))
-    for r in plan.unique_rules:
-        dups = uniq_ops.duplicate_keys(df, [r.key])
-        verdict_frames.append(
-            dups.agg(
-                F.count(F.lit(1)).alias("dup_keys"),
-                F.coalesce(F.sum("dup_count"), F.lit(0)).alias("dup_rows"),
-            ).select(
-                F.lit(r.rule_id).alias("rule_id"),
-                F.lit("table").alias("scope"),
-                (F.col("dup_keys") == 0).alias("pass"),
-                F.col("dup_keys").cast("double").alias("metric"),
-                F.concat(F.lit("duplicate keys="), F.col("dup_keys"),
-                         F.lit(" rows in duplicates="), F.col("dup_rows"),
-                         ).alias("detail"),
-            )
-        )
-        violation_frames.append(
-            dups.select(
-                F.col(r.key).cast("string").alias("url"),
-                F.lit(r.rule_id).alias("rule_id"),
-                F.concat(F.lit("duplicate count="), F.col("dup_count"),
-                         ).alias("detail"),
-            )
-        )
-    for r in plan.ref_rules:
-        dim = dims[r.dim_name]
-        orphans = ref_ops.orphan_rows(df, r.fk, dim, r.dim_key)
-        verdict_frames.append(
-            orphans.agg(F.count(F.lit(1)).alias("orphans")).select(
-                F.lit(r.rule_id).alias("rule_id"),
-                F.lit("table").alias("scope"),
-                (F.col("orphans") == 0).alias("pass"),
-                F.col("orphans").cast("double").alias("metric"),
-                F.concat(F.lit("orphan rows="), F.col("orphans")).alias("detail"),
-            )
-        )
-        violation_frames.append(
-            orphans.select(
-                F.col(key_col).cast("string").alias("url"),
-                F.lit(r.rule_id).alias("rule_id"),
-                F.concat(F.lit(f"{r.fk}="),
-                         F.coalesce(F.col(r.fk).cast("string"), F.lit("NULL")),
-                         F.lit(" not in dimension")).alias("detail"),
-            )
-        )
-    for r in plan.drift_rules:
-        cur = drift_ops.histogram(df, r.bucketizer())
-        verdict_frames.append(
-            drift_ops.drift_verdict(cur, baselines[r.baseline_name],
-                                    r.rule_id, r.max_value, r.metric)
-        )
-
-    verdicts = None
-    if verdict_frames:
-        v = verdict_frames[0]
-        for x in verdict_frames[1:]:
-            v = v.unionByName(x)
-        verdicts = v.select(
-            F.lit(TABLE_SCOPE_BUCKET).alias("bucket_id"),
-            "rule_id",
-            "pass",
-            "metric",
-            F.lit(None).cast("long").alias("rows_checked"),
-            F.lit(snapshot).alias("snapshot"),
-        )
-    violations = None
-    if violation_frames:
-        violations = violation_frames[0]
-        for x in violation_frames[1:]:
-            violations = violations.unionByName(x)
-    return verdicts, violations
-
-
 def _salted_duplicate_keys(df: DataFrame, key: str,
                            cfg: SkewSalt) -> DataFrame:
     """Skew-aware duplicate detection: hot keys (from the approx
@@ -297,7 +149,7 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
                    key_col: str = "url", bucket_col: str = "bucket",
                    snapshot: str = "na",
                    skew: Optional[SkewSalt] = None) -> tuple:
-    """The whole plan in FOUR full-table passes (vs seven un-fused):
+    """The whole plan in FOUR full-table passes:
 
       1. bucket rollup — row-rule pass counts, per-bucket stat partials
          (count/min/max/HLL sketch, all algebraic/mergeable) and
@@ -310,13 +162,11 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
       4. uniqueness — the key shuffle (inherently its own pass).
 
     At 10^12 rows passes are the budget; this is the shape you'd run.
-    Verdict rows (schema, rule ids, pass, metric semantics) are identical
-    to the un-fused path, with one documented exception: metric
-    ``approx_distinct`` is estimated from merged per-bucket HLL sketches
-    (DataSketches hll_sketch_agg — the mergeable rollup contract) instead
-    of a global approx_count_distinct, so the estimate may differ
-    slightly.  Exact ``distinct`` rules can't ride a per-bucket rollup
-    and get one extra global pass.
+    Estimated metrics merge per-bucket sketches: ``approx_distinct`` from
+    DataSketches HLL (hll_sketch_agg), ``approx_pNN`` from KLL — both
+    within the sketch's error of the exact value, not equal to it.  Exact
+    ``distinct`` and ``pNN`` rules can't ride a per-bucket rollup and
+    share one extra global pass.
     """
     spark = df.sparkSession
     rules = plan.row_rules

@@ -1,12 +1,22 @@
 """Runner: execute a CheckPlan, write sinks, resume from checkpoint.
 
-Resumability (BASELINE.json:north_rule): verdict rows carry
-``(bucket_id, rule_id, snapshot)``.  A checkpoint directory accumulates
-per-bucket verdict partitions plus a manifest of completed buckets; a
-restarted run anti-joins the manifest and only processes remaining buckets.
-(The Iceberg-snapshot variant of the same contract plugs in by swapping the
-manifest for a snapshot id — parquet + manifest keeps the semantics without
-an Iceberg catalog on the classpath, SURVEY.md §7.3.7.)
+Every run is the fused four-pass plan (:func:`.checkplan.run_plan_fused`).
+Resumability (BASELINE.json:north_rule) is per snapshot, the unit a run
+commits:
+
+  - both sinks are partitioned by ``snapshot``; :func:`write_snapshot`
+    replaces only the ``snapshot=<s>`` partition (dynamic partition
+    overwrite), so writing a snapshot twice leaves one copy of its rows
+    and other snapshots untouched;
+  - ``manifest.json`` lists the committed snapshots and is replaced
+    atomically (temp file + ``os.replace``) after both sinks are written;
+    a committed snapshot is skipped without starting a Spark job.
+
+Per-partition lineage stays in the verdict sink: ``rows_checked`` per
+``bucket_id`` per snapshot.  (The Iceberg-snapshot variant of the same
+contract plugs in by swapping the manifest for a snapshot id — parquet +
+manifest keeps the semantics without an Iceberg catalog on the classpath,
+SURVEY.md §7.3.7.)
 """
 
 from __future__ import annotations
@@ -15,12 +25,12 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkplan import CheckPlan, run_row_rules, run_table_rules
+from .checkplan import CheckPlan, run_plan_fused
 
 VERDICT_SCHEMA = (
     "bucket_id int, rule_id string, pass boolean, metric double, "
@@ -39,40 +49,41 @@ def run_plan(df: DataFrame, plan: CheckPlan,
              dims: Optional[Dict[str, DataFrame]] = None,
              baselines: Optional[Dict[str, DataFrame]] = None,
              key_col: str = "url", bucket_col: str = "bucket",
-             snapshot: str = "na", fused: bool = True,
-             skew=None) -> RunResult:
-    """Execute every rule class; returns lazily-evaluated sink frames.
+             snapshot: str = "na", skew=None) -> RunResult:
+    """Run the fused four-pass plan; returns lazily-evaluated sink frames.
 
-    ``fused=True`` (default) runs the four-pass fused plan
-    (checkplan.run_plan_fused — stats and referential ride the bucket
-    rollup, all drift histograms share one GROUPING SETS scan); the
-    un-fused rule-class-per-pass path is kept for cross-checking
-    (``tests/test_pages_pipeline.py`` asserts both produce the same
-    verdicts).  ``skew`` (a checkplan.SkewSalt, fused path only) enables
-    heavy-hitter-driven salting of the uniqueness pass.
+    ``skew`` (a checkplan.SkewSalt) enables heavy-hitter-driven salting of
+    the uniqueness pass.
     """
-    from .checkplan import run_plan_fused
-
     spark = df.sparkSession
-    if fused:
-        rv, rviol = run_plan_fused(df, plan, dims or {}, baselines or {},
-                                   key_col, bucket_col, snapshot, skew=skew)
-        tv = tviol = None
-    else:
-        rv, rviol = run_row_rules(df, plan, key_col, bucket_col, snapshot)
-        tv, tviol = run_table_rules(df, plan, dims or {}, baselines or {},
-                                    key_col, snapshot)
-    empty_v = spark.createDataFrame([], VERDICT_SCHEMA)
-    empty_viol = spark.createDataFrame([], VIOLATION_SCHEMA)
-    verdicts = empty_v
-    for f in (rv, tv):
-        if f is not None:
-            verdicts = verdicts.unionByName(f)
-    violations = empty_viol
-    for f in (rviol, tviol):
-        if f is not None:
-            violations = violations.unionByName(f)
+    verdicts, violations = run_plan_fused(
+        df, plan, dims or {}, baselines or {}, key_col, bucket_col,
+        snapshot, skew=skew)
+    if verdicts is None:
+        verdicts = spark.createDataFrame([], VERDICT_SCHEMA)
+    if violations is None:
+        violations = spark.createDataFrame([], VIOLATION_SCHEMA)
     return RunResult(verdicts=verdicts, violations=violations)
+
+
+def write_snapshot(res: RunResult, out_dir: str, snapshot: str) -> None:
+    """Write both sinks under ``out_dir`` partitioned by ``snapshot``.
+
+    Each write is a dynamic partition overwrite of only the
+    ``snapshot=<snapshot>`` partition: writing the same snapshot again
+    replaces its rows instead of appending a second copy, and every other
+    snapshot's partition is untouched.  Violations carry no snapshot
+    column in the plan's contract (url, rule_id, detail); one is stamped
+    on here.
+    """
+    sinks = (("verdicts", res.verdicts),
+             ("violations",
+              res.violations.withColumn("snapshot", F.lit(snapshot))))
+    for name, frame in sinks:
+        (frame.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("snapshot")
+         .parquet(os.path.join(out_dir, name)))
 
 
 # ---------------------------------------------------------------------------
@@ -84,51 +95,27 @@ def _manifest_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "manifest.json")
 
 
-def completed_buckets(checkpoint_dir: str, snapshot: str) -> List[int]:
+def _load_manifest(checkpoint_dir: str) -> dict:
     path = _manifest_path(checkpoint_dir)
     if not os.path.exists(path):
-        return []
+        return {}
     with open(path) as f:
-        m = json.load(f)
-    return [int(b) for b, s in m.get("buckets", {}).items()
-            if s.get("snapshot") == snapshot]
+        return json.load(f)
 
 
-def _record_buckets(checkpoint_dir: str, snapshot: str,
-                    buckets: List[int], metrics: Dict[int, dict]) -> None:
-    os.makedirs(checkpoint_dir, exist_ok=True)
+def committed_snapshots(checkpoint_dir: str) -> Dict[str, dict]:
+    """Snapshots whose sinks are complete → ``{"committed_at": ts}``."""
+    return _load_manifest(checkpoint_dir).get("snapshots", {})
+
+
+def _commit_snapshot(checkpoint_dir: str, snapshot: str) -> None:
+    m = _load_manifest(checkpoint_dir)
+    m.setdefault("snapshots", {})[snapshot] = {"committed_at": time.time()}
     path = _manifest_path(checkpoint_dir)
-    m = {"buckets": {}}
-    if os.path.exists(path):
-        with open(path) as f:
-            m = json.load(f)
-    for b in buckets:
-        entry = {"snapshot": snapshot, "completed_at": time.time()}
-        entry.update(metrics.get(b, {}))
-        m.setdefault("buckets", {})[str(b)] = entry
-    with open(path, "w") as f:
+    tmp = f"{path}.tmp.{os.getpid()}"  # unique per writer; replace is atomic
+    with open(tmp, "w") as f:
         json.dump(m, f, indent=1, sort_keys=True)
-
-
-def table_rules_completed(checkpoint_dir: str, snapshot: str) -> bool:
-    path = _manifest_path(checkpoint_dir)
-    if not os.path.exists(path):
-        return False
-    with open(path) as f:
-        m = json.load(f)
-    return snapshot in m.get("table_rules", {})
-
-
-def _record_table_rules(checkpoint_dir: str, snapshot: str) -> None:
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    path = _manifest_path(checkpoint_dir)
-    m = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            m = json.load(f)
-    m.setdefault("table_rules", {})[snapshot] = {"completed_at": time.time()}
-    with open(path, "w") as f:
-        json.dump(m, f, indent=1, sort_keys=True)
+    os.replace(tmp, path)
 
 
 def run_resumable(df: DataFrame, plan: CheckPlan, checkpoint_dir: str,
@@ -136,83 +123,31 @@ def run_resumable(df: DataFrame, plan: CheckPlan, checkpoint_dir: str,
                   baselines: Optional[Dict[str, DataFrame]] = None,
                   key_col: str = "url", bucket_col: str = "bucket",
                   snapshot: str = "na", skew=None) -> None:
-    """Row-rule pass with per-bucket checkpointing + lineage.
+    """Run the plan for one snapshot into ``checkpoint_dir``, once.
 
-    Buckets already completed for this snapshot are skipped (the resume
-    anti-join); each completed bucket's verdicts land partitioned by
-    bucket_id, and the manifest records (bucket, snapshot, rows, ts).
-    Table-scope rules run once after all buckets complete.  ``skew`` (a
-    checkplan.SkewSalt) applies to the fused fresh-run path's uniqueness
-    pass, same as run_plan.
+    A snapshot the manifest records as committed returns at once, without
+    a Spark job.  Otherwise the fused plan runs, :func:`write_snapshot`
+    replaces the snapshot's partition of both sinks, and the snapshot is
+    committed to the manifest.  A crash anywhere before the commit leaves
+    the snapshot uncommitted; the re-run overwrites its partial rows.
+
+    Checkpoint directories written by the earlier ``bucket_id``-partitioned
+    layout (verdicts appended per bucket, a per-bucket manifest) are not
+    migrated: start a new checkpoint directory.
     """
-    spark = df.sparkSession
-    done = set(completed_buckets(checkpoint_dir, snapshot))
-    remaining_df = df.filter(~F.col(bucket_col).isin(*done)) if done else df
-
-    if not done and not table_rules_completed(checkpoint_dir, snapshot):
-        # fresh run (the common launch path): ONE fused four-pass plan
-        # covers row + table rules together — see checkplan.run_plan_fused.
-        # Resumed runs fall through to the split path below, because the
-        # row pass must be restricted to remaining buckets while table
-        # rules always see the whole table.
-        from .checkplan import run_plan_fused
-
-        fv, fviol = run_plan_fused(df, plan, dims or {}, baselines or {},
-                                   key_col, bucket_col, snapshot, skew=skew)
-        if fv is not None:
-            (fv.write.mode("append").partitionBy("bucket_id")
-             .parquet(os.path.join(checkpoint_dir, "verdicts")))
-        if fviol is not None:
-            (fviol.write.mode("append")
-             .parquet(os.path.join(checkpoint_dir, "violations")))
-        stats = (
-            spark.read.parquet(os.path.join(checkpoint_dir, "verdicts"))
-            .where(F.col("snapshot") == snapshot)
-            .groupBy("bucket_id").agg(F.max("rows_checked").alias("rows"))
-            .collect()
-        )
-        finished = [r["bucket_id"] for r in stats if r["bucket_id"] >= 0]
-        metrics = {r["bucket_id"]: {"rows": r["rows"]} for r in stats}
-        _record_buckets(checkpoint_dir, snapshot, finished, metrics)
-        _record_table_rules(checkpoint_dir, snapshot)
+    if snapshot in committed_snapshots(checkpoint_dir):
         return
-
-    rv, rviol = run_row_rules(remaining_df, plan, key_col, bucket_col, snapshot)
-    if rv is not None:
-        (rv.write.mode("append").partitionBy("bucket_id")
-         .parquet(os.path.join(checkpoint_dir, "verdicts")))
-        (rviol.write.mode("append")
-         .parquet(os.path.join(checkpoint_dir, "violations")))
-        stats = (
-            spark.read.parquet(os.path.join(checkpoint_dir, "verdicts"))
-            .where(F.col("snapshot") == snapshot)
-            .groupBy("bucket_id").agg(F.max("rows_checked").alias("rows"))
-            .collect()
-        )
-        finished = [r["bucket_id"] for r in stats if r["bucket_id"] >= 0]
-        metrics = {r["bucket_id"]: {"rows": r["rows"]} for r in stats}
-        _record_buckets(checkpoint_dir, snapshot, finished, metrics)
-
-    # Table-scope rules run once per snapshot: a resumed run must not append
-    # a second (possibly conflicting) bucket_id=-1 verdict set, so their
-    # completion is recorded in the manifest like buckets are.
-    if table_rules_completed(checkpoint_dir, snapshot):
-        return
-    tv, tviol = run_table_rules(df, plan, dims or {}, baselines or {},
-                                key_col, snapshot)
-    if tv is not None:
-        (tv.write.mode("append").partitionBy("bucket_id")
-         .parquet(os.path.join(checkpoint_dir, "verdicts")))
-    if tviol is not None:
-        (tviol.write.mode("append")
-         .parquet(os.path.join(checkpoint_dir, "violations")))
-    if tv is not None or tviol is not None:
-        _record_table_rules(checkpoint_dir, snapshot)
+    res = run_plan(df, plan, dims, baselines, key_col, bucket_col,
+                   snapshot, skew=skew)
+    write_snapshot(res, checkpoint_dir, snapshot)
+    _commit_snapshot(checkpoint_dir, snapshot)
 
 
 def read_verdicts(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(checkpoint_dir, "verdicts"))
+    return (spark.read.schema(VERDICT_SCHEMA)
+            .parquet(os.path.join(checkpoint_dir, "verdicts")))
 
 
 def read_violations(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(checkpoint_dir, "violations"))
+    return (spark.read.schema(f"{VIOLATION_SCHEMA}, snapshot string")
+            .parquet(os.path.join(checkpoint_dir, "violations")))

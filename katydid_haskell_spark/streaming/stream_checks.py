@@ -150,18 +150,19 @@ def stream_dedup_normalized(stream: DataFrame, text_col: str, ts_col: str,
 
 def foreach_batch_plan(plan: CheckPlan, dims, baselines, out_dir: str,
                        key_col: str = "url", bucket_col: str = "bucket"):
-    """foreachBatch bridge: run the FUSED CheckPlan on every micro-batch
+    """foreachBatch bridge: run the fused CheckPlan on every micro-batch
     and write verdicts/violations parquet partitioned by snapshot
     (= batch id).
 
     This is the streaming shape of the batch runner: the same compiled
-    plan, per-micro-batch lineage via the snapshot partition.  Idempotent
+    plan and the same sink writer (:func:`..plans.runner.write_snapshot`),
+    with per-micro-batch lineage via the snapshot partition.  Idempotent
     on retries: Structured Streaming can re-invoke foreachBatch for the
-    same batch_id after a failure, so each write is a DYNAMIC partition
-    overwrite of only the ``snapshot=batch-{id}`` partition — a replayed
-    batch replaces its own rows instead of appending duplicates, and other
-    batches' partitions are untouched."""
-    from ..plans.runner import run_plan
+    same batch_id after a failure, and the writer's dynamic partition
+    overwrite of only the ``snapshot=batch-{id}`` partition makes a
+    replayed batch replace its own rows instead of appending duplicates,
+    leaving other batches' partitions untouched."""
+    from ..plans.runner import run_plan, write_snapshot
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -170,18 +171,7 @@ def foreach_batch_plan(plan: CheckPlan, dims, baselines, out_dir: str,
         res = run_plan(batch_df, plan, dims, baselines,
                        key_col=key_col, bucket_col=bucket_col,
                        snapshot=snap)
-        (res.verdicts.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("snapshot")
-         .parquet(f"{out_dir}/verdicts"))
-        # violations carry no snapshot column in the batch contract
-        # (url, rule_id, detail) — stamp one here for the same
-        # partition-overwrite idempotency
-        (res.violations.withColumn("snapshot", F.lit(snap))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("snapshot")
-         .parquet(f"{out_dir}/violations"))
+        write_snapshot(res, out_dir, snap)
 
     return run
 

@@ -9,8 +9,10 @@ Usage (the north-rule launch shape):
         --snapshot snap-001 [--n-synthetic 1000000]
 
 Build the zip with ``python scripts/submit_validation.py --make-zip``.
-Resumable: re-running with the same --checkpoint and --snapshot skips
-completed buckets (per-bucket manifest anti-join).
+Resumable: re-running with the same --checkpoint and --snapshot returns
+without a Spark job once the snapshot is committed to the checkpoint's
+manifest; a run that crashed before its commit rewrites the snapshot's
+sink partition instead of appending to it.
 """
 
 from __future__ import annotations

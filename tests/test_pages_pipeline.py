@@ -1,10 +1,29 @@
-"""End-to-end constraint pipeline over the synthetic pages corpus."""
+"""End-to-end constraint pipeline over the synthetic pages corpus.
 
+The fused plan's verdicts on the 2000-row corpus are gated by the DuckDB
+``pages_verdicts`` oracle (``oracles.pages_verdicts_sql``, run by
+tests/test_entry_contract.py::test_query_matches_oracle); its violations by
+``test_violations_match_duckdb_rederivation`` below.
+"""
+
+import json
+import os
+import sys
+from collections import Counter
+from pathlib import Path
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from katydid_haskell_spark.plans.pages_plan import default_pages_plan, pages_baselines
-from katydid_haskell_spark.plans.runner import run_plan, run_resumable, read_verdicts
+from katydid_haskell_spark.plans.runner import (
+    committed_snapshots,
+    read_verdicts,
+    read_violations,
+    run_plan,
+    run_resumable,
+)
 from katydid_haskell_spark.sources.pages import (
     extract_text,
     lang_dim_df,
@@ -126,35 +145,33 @@ def test_resumable(spark, pages, tmp_path):
     assert t2 == 0
 
 
-def test_fused_plan_matches_unfused(spark, pages):
-    """run_plan(fused=True) — 4 full-table passes — must produce the same
-    verdicts and violations as the rule-class-per-pass path (the only
-    allowed delta: approx_distinct estimates, HLL++ vs merged
-    DataSketches)."""
-    plan = default_pages_plan(expect_rows=N)
-    dims = {"lang_dim": lang_dim_df(spark)}
-    baselines = pages_baselines(spark, pages_df(spark, N, drifted=False))
-    a = run_plan(pages, plan, dims, baselines, snapshot="s", fused=True)
-    b = run_plan(pages, plan, dims, baselines, snapshot="s", fused=False)
+def test_violations_match_duckdb_rederivation(spark):
+    """The violations sink equals an independent DuckDB re-derivation
+    (``oracles.pages_violations_sql``) over the Spark-free fixture of the
+    same corpus: the (url, rule_id, detail) multiset of the six row rules,
+    the lang_in_iso639 orphans and the unique_url duplicate counts."""
+    import duckdb
 
-    def vkey(rows):
-        out = {}
-        for r in rows:
-            out[(r.bucket_id, r.rule_id)] = (
-                r["pass"], round(r.metric, 9) if r.metric is not None else None,
-                r.rows_checked)
-        return out
+    from katydid_haskell_spark.oracles import pages_violations_sql
 
-    va, vb = vkey(a.verdicts.collect()), vkey(b.verdicts.collect())
-    assert set(va) == set(vb)
-    for k in va:
-        if k[1] == "url_distinct":  # approx estimator may differ slightly
-            assert abs(va[k][1] - vb[k][1]) / max(vb[k][1], 1) < 0.05
-            continue
-        assert va[k] == vb[k], f"{k}: fused={va[k]} unfused={vb[k]}"
-    sa = sorted((r.url, r.rule_id, r.detail) for r in a.violations.collect())
-    sb = sorted((r.url, r.rule_id, r.detail) for r in b.violations.collect())
-    assert sa == sb
+    n = 2000
+    pages = with_bucket(pages_df(spark, n))
+    plan = default_pages_plan(expect_rows=n, exact_distinct=True)
+    baselines = pages_baselines(spark, pages_df(spark, n, drifted=False))
+    res = run_plan(pages, plan, {"lang_dim": lang_dim_df(spark)}, baselines,
+                   snapshot="s")
+    got = Counter((r.url, r.rule_id, r.detail)
+                  for r in res.violations.collect())
+    con = duckdb.connect()
+    try:
+        want = Counter(map(tuple, con.execute(
+            pages_violations_sql(n, 42, 16)).fetchall()))
+    finally:
+        con.close()
+    # every violation-producing rule class is exercised by the corpus
+    assert {"lang_shape", "lang_in_iso639", "unique_url"} <= {
+        rid for _, rid, _ in want}
+    assert got == want
 
 
 def test_fused_plan_prunes_unused_columns(spark, tmp_path):
@@ -207,14 +224,13 @@ def test_fused_skew_salt_matches_plain(spark, pages):
     assert ("https://hot.example.com/dup", "duplicate count=600") in viola
 
 
-def test_percentile_stat_rules_fused_parity(spark):
-    """Percentile StatRules (p50 / p99 / approx_p95): valid in both
-    engines, identical verdicts fused vs unfused, and the fused plan
-    folds ALL non-mergeable metrics (exact distinct + percentiles) into
-    ONE extra global pass."""
+def test_percentile_stat_rules_exact_references(spark):
+    """Percentile StatRules (p50 / p99 / approx_p95) and exact distinct
+    in the fused plan: exact metrics equal numpy's type-7 percentile and
+    a Python set over the collected column; the KLL estimate lands within
+    rank error; an unknown metric raises at plan-build time."""
     from katydid_haskell_spark.operators.stats import StatRule
-    from katydid_haskell_spark.plans.checkplan import CheckPlan
-    from katydid_haskell_spark.plans.runner import run_plan
+    from katydid_haskell_spark.plans.checkplan import CheckPlan, run_plan_fused
 
     df = with_bucket(pages_df(spark, 800)).withColumn(
         "text_len", F.length("text"))
@@ -228,47 +244,37 @@ def test_percentile_stat_rules_fused_parity(spark):
         ],
         unique_rules=[], ref_rules=[], drift_rules=[],
     )
-    a = run_plan(df, plan, {}, {}, snapshot="s", fused=True)
-    b = run_plan(df, plan, {}, {}, snapshot="s", fused=False)
-    va = {(r.bucket_id, r.rule_id): (r["pass"], r.metric)
-          for r in a.verdicts.collect()}
-    vb = {(r.bucket_id, r.rule_id): (r["pass"], r.metric)
-          for r in b.verdicts.collect()}
-    assert set(va) == set(vb)
+    got = {(r.bucket_id, r.rule_id): (r["pass"], r.metric)
+           for r in run_plan(df, plan, {}, {}, snapshot="s")
+           .verdicts.collect()}
+    assert set(got) == {(-1, r.rule_id) for r in plan.stat_rules}
+    assert all(p for p, _ in got.values())
+
+    rows = df.select("text_len", "url").collect()
+    lens = np.array([r.text_len for r in rows if r.text_len is not None],
+                    dtype=np.float64)
+    assert got[(-1, "len_p50_floor")][1] == pytest.approx(
+        np.percentile(lens, 50), rel=1e-12)
+    assert got[(-1, "len_p99_cap")][1] == pytest.approx(
+        np.percentile(lens, 99), rel=1e-12)
+    assert got[(-1, "url_exact_distinct")][1] == len(
+        {r.url for r in rows if r.url is not None})
+
     # KLL's guarantee is RANK-space (~1.65% normalized rank error at the
     # default k), NOT value-space: where the value distribution jumps,
     # a within-spec rank wobble moves the VALUE arbitrarily far, so a
-    # relative-value tolerance here flakes by design (observed in-suite;
-    # KLL compaction is also randomized run-to-run).  Gate each engine's
-    # estimate by its empirical rank instead.
-    lens = sorted(r[0] for r in df.select("text_len").collect())
+    # relative-value tolerance here flakes by design (KLL compaction is
+    # also randomized run-to-run).  Gate the estimate by its empirical
+    # rank instead.
+    kll_v = got[(-1, "len_p95_approx")][1]
+    rank = np.count_nonzero(lens <= kll_v) / len(lens)
+    assert abs(rank - 0.95) < 0.05, (kll_v, rank)
 
-    def _rank(v):
-        import bisect
-        return bisect.bisect_right(lens, v) / len(lens)
-
-    for k in va:
-        if k[1] == "len_p95_approx":
-            # approx_p* is the second allowed estimator delta (after
-            # approx_distinct): fused merges per-bucket KLL partials,
-            # unfused builds one sketch — both must land within rank
-            # error of the true 0.95, but not necessarily on the same
-            # value
-            for est in (va[k][1], vb[k][1]):
-                assert abs(_rank(est) - 0.95) < 0.05, (
-                    f"rank({est}) = {_rank(est)}")
-            continue
-        assert va[k] == vb[k], f"{k}: fused={va[k]} unfused={vb[k]}"
-    assert all(p for p, _ in va.values())
-    # exact p50 really is the median of the column
-    med = df.agg(F.expr("percentile(text_len, 0.5)")).collect()[0][0]
-    assert va[(-1, "len_p50_floor")][1] == med
-    # KLL estimate lands within rank error of the exact p95: the
-    # empirical rank of the returned value stays inside [0.90, 1.0]
-    kll_v = va[(-1, "len_p95_approx")][1]
-    n_tot = df.count()
-    rank = df.where(F.col("text_len") <= kll_v).count() / n_tot
-    assert 0.90 <= rank <= 1.0, (kll_v, rank)
+    for metric in ("p150", "median"):
+        bad = CheckPlan(stat_rules=[StatRule("bad", "text_len", metric,
+                                             "le", 1.0)])
+        with pytest.raises(ValueError, match="unknown stat metric"):
+            run_plan_fused(df, bad, {}, {})
 
 
 def test_fused_plan_reads_rewritten_input_not_a_stale_cache(spark, tmp_path):
@@ -306,3 +312,143 @@ def test_fused_plan_reads_rewritten_input_not_a_stale_cache(spark, tmp_path):
     assert unique_verdict(["a", "b", "c"]) == (True, 0.0)
     assert unique_verdict(["a", "a", "b", "b"]) == (False, 2.0)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# ---------------------------------------------------------------------------
+# Checkpoint sinks: failure injection
+# ---------------------------------------------------------------------------
+
+
+def _suite(spark):
+    return (default_pages_plan(), {"lang_dim": lang_dim_df(spark)},
+            pages_baselines(spark, pages_df(spark, N, drifted=False)))
+
+
+def _rows(frame):
+    return sorted(map(tuple, frame.collect()), key=repr)
+
+
+@pytest.mark.parametrize("crash", ["manifest_lost", "commit_raises"])
+def test_rerun_after_crash_before_commit_writes_one_copy(
+        spark, pages, tmp_path, monkeypatch, crash):
+    """A crash after the sink write but before the manifest commit leaves
+    the snapshot uncommitted; the re-run must replace the snapshot's rows,
+    not append a second copy."""
+    from katydid_haskell_spark.plans import runner
+
+    ckpt = str(tmp_path / "ckpt")
+    plan, dims, baselines = _suite(spark)
+    expected = run_plan(pages, plan, dims, baselines, snapshot="s1")
+    n_verdicts = expected.verdicts.count()
+    n_violations = expected.violations.count()
+    if crash == "manifest_lost":
+        run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s1")
+        os.remove(os.path.join(ckpt, "manifest.json"))
+    else:
+        def boom(*args):
+            raise RuntimeError("injected crash before commit")
+
+        with monkeypatch.context() as m:
+            m.setattr(runner, "_commit_snapshot", boom)
+            with pytest.raises(RuntimeError, match="injected"):
+                run_resumable(pages, plan, ckpt, dims, baselines,
+                              snapshot="s1")
+    assert read_verdicts(spark, ckpt).count() == n_verdicts
+    run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s1")
+    assert read_verdicts(spark, ckpt).count() == n_verdicts
+    assert read_violations(spark, ckpt).count() == n_violations
+    assert list(committed_snapshots(ckpt)) == ["s1"]
+
+
+def test_crash_mid_commit_keeps_previous_manifest(spark, pages, tmp_path,
+                                                  monkeypatch):
+    """``os.replace`` failing inside the commit leaves the previous
+    manifest whole and parseable; the re-run completes the snapshot."""
+    ckpt = str(tmp_path / "ckpt")
+    plan, dims, baselines = _suite(spark)
+    run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s1")
+
+    def boom(*args):
+        raise OSError("injected crash in os.replace")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", boom)
+        with pytest.raises(OSError, match="injected"):
+            run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s2")
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        assert list(json.load(f)["snapshots"]) == ["s1"]
+    run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s2")
+    assert sorted(committed_snapshots(ckpt)) == ["s1", "s2"]
+    v = read_verdicts(spark, ckpt)
+    assert (v.where("snapshot = 's2'").count()
+            == v.where("snapshot = 's1'").count() > 0)
+
+
+def test_committed_snapshot_rerun_starts_no_spark_job(spark, pages, tmp_path):
+    """Re-running a committed snapshot returns from the manifest alone."""
+    ckpt = str(tmp_path / "ckpt")
+    plan, dims, baselines = _suite(spark)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("first-run", "fresh snapshot")
+        run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s1")
+        sc.setJobGroup("committed-rerun", "re-run of a committed snapshot")
+        run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("first-run")  # the probe sees jobs
+    assert tracker.getJobIdsForGroup("committed-rerun") == []
+
+
+def test_second_snapshot_leaves_first_untouched(spark, pages, tmp_path):
+    """Writing snapshot s2 into the same checkpoint replaces only its own
+    partition: every s1 verdict and violation row is unchanged."""
+    ckpt = str(tmp_path / "ckpt")
+    plan, dims, baselines = _suite(spark)
+    run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s1")
+    v1 = _rows(read_verdicts(spark, ckpt))
+    viol1 = _rows(read_violations(spark, ckpt))
+    run_resumable(pages.where("bucket < 8"), plan, ckpt, dims, baselines,
+                  snapshot="s2")
+    v = read_verdicts(spark, ckpt)
+    viol = read_violations(spark, ckpt)
+    assert _rows(v.where("snapshot = 's1'")) == v1
+    assert _rows(viol.where("snapshot = 's1'")) == viol1
+    assert v.where("snapshot = 's2'").count() > 0
+    assert viol.where("snapshot = 's2'").count() > 0
+
+
+def test_sink_reads_keep_a_numeric_snapshot_a_string(spark, pages, tmp_path):
+    """Partition inference would read snapshot=2024 back as an integer;
+    the typed sink reads keep the declared string column."""
+    ckpt = str(tmp_path / "ckpt")
+    plan, dims, baselines = _suite(spark)
+    run_resumable(pages, plan, ckpt, dims, baselines, snapshot="2024")
+    for frame in (read_verdicts(spark, ckpt), read_violations(spark, ckpt)):
+        assert dict(frame.dtypes)["snapshot"] == "string"
+        assert [r.snapshot for r in frame.select("snapshot").distinct()
+                .collect()] == ["2024"]
+        assert frame.where(F.col("snapshot") == "2024").count() > 0
+
+
+def test_submit_validation_resumes_without_doubling(spark, tmp_path,
+                                                     monkeypatch):
+    """scripts/submit_validation.py run twice with the same --checkpoint
+    and --snapshot writes the snapshot's verdicts once."""
+    import importlib.util
+
+    path = (Path(__file__).resolve().parents[1]
+            / "scripts" / "submit_validation.py")
+    spec = importlib.util.spec_from_file_location("submit_validation", path)
+    submit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(submit)
+    ckpt = str(tmp_path / "ckpt")
+    monkeypatch.setattr(sys, "argv", [
+        "submit_validation.py", "--n-synthetic", "500",
+        "--checkpoint", ckpt, "--snapshot", "snap-001"])
+    submit.main()
+    n_first = read_verdicts(spark, ckpt).count()
+    submit.main()
+    assert read_verdicts(spark, ckpt).count() == n_first > 0
