@@ -152,12 +152,15 @@ def _q_relapse_validate_rate(spark, sf_dir):
 
 
 def _q_relapse_props_json(spark, sf_dir):
-    # from_json fast path: field-anchored spec lowered to pure Catalyst.
+    # VariantType fast path (try_parse_json + lower_pred_root): the
+    # field-anchored spec lowered to pure Catalyst.  It runs only where
+    # try_parse_json keeps the last of duplicate keys, as the automaton does.
     # testdata parquet is one 128MB-bound scan partition — spread the
     # per-row variant work across cores (production tables arrive
     # pre-partitioned; same note as minhash_pairs)
     ev = _t(spark, sf_dir, "events").repartition(
         spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.variant.allowDuplicateKeys", "true")
     valid = validate_json_column(F.col("props"), ".k >= 50", fast=True)
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),

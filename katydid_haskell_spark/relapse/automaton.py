@@ -42,12 +42,17 @@ import zipimport
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .exprs import (BOOL, DOUBLE, INT, STRING, Const, Func, Var,
+                    eval_bool_or_false)
+from .labels import Label
+from .lower import (LoweringUnsupported, band, bnot, bor, lower_pred_root,
+                    to_col)
 from .parser import parse_grammar
-from .smart import compile_grammar
+from .smart import AND, CONTAINS, EMPTY, NODE, NOT, OR, REF, compile_grammar
 from .vpa import TableValidator
 
 # per-process (executor) cache: (spec source, user-lib key) → int-table
@@ -146,9 +151,9 @@ def validate_json_column(col: Column, spec_source: str, user_lib=None,
                          fast: bool = False) -> Column:
     """Boolean Column: JSON document column matches the Relapse spec.
 
-    ``fast=True`` attempts the **from_json fast path**: when the spec's
+    ``fast=True`` attempts the **VariantType fast path**: when the spec's
     shape allows it (see :func:`try_lower_json_spec`), the JSON column is
-    parsed by Spark's native JSON reader and the spec evaluated as pure
+    read by ``try_parse_json`` and the spec evaluated as pure
     Catalyst expressions — no Python.  Falls back to the automaton UDF when
     the shape doesn't qualify.
     """
@@ -159,32 +164,102 @@ def validate_json_column(col: Column, spec_source: str, user_lib=None,
     return json_matches_udf(spec_source, user_lib)(col)
 
 
+# the label types a JSON leaf can carry (Json.hs:39-52), each with the SQL
+# type ``try_variant_get`` reads it as
+_JSON_LEAF_TYPES = ((INT, "bigint"), (DOUBLE, "double"), (STRING, "string"),
+                    (BOOL, "boolean"))
+
+
+def _json_type_guard(fv: Column, ty: str) -> Column:
+    """Does the variant value ``fv`` carry a JSON label of type ``ty``:
+    integral numbers (including ``87.0`` and ``1e10``) are Int,
+    non-integral are Double."""
+    sv = F.schema_of_variant(fv)
+    if ty == INT:
+        dval = F.try_variant_get(fv, "$", "double")
+        return (
+            (sv == "BIGINT")
+            | sv.rlike(r"^DECIMAL\(\d+,0\)$")
+            | ((sv == "DOUBLE") & F.coalesce(dval == F.floor(dval), F.lit(False)))
+        )
+    if ty == DOUBLE:
+        dval = F.try_variant_get(fv, "$", "double")
+        return (
+            sv.rlike(r"^DECIMAL\(\d+,[1-9]\d*\)$")
+            | ((sv == "DOUBLE") & F.coalesce(dval != F.floor(dval), F.lit(False)))
+        )
+    if ty == STRING:
+        return sv == "STRING"
+    return sv == "BOOLEAN"
+
+
+def _lower_json_leaf(e, fv: Column):
+    """A leaf predicate over one variant field, as ``Node(P, Empty)`` sees
+    the field's child forest in the JSON encoding (``Json.hs:39-58``).
+
+    A scalar is one childless node labeled by its JSON type: one
+    :func:`.lower.lower_pred_root` branch per label type, each guarded by
+    that type.  An object or array is a forest of its members, and is one
+    childless node only when it has exactly one member whose value is
+    ``null``, ``{}`` or ``[]``; its label is then the member's String key
+    (a second case of the String branch) or the Int index 0 (a constant,
+    so the leaf is evaluated here by the VPA's own evaluator).  Absent and
+    null values are no node, so every leaf is False there.
+
+    The String branch is one CASE because Spark evaluates every
+    ``try_parse_json`` occurrence again (no common-subexpression
+    elimination inside these conditionals): as a CASE, a scalar string
+    reads the variant no more often than without the key case."""
+    out = False
+    for ty, sql_ty in _JSON_LEAF_TYPES:
+        pred = lower_pred_root(e, F.try_variant_get(fv, "$", sql_ty), ty)
+        if pred is False:  # a leaf False for this type needs no guard
+            continue
+        guard = F.coalesce(_json_type_guard(fv, ty), F.lit(False))
+        if ty != STRING:
+            out = bor(out, band(guard, pred))
+            continue
+        members = F.try_variant_get(fv, "$", "map<string,variant>")
+        lone_key = (F.size(members) == 1) & F.to_json(
+            F.get(F.map_values(members), 0)).isin("null", "{}", "[]")
+        key_pred = lower_pred_root(e, F.get(F.map_keys(members), 0), STRING)
+        out = bor(out, F.coalesce(
+            F.when(guard, to_col(pred)).when(lone_key, to_col(key_pred)),
+            F.lit(False)))
+    if eval_bool_or_false(e, Label(INT, 0)):
+        out = bor(out, F.coalesce(
+            F.to_json(fv).isin("[null]", "[{}]", "[[]]"), F.lit(False)))
+    return out
+
+
 def try_lower_json_spec(col: Column, spec_source: str, user_lib=None):
     """VariantType fast path for field-anchored specs.
 
     Qualifying shape: And/Or/Not compositions of
     ``Contains(Node(<const field name>, <non-nullable leaf predicate>))``
     — i.e. ``.field <op> value`` forms — including NESTED chains
-    (``.a: .b == 1`` → variant path ``$.a.b``).  The document is parsed
-    once with
-    ``try_parse_json`` (Spark 4 VariantType); each field predicate is
-    lowered with **runtime type guards** derived from
-    ``schema_of_variant``, reproducing the reference's JSON label rules
-    exactly (``Json.hs:39-52``): integral numbers (including ``87.0`` and
-    ``1e10``) are Int, non-integral are Double, strings never coerce to
-    numbers, absent fields and JSON nulls never satisfy a non-nullable
-    child, malformed documents match nothing.
+    (``.a: .b == 1`` → variant path ``$.a.b``).  The document is read
+    with ``try_parse_json`` (Spark 4 VariantType); each leaf predicate
+    is lowered by :func:`.lower.lower_pred_root`, the same lowering as the
+    Catalyst path, once per JSON label type under a **runtime type guard**
+    derived from ``schema_of_variant`` (:func:`_lower_json_leaf`).  That
+    reproduces the reference's JSON label rules (``Json.hs:39-52``):
+    integral numbers are Int, non-integral are Double, strings never
+    coerce to numbers, absent fields and JSON nulls never satisfy a
+    non-nullable child, malformed documents match nothing.
+
+    Duplicate object keys: ``try_parse_json`` returns NULL for them unless
+    ``spark.sql.variant.allowDuplicateKeys`` is true, and then the last key
+    wins, as in the automaton's JSON decoder.  ``session.get_spark`` sets
+    it; in a session without it this returns None.
 
     Returns None when the spec doesn't qualify (the automaton UDF runs
     instead).
     """
-    from pyspark.sql import functions as F
-
-    from .exprs import BOOL, DOUBLE, INT, STRING, UINT, Const, Func, Var
-    from .lower import band, bnot, bor, to_col
-    from .smart import AND, CONTAINS, EMPTY, NODE, NOT, OR, REF
-
     g = compile_grammar(parse_grammar(spec_source, user_lib))
+    if SparkSession.active().conf.get(
+            "spark.sql.variant.allowDuplicateKeys", "false").lower() != "true":
+        return None
 
     def const_name(e):
         if (isinstance(e, Func) and e.name == "eq" and len(e.args) == 2
@@ -199,114 +274,8 @@ def try_lower_json_spec(col: Column, spec_source: str, user_lib=None):
         # escape not needed for plain identifiers; reject exotic names
         for name in path:
             if not name.replace("_", "a").isalnum():
-                raise _NoFast()
+                raise LoweringUnsupported(f"field name {name!r}")
         return F.try_variant_get(doc, "$." + ".".join(path), "variant")
-
-    class _NoFast(Exception):
-        pass
-
-    def type_guard(fv, ty: str):
-        sv = F.schema_of_variant(fv)
-        if ty in (INT, UINT):
-            dval = F.try_variant_get(fv, "$", "double")
-            return (
-                (sv == "BIGINT")
-                | sv.rlike(r"^DECIMAL\(\d+,0\)$")
-                | ((sv == "DOUBLE") & F.coalesce(dval == F.floor(dval), F.lit(False)))
-            )
-        if ty == DOUBLE:
-            dval = F.try_variant_get(fv, "$", "double")
-            return (
-                sv.rlike(r"^DECIMAL\(\d+,[1-9]\d*\)$")
-                | ((sv == "DOUBLE") & F.coalesce(dval != F.floor(dval), F.lit(False)))
-            )
-        if ty == STRING:
-            return sv == "STRING"
-        if ty == BOOL:
-            return sv == "BOOLEAN"
-        raise _NoFast()
-
-    def typed_value(fv, ty: str):
-        if ty in (INT, UINT):
-            return F.try_variant_get(fv, "$", "bigint")
-        if ty == DOUBLE:
-            return F.try_variant_get(fv, "$", "double")
-        if ty == STRING:
-            return F.try_variant_get(fv, "$", "string")
-        if ty == BOOL:
-            return F.try_variant_get(fv, "$", "boolean")
-        raise _NoFast()
-
-    def lower_leaf(e, fv):
-        """Boolean expr over one variant field — mirrors exprs eval
-        semantics with runtime type dispatch."""
-        if isinstance(e, Const) and e.ty == BOOL:
-            return bool(e.value)
-        if isinstance(e, Var):
-            if e.ty != BOOL:
-                raise _NoFast()
-            return band(
-                F.coalesce(type_guard(fv, BOOL), F.lit(False)),
-                F.coalesce(typed_value(fv, BOOL), F.lit(False)),
-            )
-        if not isinstance(e, Func):
-            raise _NoFast()
-        name = e.name
-        if name == "not":
-            return bnot(lower_leaf(e.args[0], fv))
-        if name == "and":
-            return band(lower_leaf(e.args[0], fv), lower_leaf(e.args[1], fv))
-        if name == "or":
-            return bor(lower_leaf(e.args[0], fv), lower_leaf(e.args[1], fv))
-        if name == "type":
-            ty = e.args[0].ty
-            return F.coalesce(type_guard(fv, ty), F.lit(False))
-
-        def var_const(args):
-            if isinstance(args[0], Var) and isinstance(args[1], Const):
-                return args[0], args[1], False
-            if isinstance(args[1], Var) and isinstance(args[0], Const):
-                return args[1], args[0], True
-            raise _NoFast()
-
-        if name in ("eq", "ne", "ge", "gt", "le", "lt"):
-            var, cst, flipped = var_const(e.args)
-            if var.ty != cst.ty:
-                return False
-            guard = F.coalesce(type_guard(fv, var.ty), F.lit(False))
-            v = typed_value(fv, var.ty)
-            c = F.lit(cst.value)
-            a, b = (c, v) if flipped else (v, c)
-            cmp = {"eq": a == b, "ne": a != b, "ge": a >= b,
-                   "gt": a > b, "le": a <= b, "lt": a < b}[name]
-            return band(guard, F.coalesce(cmp, F.lit(False)))
-        if name in ("hasPrefix", "hasSuffix", "regex", "contains"):
-            guard = F.coalesce(type_guard(fv, STRING), F.lit(False))
-            v = typed_value(fv, STRING)
-            if name == "contains" and e.args[1].ty.startswith("[]"):
-                # membership: list of constants
-                if not isinstance(e.args[1], Const):
-                    raise _NoFast()
-                elem_ty = e.args[1].ty[2:]
-                if not isinstance(e.args[0], Var) or e.args[0].ty != elem_ty:
-                    raise _NoFast()
-                guard = F.coalesce(type_guard(fv, elem_ty), F.lit(False))
-                vv = typed_value(fv, elem_ty)
-                return band(guard,
-                            F.coalesce(vv.isin(*list(e.args[1].value)),
-                                       F.lit(False)))
-            if not (isinstance(e.args[0], Var) and isinstance(e.args[1], Const)):
-                if name == "regex" and isinstance(e.args[0], Const) and \
-                        isinstance(e.args[1], Var):
-                    return band(guard, F.coalesce(
-                        v.rlike(str(e.args[0].value)), F.lit(False)))
-                raise _NoFast()
-            c = F.lit(e.args[1].value)
-            op = {"hasPrefix": lambda: v.startswith(c),
-                  "hasSuffix": lambda: v.endswith(c),
-                  "contains": lambda: v.contains(c)}[name]()
-            return band(guard, F.coalesce(op, F.lit(False)))
-        raise _NoFast()
 
     def lower_pattern(p):
         k = p.kind
@@ -332,11 +301,9 @@ def try_lower_json_spec(col: Column, spec_source: str, user_lib=None):
             cur = p
             while True:
                 inner = cur.pats[0]
-                if inner.kind != NODE:
-                    raise _NoFast()
-                name = const_name(inner.expr)
+                name = const_name(inner.expr) if inner.kind == NODE else None
                 if name is None:
-                    raise _NoFast()
+                    raise LoweringUnsupported("Contains of a non-field node")
                 path.append(name)
                 child = inner.pats[0]
                 if child.kind == CONTAINS:
@@ -344,15 +311,15 @@ def try_lower_json_spec(col: Column, spec_source: str, user_lib=None):
                     continue
                 if (child.kind != NODE or child.nullable
                         or child.pats[0].kind != EMPTY):
-                    raise _NoFast()
-                return lower_leaf(child.expr, field_variant(path))
+                    raise LoweringUnsupported("field child is not one leaf")
+                return _lower_json_leaf(child.expr, field_variant(path))
         if k == REF:
             return lower_pattern(g.lookup(p.ref))
-        raise _NoFast()
+        raise LoweringUnsupported(f"JSON pattern shape: {k}")
 
     try:
         cond = lower_pattern(g.main)
-    except _NoFast:
+    except LoweringUnsupported:
         return None
     # malformed / NULL documents match nothing (the automaton returns False)
     return F.when(doc.isNull(), F.lit(False)).otherwise(to_col(cond))

@@ -176,16 +176,6 @@ def scalar_column(col: Column, dt: T.DataType) -> Column:
 # Expression lowering (leaf predicates → Columns)
 # ---------------------------------------------------------------------------
 
-# extension point: user function name -> (args, value_lowerer) -> Column
-COLUMN_UDFS: Dict[str, object] = {}
-
-
-def register_column_lowering(name: str, fn) -> None:
-    """Register a Catalyst lowering for a user-defined function:
-    ``fn(lowered_args: list[Column|const]) -> Column``."""
-    COLUMN_UDFS[name] = fn
-
-
 def _lower_val(e: Expr, col: Column, ty: str):
     """Lower a value expression. Returns (value, is_column). Raises
     StaticEvalError on a type mismatch (the compile-time EvalError)."""
@@ -221,9 +211,6 @@ def _lower_val(e: Expr, col: Column, ty: str):
         if i < 0 or i >= len(xs):
             raise StaticEvalError("elem index out of range")
         return xs[i], False
-    if name in COLUMN_UDFS:
-        args = [_lower_val(a, col, ty)[0] for a in e.args]
-        return COLUMN_UDFS[name](args), True
     if name in ("eq", "ne", "ge", "gt", "le", "lt", "contains", "hasPrefix",
                 "hasSuffix", "regex", "not", "and", "or", "type"):
         # bool-valued: lower as predicate
@@ -329,9 +316,6 @@ def lower_pred(e: Expr, col: Column, ty: str) -> BExpr:
         # the value node exists (non-null guarded at field level), so this
         # is purely a static type check
         return e.args[0].ty == ty
-    if name in COLUMN_UDFS:
-        args = [_lower_val(a, col, ty)[0] for a in e.args]
-        return F.coalesce(COLUMN_UDFS[name](args).cast("boolean"), F.lit(False))
     raise LoweringUnsupported(f"no Catalyst lowering for function {name}")
 
 

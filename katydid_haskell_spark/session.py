@@ -46,5 +46,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # try_parse_json keeps the last of duplicate keys, as the JSON
+        # decoders of the automaton path do, instead of returning NULL
+        .config("spark.sql.variant.allowDuplicateKeys", "true")
     )
     return builder.getOrCreate()
