@@ -88,6 +88,190 @@ def _relapse_col(spec: str, schema) -> F.Column:
 
 
 # ---------------------------------------------------------------------------
+# construct-in-query payloads
+#
+# The codec, XML, protobuf, WARC and streaming entries build their payload
+# inside the query from table columns, and the oracle re-derives the
+# verdict from the raw columns.  Every parameter that both sides need is
+# declared ONCE below: the entry reads it and the oracle f-string
+# interpolates it.  UDF closures read these module constants by value
+# (cloudpickle copies them); they never call entry-module functions, which
+# an executor need not be able to import.
+# ---------------------------------------------------------------------------
+
+# xml_validate / protobuf_validate / stream_doc_violations
+_LANG_ALLOW = ("en", "de", "fr", "es")
+_LANG_ALLOW_SPEC = "[]string{" + ",".join(f'"{x}"' for x in _LANG_ALLOW) + "}"
+_LANG_ALLOW_SQL = "(" + ",".join(f"'{x}'" for x in _LANG_ALLOW) + ")"
+_MIN_CHARS = 500
+
+# multimodal_bmp / multimodal_png: byte i of doc d's flat (y, x, c) pixel
+# array is (d*MUL + STEP*i) % 256
+_BMP_W, _BMP_H, _BMP_MUL, _BMP_STEP = 10, 7, 31, 7
+_PNG_W, _PNG_H, _PNG_C, _PNG_MUL, _PNG_STEP = 6, 5, 4, 17, 3
+
+# multimodal_wav: sample i of doc d is (d*MUL + STEP*i) % 65536 - 32768
+_AUDIO_RATE = 16000
+_WAV_N, _WAV_MUL, _WAV_STEP = 256, 13, 5
+# multimodal_spectrogram: N-sample square wave, amplitude AMP + d % AMP_MOD,
+# period P0 << (d % P_MOD).  P_MOD divides AMP_MOD, so the payload is a
+# function of d % AMP_MOD; every period divides N, so dominant_bin == N/p.
+_SPEC_N, _SPEC_AMP, _SPEC_AMP_MOD, _SPEC_P0, _SPEC_P_MOD = (
+    2048, 1000, 100, 8, 5)
+
+# JPEG family (multimodal_jpeg, _jpeg_color, _jpeg_progressive, _video):
+# 8x8 blocks of constant EVEN value 2*(x % 128) are DC-only, so decode ==
+# input, and every payload is a function of d % 128.
+# luma block (by, bx): 2*((d*Y_MUL + by*Y_BY + bx*Y_BX) % 128)
+_Y_MUL, _Y_BY, _Y_BX = 7, 5, 3
+# (rows, cols) of luma blocks: multimodal_jpeg's grayscale image and the
+# colour entries' Y plane.  The colour Y plane has two block rows, so its
+# 4:2:0 chroma planes are one row of CHROMA_MBS blocks (one per 16x16
+# macroblock).
+_JPEG_BLOCKS = (2, 2)
+_YCBCR_BLOCKS = (2, 4)
+_CHROMA_MBS = _YCBCR_BLOCKS[1] // 2
+# chroma macroblock mx: 2*((d*MUL + mx*MX + OFF) % 128)
+_CB_MUL, _CB_MX, _CB_OFF = 11, 9, 5
+_CR_MUL, _CR_MX, _CR_OFF = 13, 3, 1
+# video: FRAMES frames of one row of VIDEO_BX luma blocks, frame f adds
+# f*F_STEP to d*Y_MUL; every EVERY-th frame is decoded
+_VIDEO_BX, _VIDEO_FRAMES, _VIDEO_EVERY, _VIDEO_F_STEP = 2, 6, 2, 19
+
+# image_resize_real / media_curation_full: GRID x GRID blocks of 8x8,
+# v(by, bx) = (c*MUL + by*BY + bx*BX) % 256, resized to OUT x OUT (GRID
+# divides OUT, so each output pixel's input region lies inside one block
+# and the pixel is that block's value exactly)
+_BLK_MUL, _BLK_BY, _BLK_BX, _BLK_GRID, _RESIZE_OUT = 29, 17, 13, 4, 8
+# image_phash_neardup / media_curation_full: docs below CAP, one image per
+# group d % GROUPS
+_PHASH_CAP, _PHASH_GROUPS = 240, 12
+
+# multimodal_gif: FRAMES frames of H x W, palette entry i channel k =
+# (a_k*i + b_k) % 256, index(y, x) = (d + f*F_STEP + y*Y_STEP + x) % COLORS,
+# frame f shown DELAY + f*DELAY_STEP centiseconds
+_GIF_H, _GIF_W, _GIF_COLORS, _GIF_FRAMES = 12, 20, 16, 2
+_GIF_F_STEP, _GIF_Y_STEP, _GIF_DELAY, _GIF_DELAY_STEP = 5, 3, 3, 6
+_GIF_PAL = ((17, 3), (29, 7), (43, 11))
+
+# warc_records / stream_warc: a warcinfo record with body TEXT + CRLF and
+# a response record for _DOC_URI + doc_id whose body is HEAD + the text
+_WARCINFO_TEXT = "software: katydid-spark 1.0"
+_HTTP_HEAD = (b"HTTP/1.1 200 OK\r\n"
+              b"Content-Type: text/plain; charset=utf-8\r\n\r\n")
+_DOC_URI = "https://corpus.example/doc/"
+
+
+def _block_pos(w: int) -> tuple[int, int]:
+    """(row, base) such that the flat pixel indices of the 8x8 block
+    (by, bx) of a w-wide plane sum to row*by + 512*bx + base."""
+    return 512 * w, 224 * w + 224
+
+
+def _residue_payload(ids: F.Column, residue: int,
+                     build: Callable[[int], bytes]) -> F.Column:
+    """Binary payload column: ``build(c)`` runs once per residue
+    ``c = id % residue`` in each Arrow batch and its bytes serve every
+    row of that class.  ``build`` sees only the residue, so a payload
+    cannot depend on anything the cache key leaves out.  The decodes
+    under test stay per row; nothing is kept across batches."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("binary")
+    def payload(key: pd.Series) -> pd.Series:
+        cache: dict = {}
+        out = []
+        for c in (key % residue).tolist():
+            if c not in cache:
+                cache[c] = build(c)
+            out.append(cache[c])
+        return pd.Series(out)
+
+    return payload(ids)
+
+
+def _ycbcr_payload(ids: F.Column, encode) -> F.Column:
+    """YCbCr planes of the JPEG colour entries, encoded by
+    ``encode(y, cb, cr)``: luma constant per 8x8 block (_YCBCR_BLOCKS),
+    chroma constant per 16x16 macroblock (_CHROMA_MBS), stored 4:2:0 so
+    the chroma planes are block-constant too."""
+    import numpy as np
+
+    ycoef = (np.arange(_YCBCR_BLOCKS[0], dtype=np.int64)[:, None] * _Y_BY
+             + np.arange(_YCBCR_BLOCKS[1], dtype=np.int64)[None, :] * _Y_BX)
+    mxs = np.arange(_CHROMA_MBS, dtype=np.int64)
+    ones8 = np.ones((8, 8), dtype=np.int64)
+
+    def build(c):
+        y = np.kron(2 * ((c * _Y_MUL + ycoef) % 128), ones8)
+        cb = np.kron((2 * ((c * _CB_MUL + mxs * _CB_MX + _CB_OFF) % 128))
+                     [None, :], ones8)
+        cr = np.kron((2 * ((c * _CR_MUL + mxs * _CR_MX + _CR_OFF) % 128))
+                     [None, :], ones8)
+        return encode(y.astype(np.uint8), cb.astype(np.uint8),
+                      cr.astype(np.uint8))
+
+    return _residue_payload(ids, 128, build)
+
+
+def _warc_payload(doc_id: F.Column, text: F.Column) -> F.Column:
+    """Per row a two-record WARC file (per-record gzip members): the
+    constant warcinfo record and a response record wrapping the text in
+    an HTTP/1.1 200 block.  A NULL text is the empty body."""
+    from pyspark.sql.functions import pandas_udf
+
+    from katydid_haskell_spark.operators import warc as wr
+
+    @pandas_udf("binary")
+    def make_warc(doc_id: pd.Series, text: pd.Series) -> pd.Series:
+        return pd.Series([wr.build_warc([
+            {"type": "warcinfo", "body": _WARCINFO_TEXT + "\r\n"},
+            {"type": "response", "uri": f"{_DOC_URI}{int(d)}",
+             "date": "2026-01-01T00:00:00Z",
+             "body": _HTTP_HEAD + t.encode("utf-8")},
+        ]) for d, t in zip(doc_id, text)])
+
+    return make_warc(doc_id, F.coalesce(text, F.lit("")))
+
+
+def _table_stream(spark: SparkSession, sf_dir: str,
+                  table: str) -> DataFrame:
+    """File stream over one table of ``sf_dir``.  The file source reads
+    a DIRECTORY and each table is a single parquet file, so the table is
+    exposed through a stable symlink directory named after the table's
+    absolute path.  A link found there that points elsewhere is
+    replaced."""
+    import hashlib
+    import os
+    import tempfile
+    import uuid
+
+    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    tag = hashlib.md5(src.encode()).hexdigest()[:10]
+    d = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}")
+    link = os.path.join(d, f"{table}.parquet")
+    os.makedirs(d, exist_ok=True)
+    if not (os.path.islink(link) and os.readlink(link) == src):
+        # hidden name: the file source skips it if it lists d meanwhile
+        tmp = os.path.join(d, f".{table}.{uuid.uuid4().hex}")
+        os.symlink(src, tmp)
+        os.replace(tmp, link)
+    return spark.readStream.schema(spark.read.parquet(src).schema).parquet(d)
+
+
+def _drain(out: DataFrame, mode: str = "append") -> DataFrame:
+    """Run a stream to completion (one availableNow pass) into a fresh
+    memory sink and return the sink's table."""
+    import uuid
+
+    name = "spark_graft_sink_" + uuid.uuid4().hex[:12]
+    q = (out.writeStream.format("memory").queryName(name)
+         .outputMode(mode).trigger(availableNow=True).start())
+    q.awaitTermination()
+    return out.sparkSession.table(name)
+
+
+# ---------------------------------------------------------------------------
 # flagship
 # ---------------------------------------------------------------------------
 
@@ -190,32 +374,15 @@ def _q_stream_dedup(spark, sf_dir):
     md5(normalized text) — identical for every member of a duplicate
     group — making the output the deterministic SET of distinct
     normalized texts; the oracle is a plain SELECT DISTINCT."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
     from katydid_haskell_spark.streaming.stream_checks import (
         stream_dedup_normalized,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
-    sch = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (spark.readStream.schema(sch).parquet(d)
-              .withColumn("ts", F.timestamp_seconds(
-                  F.lit(1700000000) + F.col("doc_id"))))
+    stream = _table_stream(spark, sf_dir, "documents").withColumn(
+        "ts", F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id")))
     out = stream_dedup_normalized(stream, "text", "ts",
                                   watermark="10 minutes")
-    name = "stream_dedup_" + uuid.uuid4().hex[:12]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(out).select(
         F.md5(tx.normalize_ws(F.col("text"))).alias("fp"))
 
 
@@ -226,28 +393,12 @@ def _q_stream_route(spark, sf_dir):
     closed forms as the batch split_assign/shard_shuffle (streaming ==
     batch parity by construction).  The oracle re-derives bucket,
     split and shard from the raw table."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
     from katydid_haskell_spark.streaming.stream_checks import stream_route
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
-    sch = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(sch).parquet(d)
-    out = stream_route(stream, "doc_id", seed="split-v1",
+    out = stream_route(_table_stream(spark, sf_dir, "documents"),
+                       "doc_id", seed="split-v1",
                        n_shards=16, shard_seed="shuffle-v1")
-    name = "stream_route_" + uuid.uuid4().hex[:12]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(out)
 
 
 def _q_sampled_validation(spark, sf_dir):
@@ -552,37 +703,18 @@ def _q_stream_doc_violations(spark, sf_dir):
     availableNow pass.  The RESULT is deterministic and batch-equal, so
     the streaming machinery itself sits under the DuckDB value-hash gate
     (the kill/restart and watermark behaviors stay in test_streaming)."""
-    import uuid
-
     from katydid_haskell_spark.plans.checkplan import CheckPlan, RowRule
     from katydid_haskell_spark.streaming.stream_checks import (
         stream_violations,
     )
 
-    import hashlib
-    import os
-    import tempfile
-
-    # the file stream source requires a DIRECTORY; the testdata table is
-    # a single parquet file — expose it through a stable symlink dir
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
-    sch = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(sch).parquet(d)
     plan = CheckPlan(row_rules=[
         RowRule("text_nonempty", ".text: -> gt(length($string), 0)"),
-        RowRule("lang_known", '.lang *= []string{"en","de","fr","es"}'),
+        RowRule("lang_known", f".lang *= {_LANG_ALLOW_SPEC}"),
     ])
-    out = stream_violations(stream, plan, key_col="doc_id")
-    name = "stream_viol_" + uuid.uuid4().hex[:12]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name).select(
+    out = stream_violations(_table_stream(spark, sf_dir, "documents"),
+                            plan, key_col="doc_id")
+    return _drain(out).select(
         F.col("url").cast("bigint").alias("doc_id"), "rule_id")
 
 
@@ -595,28 +727,16 @@ def _q_stream_windowed_verdicts(spark, sf_dir):
     availableNow pass.  Complete mode emits every window, so the result
     is batch-equal and the oracle is a plain hour-bucket GROUP BY; the
     watermark/late-data behaviors stay in test_streaming."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
     from katydid_haskell_spark.plans.checkplan import CheckPlan, RowRule
     from katydid_haskell_spark.streaming.stream_checks import (
         windowed_verdicts,
     )
 
-    tag = hashlib.md5((sf_dir + ":events").encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    sch = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(sch).parquet(d)
     # parquet ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP.  The
     # session timezone is UTC (session.py), so the cast preserves wall
     # clock and hour windows line up with DuckDB's naive DATE_TRUNC.
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _table_stream(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp"))
     plan = CheckPlan(row_rules=[
         RowRule("value_pos", ".value: -> gt($double, double(0.0))"),
         RowRule("type_known",
@@ -624,11 +744,7 @@ def _q_stream_windowed_verdicts(spark, sf_dir):
     ])
     out = windowed_verdicts(stream, plan, ts_col="ts", window="1 hour",
                             watermark="2 hours")
-    name = "stream_win_" + uuid.uuid4().hex[:12]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(out, "complete").select(
         "window_start", "window_end", "rows_checked",
         "pass_value_pos", "pass_type_known")
 
@@ -641,32 +757,16 @@ def _q_stream_monotonic(spark, sf_dir):
     (user_id, prev_seq = running max, seq).  sort_within_batch makes the
     single availableNow batch exactly batch-equal to a running-max
     window, which is the oracle's form."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
     from katydid_haskell_spark.streaming.stream_checks import (
         monotonic_check,
     )
 
-    tag = hashlib.md5((sf_dir + ":events").encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    sch = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (spark.readStream.schema(sch).parquet(d)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
+    stream = _table_stream(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp"))
     out = monotonic_check(stream, key_col="user_id", seq_col="event_id",
                           ts_col="ts", watermark="2 hours",
                           sort_within_batch=True)
-    name = "stream_mono_" + uuid.uuid4().hex[:12]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name).select("user_id", "prev_seq", "seq")
+    return _drain(out).select("user_id", "prev_seq", "seq")
 
 
 def _q_xml_validate(spark, sf_dir):
@@ -683,7 +783,7 @@ def _q_xml_validate(spark, sf_dir):
         F.lit("</lang><n>"), F.col("n_chars").cast("string"),
         F.lit("</n></doc>"),
     )
-    spec = 'doc: {lang: *= []string{"en","de","fr","es"}; n: >= 500}'
+    spec = f"doc: {{lang: *= {_LANG_ALLOW_SPEC}; n: >= {_MIN_CHARS}}}"
     return docs.select(
         "doc_id", validate_xml_column(xml, spec).alias("ok"))
 
@@ -712,8 +812,7 @@ def _q_protobuf_validate(spark, sf_dir):
             out.append(b)
         return pd.Series(out)
 
-    spec = ('(.lang *= []string{"en","de","fr","es"} '
-            '& .n_chars >= 500)')
+    spec = f"(.lang *= {_LANG_ALLOW_SPEC} & .n_chars >= {_MIN_CHARS})"
     payload = enc(F.col("lang"), F.col("n_chars"))
     ok = pb.validate_protobuf_column(payload, spec, desc, "Doc")
     return docs.select("doc_id", ok.alias("ok"))
@@ -1266,35 +1365,21 @@ def _q_multimodal_bmp(spark, sf_dir):
     pos_checksum is position-weighted, so any layout mistake in the
     encode/decode pair (row flip, channel order, padding) breaks the
     hash even where the permutation-invariant sums agree.  The oracle
-    re-derives all three stats with the same closed-form integer math."""
+    re-derives all three stats with the same closed-form integer math
+    (parameters: the _BMP_* constants)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
-    W, H = 10, 7
+    idx = _BMP_STEP * np.arange(_BMP_W * _BMP_H * 3, dtype=np.int64)
 
-    @pandas_udf("binary")
-    def make_bmp(doc_id: pd.Series) -> pd.Series:
-        n = W * H * 3
-        idx7 = 7 * np.arange(n, dtype=np.int64)
-        # payload depends only on doc_id % 256 — per-batch construct
-        # cache (the image_phash_neardup pattern); decode stays per-doc
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            c = int(d) % 256
-            p = cache.get(c)
-            if p is None:
-                p = cache[c] = mm.encode_bmp(
-                    ((c * 31 + idx7) % 256)
-                    .astype(np.uint8).reshape(H, W, 3))
-            out.append(p)
-        return pd.Series(out)
+    def build(c):
+        return mm.encode_bmp(((c * _BMP_MUL + idx) % 256)
+                             .astype(np.uint8).reshape(_BMP_H, _BMP_W, 3))
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_bmp(F.col("doc_id")).alias("payload"))
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), 256, build).alias("payload"))
     return mm.bmp_pixel_stats(media)
 
 
@@ -1308,42 +1393,28 @@ def _q_multimodal_png(spark, sf_dir):
     position-weighted over the decoded (y, x, channel) order, so a
     filter, palette or channel mistake breaks the hash even where the
     permutation-invariant sums agree.  The oracle re-derives all stats
-    with the same closed-form integer math — the compression round-trip
-    must be exact for the hashes to meet."""
+    with the same closed-form integer math (the _PNG_* constants) — the
+    compression round-trip must be exact for the hashes to meet."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
-    W, H, C = 6, 5, 4
+    idx = _PNG_STEP * np.arange(_PNG_W * _PNG_H * _PNG_C, dtype=np.int64)
 
-    @pandas_udf("binary")
-    def make_png(doc_id: pd.Series) -> pd.Series:
-        n = W * H * C
-        idx3 = 3 * np.arange(n, dtype=np.int64)
-        # payload depends only on doc_id % 256 — per-batch construct
-        # cache; the DEFLATE round-trip under test stays per-doc
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            c = int(d) % 256
-            p = cache.get(c)
-            if p is None:
-                p = cache[c] = mm.encode_png(
-                    ((c * 17 + idx3) % 256)
-                    .astype(np.uint8).reshape(H, W, C))
-            out.append(p)
-        return pd.Series(out)
+    def build(c):
+        return mm.encode_png(((c * _PNG_MUL + idx) % 256)
+                             .astype(np.uint8)
+                             .reshape(_PNG_H, _PNG_W, _PNG_C))
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_png(F.col("doc_id")).alias("payload"))
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), 256, build).alias("payload"))
     return mm.png_pixel_stats(media)
 
 
 def _q_multimodal_jpeg(spark, sf_dir):
-    """REAL lossy-format codec under the value-hash gate: a 16x16
-    grayscale image of four 8x8 blocks, each a constant EVEN value
+    """REAL lossy-format codec under the value-hash gate: a grayscale
+    image of _JPEG_BLOCKS 8x8 blocks, each a constant EVEN value
     derived from doc_id, is encoded to an actual baseline JPEG (forward
     DCT, Annex-K luminance quantization, canonical Huffman tables
     carried in DHT, 0xFF-stuffed entropy stream) and decoded back by
@@ -1351,134 +1422,61 @@ def _q_multimodal_jpeg(spark, sf_dir):
     only a DC coefficient, and q[0,0]=16 makes the DC round-trip
     128 + 2*round((v-128)/2) = v for even v — the decode is EXACTLY the
     input by construction, so the oracle computes the stats in closed
-    form from the block values (block params: v = 2*((doc_id*7 + by*5 +
-    bx*3) % 128); flat-index block sum 8192*by + 512*bx + 3808 — change
-    the UDF and the SQL together)."""
+    form from the block values (the _Y_* luma block constants)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
-    coef = np.array([[0, 3], [5, 8]], dtype=np.int64)  # by*5 + bx*3
+    coef = (np.arange(_JPEG_BLOCKS[0], dtype=np.int64)[:, None] * _Y_BY
+            + np.arange(_JPEG_BLOCKS[1], dtype=np.int64)[None, :] * _Y_BX)
+    ones8 = np.ones((8, 8), dtype=np.int64)
 
-    @pandas_udf("binary")
-    def make_jpeg(doc_id: pd.Series) -> pd.Series:
-        ones = np.ones((8, 8), dtype=np.int64)
-        # payload depends only on doc_id % 128 — per-batch construct
-        # cache; the DCT/entropy decode under test stays per-doc
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            c = int(d) % 128
-            p = cache.get(c)
-            if p is None:
-                p = cache[c] = mm.encode_jpeg(np.kron(
-                    2 * ((c * 7 + coef) % 128), ones).astype(np.uint8))
-            out.append(p)
-        return pd.Series(out)
+    def build(c):
+        return mm.encode_jpeg(np.kron(2 * ((c * _Y_MUL + coef) % 128),
+                                      ones8).astype(np.uint8))
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_jpeg(F.col("doc_id")).alias("payload"))
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), 128, build).alias("payload"))
     return mm.jpeg_pixel_stats(media)
 
 
 def _q_multimodal_jpeg_color(spark, sf_dir):
-    """COLOR baseline JPEG under the value-hash gate: a 16x32 image is
-    built directly in YCbCr planes — luma constant per 8x8 block,
-    chroma constant per 16x16 macroblock (so the 4:2:0 stored planes
-    are block-constant too) — encoded as a real 3-component interleaved
-    4:2:0 JPEG with restart_interval=1 (DRI + RST0/RST1 + per-restart
-    DC-predictor resets ride the oracled path), and decoded back by the
-    generic baseline decoder.  Block-constant EVEN values are DC-only
-    and q00=16 makes plane decode EXACT (the multimodal_jpeg
-    invariant), so the oracle computes every stat in closed form.
-    Params (change the UDF and the SQL together): y = 2*((doc_id*7 +
-    by*5 + bx*3) % 128) over 2x4 blocks; cb = 2*((doc_id*11 + mx*9 +
-    5) % 128), cr = 2*((doc_id*13 + mx*3 + 1) % 128) over 1x2
-    macroblocks; flat-index sums 16384*by + 512*bx + 7392 (Y, W=32)
-    and 512*mx + 3808 (chroma, W=16)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
+    """COLOR baseline JPEG under the value-hash gate: the _ycbcr_payload
+    planes encoded as a real 3-component interleaved 4:2:0 JPEG with
+    restart_interval=1 (DRI + RST0/RST1 + per-restart DC-predictor
+    resets ride the oracled path), and decoded back by the generic
+    baseline decoder.  Block-constant EVEN values are DC-only and
+    q00=16 makes plane decode EXACT (the multimodal_jpeg invariant), so
+    the oracle computes every stat in closed form."""
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
-    ycoef = np.array([[0, 3, 6, 9], [5, 8, 11, 14]],
-                     dtype=np.int64)          # by*5 + bx*3
-    mxs = np.arange(2, dtype=np.int64)
-
-    @pandas_udf("binary")
-    def make_jpeg(doc_id: pd.Series) -> pd.Series:
-        ones8 = np.ones((8, 8), dtype=np.int64)
-        # all three planes depend only on doc_id % 128 (7/11/13 are
-        # coprime scalings under the shared % 128) — per-batch
-        # construct cache; the interleaved 4:2:0 decode stays per-doc
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            c = int(d) % 128
-            p = cache.get(c)
-            if p is None:
-                y = np.kron(2 * ((c * 7 + ycoef) % 128), ones8)
-                cb = np.kron((2 * ((c * 11 + mxs * 9 + 5) % 128))[None, :],
-                             ones8)
-                cr = np.kron((2 * ((c * 13 + mxs * 3 + 1) % 128))[None, :],
-                             ones8)
-                p = cache[c] = mm.encode_jpeg_ycbcr(
-                    y.astype(np.uint8), cb.astype(np.uint8),
-                    cr.astype(np.uint8), "420", restart_interval=1)
-            out.append(p)
-        return pd.Series(out)
-
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_jpeg(F.col("doc_id")).alias("payload"))
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _ycbcr_payload(
+            F.col("doc_id"),
+            lambda y, cb, cr: mm.encode_jpeg_ycbcr(
+                y, cb, cr, "420", restart_interval=1)).alias("payload"))
     return mm.jpeg_plane_stats(media)
 
 
 def _q_multimodal_jpeg_progressive(spark, sf_dir):
     """PROGRESSIVE (SOF2) JPEG under the value-hash gate: the SAME
-    YCbCr closed-form planes as multimodal_jpeg_color, but encoded with
+    _ycbcr_payload planes as multimodal_jpeg_color, but encoded with
     the multi-scan progressive script (interleaved DC first at Al=1,
     DC refinement, per-component AC spectral bands 1-5/6-63 with EOB
     runs) and decoded by the progressive coefficient decoder — DC
     successive approximation and EOB-run batching ride the oracled
     path.  Identical oracle SQL to multimodal_jpeg_color by
     construction: both codecs must land on the identical planes."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
-    ycoef = np.array([[0, 3, 6, 9], [5, 8, 11, 14]],
-                     dtype=np.int64)          # by*5 + bx*3
-    mxs = np.arange(2, dtype=np.int64)
-
-    @pandas_udf("binary")
-    def make_jpeg(doc_id: pd.Series) -> pd.Series:
-        ones8 = np.ones((8, 8), dtype=np.int64)
-        # planes depend only on doc_id % 128 (the jpeg_color cache
-        # note); the multi-scan progressive decode stays per-doc
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            c = int(d) % 128
-            p = cache.get(c)
-            if p is None:
-                y = np.kron(2 * ((c * 7 + ycoef) % 128), ones8)
-                cb = np.kron((2 * ((c * 11 + mxs * 9 + 5) % 128))[None, :],
-                             ones8)
-                cr = np.kron((2 * ((c * 13 + mxs * 3 + 1) % 128))[None, :],
-                             ones8)
-                p = cache[c] = mm.encode_jpeg_progressive(
-                    y.astype(np.uint8), cb.astype(np.uint8),
-                    cr.astype(np.uint8), "420")
-            out.append(p)
-        return pd.Series(out)
-
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_jpeg(F.col("doc_id")).alias("payload"))
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _ycbcr_payload(
+            F.col("doc_id"),
+            lambda y, cb, cr: mm.encode_jpeg_progressive(
+                y, cb, cr, "420")).alias("payload"))
     return mm.jpeg_plane_stats(media)
 
 
@@ -1494,14 +1492,13 @@ def _q_multimodal_wav(spark, sf_dir):
     from katydid_haskell_spark.operators import multimodal as mm
 
     docs = _par_ids(spark, sf_dir)
-    N = 256
 
     @pandas_udf("binary")
     def make_wav(doc_id: pd.Series) -> pd.Series:
-        idx5 = 5 * np.arange(N, dtype=np.int64)
+        idx = _WAV_STEP * np.arange(_WAV_N, dtype=np.int64)
         return pd.Series([
-            mm.encode_wav((((int(d) * 13 + idx5) % 65536) - 32768)
-                          .astype(np.int16), rate=16000)
+            mm.encode_wav((((int(d) * _WAV_MUL + idx) % 65536) - 32768)
+                          .astype(np.int16), rate=_AUDIO_RATE)
             for d in doc_id
         ])
 
@@ -1512,50 +1509,42 @@ def _q_multimodal_wav(spark, sf_dir):
 
 def _q_multimodal_video(spark, sf_dir):
     """REAL video frame-sampling under the value-hash gate: per doc a
-    6-frame MJPEG-in-AVI payload (RIFF container built by
-    encode_avi_mjpeg, each frame an 8x16 grayscale baseline JPEG of
-    1x2 blocks), demuxed by the chunk-walking AVI reader, every 2nd
-    frame decoded by the real JPEG decoder.  Block values 2*((doc_id*7
-    + frame*19 + bx*3) % 128) are even and DC-only, so frame decode is
-    EXACT (the multimodal_jpeg invariant) and the oracle computes
-    sum/pos_checksum in closed form per sampled frame: sum_px =
-    64*(v0+v1), pos_checksum = 3808*v0 + 4320*v1 (512*bx + 3808,
-    W=16).  n_frames=6 / every_n=2 / the block params appear in the
-    UDF AND the SQL — change together."""
+    _VIDEO_FRAMES-frame MJPEG-in-AVI payload (RIFF container built by
+    encode_avi_mjpeg, each frame a grayscale baseline JPEG of one row
+    of _VIDEO_BX 8x8 blocks), demuxed by the chunk-walking AVI reader,
+    every _VIDEO_EVERY-th frame decoded by the real JPEG decoder.  Block
+    values 2*((doc_id*_Y_MUL + frame*_VIDEO_F_STEP + bx*_Y_BX) % 128)
+    are even and DC-only, so frame decode is EXACT (the multimodal_jpeg
+    invariant) and the oracle computes sum/pos_checksum in closed form
+    per sampled frame.  Every frame is a function of doc_id % 128, so
+    the whole AVI is cached per residue; its frames take only 128
+    values v = (c*_Y_MUL + f*_VIDEO_F_STEP) % 128, so each frame JPEG is
+    encoded once per value (a pure function of v, kept while the
+    deserialized UDF lives) instead of once per AVI."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
+    bx = np.arange(_VIDEO_BX, dtype=np.int64)
+    ones8 = np.ones((8, 8), dtype=np.int64)
+    frames: dict = {}
 
-    @pandas_udf("binary")
-    def make_avi(doc_id: pd.Series) -> pd.Series:
-        ones8 = np.ones((8, 8), dtype=np.int64)
-        bx = np.arange(2, dtype=np.int64)
-        # each frame JPEG depends only on c = (d*7 + f*19) % 128 — a
-        # per-batch construct cache (the image_phash_neardup pattern)
-        # encodes 128 distinct frames, not 6 per doc; the AVI mux and
-        # every decode stay per-doc
-        fcache: dict = {}
-        out = []
-        for d in doc_id:
-            d = int(d)
-            frames = []
-            for f in range(6):
-                c = (d * 7 + f * 19) % 128
-                fr = fcache.get(c)
-                if fr is None:
-                    fr = fcache[c] = mm.encode_jpeg(np.kron(
-                        (2 * ((c + bx * 3) % 128))[None, :],
-                        ones8).astype(np.uint8))
-                frames.append(fr)
-            out.append(mm.encode_avi_mjpeg(frames, fps=10))
-        return pd.Series(out)
+    def frame(v):
+        if v not in frames:
+            frames[v] = mm.encode_jpeg(np.kron(
+                (2 * ((v + bx * _Y_BX) % 128))[None, :],
+                ones8).astype(np.uint8))
+        return frames[v]
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_avi(F.col("doc_id")).alias("payload"))
-    return mm.video_frame_stats(media, every_n=2)
+    def build(c):
+        return mm.encode_avi_mjpeg(
+            [frame((c * _Y_MUL + f * _VIDEO_F_STEP) % 128)
+             for f in range(_VIDEO_FRAMES)], fps=10)
+
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), 128, build).alias("payload"))
+    return mm.video_frame_stats(media, every_n=_VIDEO_EVERY)
 
 
 def _q_multimodal_spectrogram(spark, sf_dir):
@@ -1567,37 +1556,25 @@ def _q_multimodal_spectrogram(spark, sf_dir):
     power bin of a square wave whose period divides the window is
     exactly the fundamental n_fft/p (5.8x power margin over the 3rd
     harmonic, so the float argmax is stable), energy is the exact
-    int64 N*A^2, zero crossings exactly 2N/p - 1.  Waveform params
-    appear in the UDF AND the SQL — change together."""
+    int64 N*A^2, zero crossings exactly 2N/p - 1 (the _SPEC_*
+    constants)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
-    N = 2048
+    i = np.arange(_SPEC_N, dtype=np.int64)
 
-    @pandas_udf("binary")
-    def make_wav(doc_id: pd.Series) -> pd.Series:
-        i = np.arange(N, dtype=np.int64)
-        # amp and period both derive from doc_id % 100 (5 divides 100)
-        # — per-batch construct cache; the FFT side stays per-doc
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            c = int(d) % 100
-            w = cache.get(c)
-            if w is None:
-                amp = 1000 + c
-                p = 8 << (c % 5)
-                s = np.where((i % p) < p // 2, amp, -amp).astype(np.int16)
-                w = cache[c] = mm.encode_wav(s, rate=16000)
-            out.append(w)
-        return pd.Series(out)
+    def build(c):
+        amp = _SPEC_AMP + c
+        p = _SPEC_P0 << (c % _SPEC_P_MOD)
+        return mm.encode_wav(np.where((i % p) < p // 2, amp, -amp)
+                             .astype(np.int16), rate=_AUDIO_RATE)
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_wav(F.col("doc_id")).alias("payload"))
-    return mm.audio_spectrum_stats(media, n_fft=N)
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), _SPEC_AMP_MOD, build)
+        .alias("payload"))
+    return mm.audio_spectrum_stats(media, n_fft=_SPEC_N)
 
 
 def _q_label_propagation(spark, sf_dir):
@@ -1776,65 +1753,25 @@ def _q_range_join_windows(spark, sf_dir):
 def _q_stream_warc(spark, sf_dir):
     """SIXTH streaming surface under the value-hash gate: a file
     stream of documents rows gets the SAME per-doc two-record WARC
-    payload construction as warc_records, demuxed by the real parser
-    as a stateless streaming projection (stream_warc_records) into a
-    memory sink.  Streaming == batch by construction, so the oracle is
-    warc_records' SQL verbatim."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql.functions import pandas_udf
-
-    from katydid_haskell_spark.operators import warc as wr
+    payload construction as warc_records (_warc_payload), demuxed by
+    the real parser as a stateless streaming projection
+    (stream_warc_records) into a memory sink.  Streaming == batch by
+    construction, so the oracle is warc_records' SQL verbatim."""
     from katydid_haskell_spark.streaming.stream_checks import (
         stream_warc_records,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
-    sch = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     # stateless repartition = the udf_parallelize ingest seam on the
     # stream side: a single-file micro-batch is ONE partition, which
     # would serialize the WARC construct + parse Arrow passes behind
     # one core; a shuffle of the small batch is not state, so the
     # batch oracle (warc_records' SQL) stays valid unchanged
-    stream = (spark.readStream.schema(sch).parquet(d)
+    stream = (_table_stream(spark, sf_dir, "documents")
               .repartition(spark.sparkContext.defaultParallelism))
-
-    @pandas_udf("binary")
-    def make_warc(doc_id: pd.Series, text: pd.Series) -> pd.Series:
-        out = []
-        for did, t in zip(doc_id, text):
-            t = t if isinstance(t, str) else ""
-            body = (b"HTTP/1.1 200 OK\r\n"
-                    b"Content-Type: text/plain; charset=utf-8\r\n"
-                    b"\r\n" + t.encode("utf-8"))
-            out.append(wr.build_warc([
-                {"type": "warcinfo",
-                 "body": "software: katydid-spark 1.0\r\n"},
-                {"type": "response",
-                 "uri": f"https://corpus.example/doc/{int(did)}",
-                 "date": "2026-01-01T00:00:00Z",
-                 "body": body},
-            ]))
-        return pd.Series(out)
-
     payloads = stream.select(
         F.col("doc_id"),
-        make_warc(F.col("doc_id"),
-                  F.coalesce(F.col("text"), F.lit(""))).alias("payload"))
-    out = stream_warc_records(payloads)
-    name = "stream_warc_" + uuid.uuid4().hex[:12]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+        _warc_payload(F.col("doc_id"), F.col("text")).alias("payload"))
+    return _drain(stream_warc_records(payloads))
 
 
 def _q_jsonl_roundtrip(spark, sf_dir):
@@ -1893,49 +1830,41 @@ def _q_csv_roundtrip(spark, sf_dir):
 def _q_media_curation_full(spark, sf_dir):
     """The image-axis composite (training_prep_full's sibling): per doc
     (doc_id < 240) a 32x32 block-constant PNG determined only by group
-    g = doc_id % 12 (v = (g*29 + by*17 + bx*13) % 256; pairwise pHash
-    hamming ≥ 10 across groups, pinned) → REAL pHash dedup (groupBy
-    hash, keep min id + member count) → broadcast the 12 winners back
-    onto their payloads → REAL resize to 8x8 → REAL PNG re-decode
-    stats.  Every stage's output is closed-form: winners are min
-    doc_id per residue class, counts come from the group sizes, and
+    g = doc_id % 12 (the image_resize_real block formula over g;
+    pairwise pHash hamming ≥ 10 across groups, pinned) → REAL pHash
+    dedup (groupBy hash, keep min id + member count) → broadcast the 12
+    winners back onto their payloads → REAL resize to 8x8 → REAL PNG
+    re-decode stats.  Every stage's output is closed-form: winners are
+    min doc_id per residue class, counts come from the group sizes, and
     the resized pixels are the exact block values (the
-    image_resize_real property).  Group rule/cap/block params mirrored
-    in the SQL — change together."""
+    image_resize_real property)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-    by = np.arange(4)[:, None]
-    bx = np.arange(4)[None, :]
+    docs = (_t(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < _PHASH_CAP))
+    blk = (np.arange(_BLK_GRID)[:, None] * _BLK_BY
+           + np.arange(_BLK_GRID)[None, :] * _BLK_BX)
     ones8 = np.ones((8, 8), dtype=np.int64)
 
-    @pandas_udf("binary")
-    def make_png(doc_id: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            g = int(d) % 12
-            png = cache.get(g)
-            if png is None:
-                v = (g * 29 + by * 17 + bx * 13) % 256
-                png = mm.encode_png(np.kron(v, ones8).astype(np.uint8))
-                cache[g] = png
-            out.append(png)
-        return pd.Series(out)
+    def build(g):
+        return mm.encode_png(np.kron((g * _BLK_MUL + blk) % 256, ones8)
+                             .astype(np.uint8))
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_png(F.col("doc_id")).alias("payload"),
-                        F.lit("image/png").alias("mime"))
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), _PHASH_GROUPS, build)
+        .alias("payload"),
+        F.lit("image/png").alias("mime"))
     winners = (mm.phash_df(media)
                .groupBy("phash")
                .agg(F.min("media_id").alias("media_id"),
                     F.count(F.lit(1)).alias("n_members")))
     survivors = media.join(
         F.broadcast(winners.select("media_id", "n_members")), "media_id")
-    stats = mm.png_pixel_stats(mm.resize_media(survivors, 8, 8))
+    stats = mm.png_pixel_stats(
+        mm.resize_media(survivors, _RESIZE_OUT, _RESIZE_OUT))
     return (stats.join(
         F.broadcast(winners.select("media_id", "n_members")), "media_id")
         .select("media_id", "n_members", "width", "height", "channels",
@@ -2101,11 +2030,6 @@ def _q_stream_semantic_route(spark, sf_dir):
     map-side, as a pure projection (no watermark, no state store), so
     the batch oracle — shared ccell CTE + the 2-hex-digit shard form —
     stays valid verbatim (the stream_route discipline)."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
     from katydid_haskell_spark.operators.similarity import (
         auto_dedup_cells,
         train_ivf_centroids,
@@ -2117,26 +2041,14 @@ def _q_stream_semantic_route(spark, sf_dir):
     batch = _t(spark, sf_dir, "embeddings")
     n_cells = auto_dedup_cells(batch.count(), 32)
     cents = train_ivf_centroids(batch, dim=64, n_cells=n_cells)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"spark_graft_semroute_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "embeddings.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "embeddings.parquet"), link)
-    sch = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
     # stateless ingest repartition (the stream_warc seam): a
     # single-file micro-batch is one partition, which would serialize
     # the Arrow cell-assign pass on one core; no state added, so the
     # shared batch oracle stays valid unchanged
-    stream = (spark.readStream.schema(sch).parquet(d)
+    stream = (_table_stream(spark, sf_dir, "embeddings")
               .repartition(spark.sparkContext.defaultParallelism))
-    out = stream_semantic_route(stream, cents, dim=64, n_shards=16,
-                                shard_seed="shuffle-v1")
-    name = "stream_semroute_" + uuid.uuid4().hex[:12]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(stream_semantic_route(stream, cents, dim=64, n_shards=16,
+                                        shard_seed="shuffle-v1"))
 
 
 def _q_html_text_extract(spark, sf_dir):
@@ -2294,42 +2206,17 @@ def _q_dsir_score(spark, sf_dir):
 
 def _q_warc_records(spark, sf_dir):
     """REAL WARC/1.0 record framing under the value-hash gate: per doc
-    a two-record WARC file — a constant warcinfo member plus a response
-    member wrapping the document text in an HTTP/1.1 200 block — built
-    as per-record gzip members (mtime=0) and walked back by the real
-    parser (Content-Length framing, case-insensitive headers, HTTP
-    split).  The oracle re-derives every field from the raw text
-    column; the constant literals (warcinfo body, 60-byte HTTP header
-    block, uri prefix) appear in build_warc's input AND the SQL —
-    change together."""
-    from pyspark.sql.functions import pandas_udf
-
+    a two-record WARC file (_warc_payload) — a constant warcinfo member
+    plus a response member wrapping the document text in an HTTP/1.1
+    200 block — built as per-record gzip members (mtime=0) and walked
+    back by the real parser (Content-Length framing, case-insensitive
+    headers, HTTP split).  The oracle re-derives every field from the
+    raw text column."""
     from katydid_haskell_spark.operators import warc as wr
 
-    docs = _par_docs(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def make_warc(doc_id: pd.Series, text: pd.Series) -> pd.Series:
-        out = []
-        for d, t in zip(doc_id, text):
-            t = t if isinstance(t, str) else ""
-            body = (b"HTTP/1.1 200 OK\r\n"
-                    b"Content-Type: text/plain; charset=utf-8\r\n"
-                    b"\r\n" + t.encode("utf-8"))
-            out.append(wr.build_warc([
-                {"type": "warcinfo",
-                 "body": "software: katydid-spark 1.0\r\n"},
-                {"type": "response",
-                 "uri": f"https://corpus.example/doc/{int(d)}",
-                 "date": "2026-01-01T00:00:00Z",
-                 "body": body},
-            ]))
-        return pd.Series(out)
-
-    media = docs.select(
+    media = _par_docs(spark, sf_dir).select(
         F.col("doc_id"),
-        make_warc(F.col("doc_id"),
-                  F.coalesce(F.col("text"), F.lit(""))).alias("payload"))
+        _warc_payload(F.col("doc_id"), F.col("text")).alias("payload"))
     return wr.warc_records(media)
 
 
@@ -2340,44 +2227,30 @@ def _q_image_resize_real(spark, sf_dir):
     area mean-pool (each 4x4 input region lies inside one constant
     block, so the mean is the exact block value), PNG re-encode — then
     png_pixel_stats re-decodes.  Output pixel (y,x) = v(y//2, x//2)
-    exactly; the oracle mirrors the block formula and the 32->8
-    mapping (change together)."""
+    exactly (the _BLK_* constants)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
-    by = np.arange(4)[:, None]
-    bx = np.arange(4)[None, :]
+    blk = (np.arange(_BLK_GRID)[:, None] * _BLK_BY
+           + np.arange(_BLK_GRID)[None, :] * _BLK_BX)
     ones8 = np.ones((8, 8), dtype=np.int64)
 
-    @pandas_udf("binary")
-    def make_png(doc_id: pd.Series) -> pd.Series:
+    def build(c):
         # filter_mode="none": decoded pixels are bit-identical to the
         # "cycle" default (the oracle's closed form is over PIXELS),
         # while both real decodes downstream (resize + stats) stay on
         # the fully vectorized unfilter path — the filter-exercising
         # job belongs to multimodal_png, not the resize query
-        # payload depends only on doc_id % 256 — per-batch construct
-        # cache; resize + stats decodes stay per-doc
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            c = int(d) % 256
-            p = cache.get(c)
-            if p is None:
-                v = (c * 29 + by * 17 + bx * 13) % 256
-                p = cache[c] = mm.encode_png(
-                    np.kron(v, ones8).astype(np.uint8),
-                    filter_mode="none")
-            out.append(p)
-        return pd.Series(out)
+        return mm.encode_png(np.kron((c * _BLK_MUL + blk) % 256, ones8)
+                             .astype(np.uint8), filter_mode="none")
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_png(F.col("doc_id")).alias("payload"),
-                        F.lit("image/png").alias("mime"))
-    return mm.png_pixel_stats(mm.resize_media(media, 8, 8))
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), 256, build).alias("payload"),
+        F.lit("image/png").alias("mime"))
+    return mm.png_pixel_stats(
+        mm.resize_media(media, _RESIZE_OUT, _RESIZE_OUT))
 
 
 def _q_multimodal_gif(spark, sf_dir):
@@ -2385,40 +2258,28 @@ def _q_multimodal_gif(spark, sf_dir):
     animated GIF89a (12x20, 16-color closed-form palette, frame delays
     3/9 cs) built by the real LZW encoder, decoded by the real LZW
     decoder, reduced to per-frame RGB sums + the flat (y,x,c)
-    position-weighted checksum.  Closed forms mirrored in SQL (change
-    together): pal[i] = ((17i+3)%256, (29i+7)%256, (43i+11)%256);
-    index(y,x) = (doc_id + f*5 + y*3 + x) % 16; delay = 3 + 6f."""
+    position-weighted checksum.  Palette, index formula and delays are
+    the _GIF_* constants, closed forms in the oracle."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _par_ids(spark, sf_dir)
-    pal = np.stack([(17 * np.arange(16) + 3) % 256,
-                    (29 * np.arange(16) + 7) % 256,
-                    (43 * np.arange(16) + 11) % 256],
+    ci = np.arange(_GIF_COLORS)
+    pal = np.stack([(a * ci + b) % 256 for a, b in _GIF_PAL],
                    axis=1).astype(np.uint8)
-    yy = np.arange(12)[:, None]
-    xx = np.arange(20)[None, :]
+    pix = (np.arange(_GIF_H)[:, None] * _GIF_Y_STEP
+           + np.arange(_GIF_W)[None, :])
+    delays = [_GIF_DELAY + f * _GIF_DELAY_STEP for f in range(_GIF_FRAMES)]
 
-    @pandas_udf("binary")
-    def make_gif(doc_id: pd.Series) -> pd.Series:
-        # frames depend only on doc_id % 16 — per-batch construct
-        # cache; the LZW decode under test stays per-doc
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            c = int(d) % 16
-            g = cache.get(c)
-            if g is None:
-                frames = [((c + f * 5 + yy * 3 + xx) % 16)
-                          .astype(np.uint8) for f in (0, 1)]
-                g = cache[c] = mm.encode_gif(frames, pal, delays=[3, 9])
-            out.append(g)
-        return pd.Series(out)
+    def build(c):
+        frames = [((c + f * _GIF_F_STEP + pix) % _GIF_COLORS)
+                  .astype(np.uint8) for f in range(_GIF_FRAMES)]
+        return mm.encode_gif(frames, pal, delays=delays)
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_gif(F.col("doc_id")).alias("payload"))
+    media = _par_ids(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), _GIF_COLORS, build)
+        .alias("payload"))
     return mm.gif_frame_stats(media)
 
 
@@ -2431,36 +2292,26 @@ def _q_image_phash_neardup(spark, sf_dir):
     through the real decode + 32x32 DCT pHash, then banded 16-bit
     bucketing + exact bit_count hamming verification.  Same-group docs
     are byte-identical (hamming 0); cross-group pairs are >3 away, so
-    the oracle derives the pair set purely from group membership —
-    the cap (240) and group rule (% 12) are mirrored in the SQL;
-    change both sides together."""
+    the oracle derives the pair set purely from group membership
+    (_PHASH_CAP, _PHASH_GROUPS)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     from katydid_haskell_spark.operators import multimodal as mm
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
+    docs = (_t(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < _PHASH_CAP))
     yy = np.arange(48, dtype=np.int64)[:, None]
     xx = np.arange(64, dtype=np.int64)[None, :]
 
-    @pandas_udf("binary")
-    def make_png(doc_id: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for d in doc_id:
-            g = int(d) % 12
-            png = cache.get(g)
-            if png is None:
-                img = (((yy * 13 + xx * 7 + g * 101) * (2 * g + 3)
-                        * 40503) // 256 % 256).astype(np.uint8)
-                png = mm.encode_png(img)
-                cache[g] = png
-            out.append(png)
-        return pd.Series(out)
+    def build(g):
+        return mm.encode_png((((yy * 13 + xx * 7 + g * 101) * (2 * g + 3)
+                               * 40503) // 256 % 256).astype(np.uint8))
 
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        make_png(F.col("doc_id")).alias("payload"),
-                        F.lit("image/png").alias("mime"))
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        _residue_payload(F.col("doc_id"), _PHASH_GROUPS, build)
+        .alias("payload"),
+        F.lit("image/png").alias("mime"))
     hashes = mm.phash_df(media)
     return mm.phash_neardup_pairs(hashes, max_hamming=3)
 
@@ -3445,6 +3296,43 @@ def oracle_sql() -> dict[str, str]:
 
     oracle_sf = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR",
                                "/root/testdata/sf0.01")
+    # closed forms of the construct-in-query payloads (module constants)
+    bmp_n = _BMP_W * _BMP_H * 3
+    bmp_px = f"(doc_id*{_BMP_MUL} + {_BMP_STEP}*i) % 256"
+    png_n = _PNG_W * _PNG_H * _PNG_C
+    png_px = f"(doc_id*{_PNG_MUL} + {_PNG_STEP}*i) % 256"
+    wav_s = f"(doc_id*{_WAV_MUL} + {_WAV_STEP}*i) % 65536"
+    spec_bin = f"{_SPEC_N} // ({_SPEC_P0} * (1 << (doc_id % {_SPEC_P_MOD})))"
+    spec_amp = f"({_SPEC_AMP} + doc_id % {_SPEC_AMP_MOD})"
+    y_v = (f"2 * ((d.doc_id * {_Y_MUL} + t.by * {_Y_BY} + t2.bx * {_Y_BX})"
+           " % 128)")
+    cb_v = f"d.doc_id * {_CB_MUL} + m.mx * {_CB_MX} + {_CB_OFF}"
+    cr_v = f"d.doc_id * {_CR_MUL} + m.mx * {_CR_MX} + {_CR_OFF}"
+    # plane widths and flat-index sums of the JPEG-family block grids
+    jpeg_w, ycc_w, vid_w = (8 * _JPEG_BLOCKS[1], 8 * _YCBCR_BLOCKS[1],
+                            8 * _VIDEO_BX)
+    jpeg_pos, y_pos = _block_pos(jpeg_w), _block_pos(ycc_w)
+    c_pos, vid_pos = _block_pos(8 * _CHROMA_MBS), _block_pos(vid_w)
+    vid_v = f"d.doc_id * {_Y_MUL} + f.frame_idx * {_VIDEO_F_STEP}"
+    vid_frames = list(range(0, _VIDEO_FRAMES, _VIDEO_EVERY))
+    # one column per block of the frame's single row
+    vid_bx = range(_VIDEO_BX)
+    vid_cols = ",\n                 ".join(
+        f"2 * (({vid_v}{f' + {bx * _Y_BX}' if bx else ''}) % 128) AS v{bx}"
+        for bx in vid_bx)
+    # output pixel i of the resized block image lies in block
+    # (i // OUT // per, i % OUT // per), per = OUT // GRID
+    out_n = _RESIZE_OUT * _RESIZE_OUT
+    per = _RESIZE_OUT // _BLK_GRID
+
+    def blk_v(d):  # pixel i of the block image of id d, before % 256
+        return (f"{d}*{_BLK_MUL} + ((i//{_RESIZE_OUT})//{per})*{_BLK_BY}"
+                f" + ((i%{_RESIZE_OUT})//{per})*{_BLK_BX}")
+
+    gif_n = _GIF_H * _GIF_W * 3
+    gif_yx = f"((i.i // 3) // {_GIF_W}) * {_GIF_Y_STEP} + (i.i // 3) % {_GIF_W}"
+    gif_pal = [f"{a} * pi + {b}" for a, b in _GIF_PAL]
+
     from katydid_haskell_spark.operators import tokenize as _tk
     _bpe_counts = _tk.demo_token_counts()
     _bpe_lit = "[" + ", ".join(
@@ -3769,12 +3657,12 @@ def oracle_sql() -> dict[str, str]:
             shingle_k=3, window=4),
         "minhash_verify": orc.minhash_verify_sql(
             num_hashes=32, bands=8, shingle_k=3, k=3, min_jaccard=0.3),
-        "stream_doc_violations": """
+        "stream_doc_violations": f"""
         SELECT doc_id, 'text_nonempty' AS rule_id FROM documents
         WHERE text IS NULL OR length(text) = 0
         UNION ALL
         SELECT doc_id, 'lang_known' AS rule_id FROM documents
-        WHERE lang IS NULL OR lang NOT IN ('en','de','fr','es')
+        WHERE lang IS NULL OR lang NOT IN {_LANG_ALLOW_SQL}
         """,
         "stream_windowed_verdicts": """
         SELECT DATE_TRUNC('hour', ts) AS window_start,
@@ -3799,18 +3687,14 @@ def oracle_sql() -> dict[str, str]:
         SELECT user_id, prev_max AS prev_seq, event_id AS seq
         FROM ordered WHERE event_id < prev_max
         """,
-        "xml_validate": """
+        # the XML and protobuf entries validate the same spec
+        "xml_validate": (_lang_chars_sql := f"""
         SELECT doc_id,
-               (COALESCE(lang IN ('en','de','fr','es'), FALSE)
-                AND COALESCE(n_chars >= 500, FALSE)) AS ok
+               (COALESCE(lang IN {_LANG_ALLOW_SQL}, FALSE)
+                AND COALESCE(n_chars >= {_MIN_CHARS}, FALSE)) AS ok
         FROM documents
-        """,
-        "protobuf_validate": """
-        SELECT doc_id,
-               (COALESCE(lang IN ('en','de','fr','es'), FALSE)
-                AND COALESCE(n_chars >= 500, FALSE)) AS ok
-        FROM documents
-        """,
+        """),
+        "protobuf_validate": _lang_chars_sql,
         "protobuf_packed": """
         SELECT doc_id,
                ((n_chars % 100) >= 10 AND ((doc_id * 7) % 50) >= 10) AS ok
@@ -3840,60 +3724,59 @@ def oracle_sql() -> dict[str, str]:
         FROM (SELECT doc_id, octet_length(encode(text)) AS L
               FROM documents)
         """,
-        "multimodal_bmp": """
-        SELECT doc_id AS media_id, 10 AS width, 7 AS height,
-               CAST(list_sum(list_transform(range(0, 210),
-                    i -> (doc_id*31 + 7*i) % 256)) AS BIGINT) AS sum_all,
-               CAST(len(list_filter(range(0, 210),
-                    i -> (doc_id*31 + 7*i) % 256 >= 128)) AS BIGINT)
+        "multimodal_bmp": f"""
+        SELECT doc_id AS media_id, {_BMP_W} AS width, {_BMP_H} AS height,
+               CAST(list_sum(list_transform(range(0, {bmp_n}),
+                    i -> {bmp_px})) AS BIGINT) AS sum_all,
+               CAST(len(list_filter(range(0, {bmp_n}),
+                    i -> {bmp_px} >= 128)) AS BIGINT)
                  AS n_bright,
-               CAST(list_sum(list_transform(range(0, 210),
-                    i -> i * ((doc_id*31 + 7*i) % 256))) AS BIGINT)
+               CAST(list_sum(list_transform(range(0, {bmp_n}),
+                    i -> i * ({bmp_px}))) AS BIGINT)
                  AS pos_checksum
         FROM documents
         """,
-        "multimodal_png": """
-        SELECT doc_id AS media_id, 6 AS width, 5 AS height,
-               4 AS channels,
-               CAST(list_sum(list_transform(range(0, 120),
-                    i -> (doc_id*17 + 3*i) % 256)) AS BIGINT) AS sum_all,
-               CAST(len(list_filter(range(0, 120),
-                    i -> (doc_id*17 + 3*i) % 256 >= 128)) AS BIGINT)
+        "multimodal_png": f"""
+        SELECT doc_id AS media_id, {_PNG_W} AS width, {_PNG_H} AS height,
+               {_PNG_C} AS channels,
+               CAST(list_sum(list_transform(range(0, {png_n}),
+                    i -> {png_px})) AS BIGINT) AS sum_all,
+               CAST(len(list_filter(range(0, {png_n}),
+                    i -> {png_px} >= 128)) AS BIGINT)
                  AS n_bright,
-               CAST(list_sum(list_transform(range(0, 120),
-                    i -> i * ((doc_id*17 + 3*i) % 256))) AS BIGINT)
+               CAST(list_sum(list_transform(range(0, {png_n}),
+                    i -> i * ({png_px}))) AS BIGINT)
                  AS pos_checksum
         FROM documents
         """,
-        "multimodal_wav": """
-        SELECT doc_id AS media_id, 16000 AS rate,
-               CAST(256 AS BIGINT) AS n_samples,
-               CAST(list_sum(list_transform(range(0, 256),
-                    i -> (doc_id*13 + 5*i) % 65536 - 32768)) AS BIGINT)
+        "multimodal_wav": f"""
+        SELECT doc_id AS media_id, {_AUDIO_RATE} AS rate,
+               CAST({_WAV_N} AS BIGINT) AS n_samples,
+               CAST(list_sum(list_transform(range(0, {_WAV_N}),
+                    i -> {wav_s} - 32768)) AS BIGINT)
                  AS sum_s,
-               CAST(len(list_filter(range(0, 256),
-                    i -> (doc_id*13 + 5*i) % 65536 > 32768)) AS BIGINT)
+               CAST(len(list_filter(range(0, {_WAV_N}),
+                    i -> {wav_s} > 32768)) AS BIGINT)
                  AS n_pos,
-               CAST(list_sum(list_transform(range(0, 256),
-                    i -> i * ((doc_id*13 + 5*i) % 65536 - 32768))) AS BIGINT)
+               CAST(list_sum(list_transform(range(0, {_WAV_N}),
+                    i -> i * ({wav_s} - 32768))) AS BIGINT)
                  AS pos_checksum
         FROM documents
         """,
-        "multimodal_video": """
+        "multimodal_video": f"""
         WITH v AS (
           SELECT d.doc_id, f.frame_idx,
-                 2 * ((d.doc_id * 7 + f.frame_idx * 19) % 128) AS v0,
-                 2 * ((d.doc_id * 7 + f.frame_idx * 19 + 3) % 128) AS v1
+                 {vid_cols}
           FROM documents d,
-               (SELECT unnest([0, 2, 4]) AS frame_idx) f
+               (SELECT unnest({vid_frames}) AS frame_idx) f
         )
         SELECT doc_id AS media_id,
                CAST(frame_idx AS BIGINT) AS frame_idx,
-               CAST(6 AS BIGINT) AS n_frames,
-               CAST(16 AS INTEGER) AS width,
+               CAST({_VIDEO_FRAMES} AS BIGINT) AS n_frames,
+               CAST({vid_w} AS INTEGER) AS width,
                CAST(8 AS INTEGER) AS height,
-               CAST(64 * (v0 + v1) AS BIGINT) AS sum_px,
-               CAST(3808 * v0 + 4320 * v1 AS BIGINT) AS pos_checksum
+               CAST(64 * ({' + '.join(f'v{bx}' for bx in vid_bx)}) AS BIGINT) AS sum_px,
+               CAST({' + '.join(f'{vid_pos[1] + 512 * bx} * v{bx}' for bx in vid_bx)} AS BIGINT) AS pos_checksum
         FROM v
         """,
         "label_propagation": """
@@ -4042,26 +3925,26 @@ def oracle_sql() -> dict[str, str]:
                CAST(COALESCE(n_chars, 0) AS BIGINT) AS parsed_n_chars
         FROM documents
         """,
-        "media_curation_full": """
+        "media_curation_full": f"""
         WITH m AS (
-          SELECT doc_id % 12 AS g,
+          SELECT doc_id % {_PHASH_GROUPS} AS g,
                  MIN(doc_id) AS media_id,
                  COUNT(*) AS n_members
-          FROM documents WHERE doc_id < 240 GROUP BY 1
+          FROM documents WHERE doc_id < {_PHASH_CAP} GROUP BY 1
         )
         SELECT media_id,
                CAST(n_members AS BIGINT) AS n_members,
-               CAST(8 AS INTEGER) AS width,
-               CAST(8 AS INTEGER) AS height,
+               CAST({_RESIZE_OUT} AS INTEGER) AS width,
+               CAST({_RESIZE_OUT} AS INTEGER) AS height,
                CAST(1 AS INTEGER) AS channels,
-               CAST(list_sum(list_transform(range(0, 64),
-                    i -> (g*29 + ((i//8)//2)*17 + ((i%8)//2)*13) % 256))
+               CAST(list_sum(list_transform(range(0, {out_n}),
+                    i -> ({blk_v('g')}) % 256))
                  AS BIGINT) AS sum_all,
-               CAST(len(list_filter(range(0, 64),
-                    i -> (g*29 + ((i//8)//2)*17 + ((i%8)//2)*13) % 256
+               CAST(len(list_filter(range(0, {out_n}),
+                    i -> ({blk_v('g')}) % 256
                          >= 128)) AS BIGINT) AS n_bright,
-               CAST(list_sum(list_transform(range(0, 64),
-                    i -> i * ((g*29 + ((i//8)//2)*17 + ((i%8)//2)*13)
+               CAST(list_sum(list_transform(range(0, {out_n}),
+                    i -> i * (({blk_v('g')})
                               % 256))) AS BIGINT) AS pos_checksum
         FROM m
         """,
@@ -4406,24 +4289,24 @@ def oracle_sql() -> dict[str, str]:
                  AS BIGINT) AS n_tokens
         FROM documents
         """,
-        "warc_records": (_warc_sql := """
+        "warc_records": (_warc_sql := f"""
         WITH t AS (
           SELECT doc_id, COALESCE(text, '') AS txt FROM documents
         )
         SELECT doc_id, CAST(0 AS BIGINT) AS record_idx,
                'warcinfo' AS warc_type, '' AS target_uri,
-               CAST(29 AS BIGINT) AS content_length,
+               CAST({len(_WARCINFO_TEXT) + 2} AS BIGINT) AS content_length,
                CAST(-1 AS BIGINT) AS http_status,
                CAST(-1 AS BIGINT) AS n_http_headers,
-               CAST(29 AS BIGINT) AS body_len,
-               md5('software: katydid-spark 1.0' || chr(13) || chr(10))
+               CAST({len(_WARCINFO_TEXT) + 2} AS BIGINT) AS body_len,
+               md5('{_WARCINFO_TEXT}' || chr(13) || chr(10))
                  AS body_md5
         FROM t
         UNION ALL
         SELECT doc_id, CAST(1 AS BIGINT) AS record_idx,
                'response' AS warc_type,
-               'https://corpus.example/doc/' || doc_id AS target_uri,
-               CAST(60 + octet_length(encode(txt)) AS BIGINT) AS content_length,
+               '{_DOC_URI}' || doc_id AS target_uri,
+               CAST({len(_HTTP_HEAD)} + octet_length(encode(txt)) AS BIGINT) AS content_length,
                CAST(200 AS BIGINT) AS http_status,
                CAST(1 AS BIGINT) AS n_http_headers,
                CAST(octet_length(encode(txt)) AS BIGINT) AS body_len,
@@ -4431,45 +4314,45 @@ def oracle_sql() -> dict[str, str]:
         FROM t
         """),
         "stream_warc": _warc_sql,
-        "image_resize_real": """
+        "image_resize_real": f"""
         SELECT doc_id AS media_id,
-               CAST(8 AS INTEGER) AS width,
-               CAST(8 AS INTEGER) AS height,
+               CAST({_RESIZE_OUT} AS INTEGER) AS width,
+               CAST({_RESIZE_OUT} AS INTEGER) AS height,
                CAST(1 AS INTEGER) AS channels,
-               CAST(list_sum(list_transform(range(0, 64),
-                    i -> (doc_id*29 + ((i//8)//2)*17 + ((i%8)//2)*13)
+               CAST(list_sum(list_transform(range(0, {out_n}),
+                    i -> ({blk_v('doc_id')})
                          % 256)) AS BIGINT) AS sum_all,
-               CAST(len(list_filter(range(0, 64),
-                    i -> (doc_id*29 + ((i//8)//2)*17 + ((i%8)//2)*13)
+               CAST(len(list_filter(range(0, {out_n}),
+                    i -> ({blk_v('doc_id')})
                          % 256 >= 128)) AS BIGINT) AS n_bright,
-               CAST(list_sum(list_transform(range(0, 64),
-                    i -> i * ((doc_id*29 + ((i//8)//2)*17 + ((i%8)//2)*13)
+               CAST(list_sum(list_transform(range(0, {out_n}),
+                    i -> i * (({blk_v('doc_id')})
                               % 256))) AS BIGINT) AS pos_checksum
         FROM documents
         """,
-        "multimodal_gif": """
-        WITH f AS (SELECT unnest([0, 1]) AS frame_idx),
+        "multimodal_gif": f"""
+        WITH f AS (SELECT unnest({list(range(_GIF_FRAMES))}) AS frame_idx),
         px AS (
           SELECT d.doc_id, f.frame_idx, i.i,
-                 (d.doc_id + f.frame_idx * 5
-                  + ((i.i // 3) // 20) * 3 + (i.i // 3) % 20) % 16 AS pi
-          FROM documents d, f, (SELECT unnest(range(0, 720)) AS i) i
+                 (d.doc_id + f.frame_idx * {_GIF_F_STEP}
+                  + {gif_yx}) % {_GIF_COLORS} AS pi
+          FROM documents d, f, (SELECT unnest(range(0, {gif_n})) AS i) i
         ),
         v AS (
           SELECT doc_id, frame_idx, i,
                  CASE i % 3
-                   WHEN 0 THEN (17 * pi + 3) % 256
-                   WHEN 1 THEN (29 * pi + 7) % 256
-                   ELSE (43 * pi + 11) % 256
+                   WHEN 0 THEN ({gif_pal[0]}) % 256
+                   WHEN 1 THEN ({gif_pal[1]}) % 256
+                   ELSE ({gif_pal[2]}) % 256
                  END AS val
           FROM px
         )
         SELECT doc_id AS media_id,
                CAST(frame_idx AS BIGINT) AS frame_idx,
-               CAST(2 AS BIGINT) AS n_frames,
-               CAST(20 AS INTEGER) AS width,
-               CAST(12 AS INTEGER) AS height,
-               CAST(3 + 6 * frame_idx AS BIGINT) AS delay_cs,
+               CAST({_GIF_FRAMES} AS BIGINT) AS n_frames,
+               CAST({_GIF_W} AS INTEGER) AS width,
+               CAST({_GIF_H} AS INTEGER) AS height,
+               CAST({_GIF_DELAY} + {_GIF_DELAY_STEP} * frame_idx AS BIGINT) AS delay_cs,
                CAST(SUM(CASE WHEN i % 3 = 0 THEN val ELSE 0 END)
                  AS BIGINT) AS r_sum,
                CAST(SUM(CASE WHEN i % 3 = 1 THEN val ELSE 0 END)
@@ -4480,22 +4363,22 @@ def oracle_sql() -> dict[str, str]:
         FROM v
         GROUP BY doc_id, frame_idx
         """,
-        "image_phash_neardup": """
+        "image_phash_neardup": f"""
         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                CAST(0 AS INTEGER) AS hamming
         FROM documents a JOIN documents b
-          ON a.doc_id % 12 = b.doc_id % 12 AND a.doc_id < b.doc_id
-        WHERE a.doc_id < 240 AND b.doc_id < 240
+          ON a.doc_id % {_PHASH_GROUPS} = b.doc_id % {_PHASH_GROUPS} AND a.doc_id < b.doc_id
+        WHERE a.doc_id < {_PHASH_CAP} AND b.doc_id < {_PHASH_CAP}
         """,
-        "multimodal_spectrogram": """
+        "multimodal_spectrogram": f"""
         SELECT doc_id AS media_id,
-               CAST(16000 AS INTEGER) AS rate,
-               CAST(2048 AS BIGINT) AS n_samples,
-               CAST(2048 // (8 * (1 << (doc_id % 5))) AS BIGINT)
+               CAST({_AUDIO_RATE} AS INTEGER) AS rate,
+               CAST({_SPEC_N} AS BIGINT) AS n_samples,
+               CAST({spec_bin} AS BIGINT)
                  AS dominant_bin,
-               CAST(2048 * (1000 + doc_id % 100) * (1000 + doc_id % 100)
+               CAST({_SPEC_N} * {spec_amp} * {spec_amp}
                  AS BIGINT) AS energy,
-               CAST(2 * (2048 // (8 * (1 << (doc_id % 5)))) - 1 AS BIGINT)
+               CAST(2 * ({spec_bin}) - 1 AS BIGINT)
                  AS zero_crossings
         FROM documents
         """,
@@ -4843,55 +4726,55 @@ def oracle_sql() -> dict[str, str]:
                  AS BIGINT) AS last_block
         FROM o
         """,
-        "multimodal_jpeg": """
+        "multimodal_jpeg": f"""
         WITH b AS (
           SELECT d.doc_id, t.by, t2.bx,
-                 2 * ((d.doc_id * 7 + t.by * 5 + t2.bx * 3) % 128) AS v
+                 {y_v} AS v
           FROM documents d,
-               (SELECT unnest([0, 1]) AS by) t,
-               (SELECT unnest([0, 1]) AS bx) t2
+               (SELECT unnest({list(range(_JPEG_BLOCKS[0]))}) AS by) t,
+               (SELECT unnest({list(range(_JPEG_BLOCKS[1]))}) AS bx) t2
         )
         SELECT doc_id AS media_id,
-               CAST(16 AS INTEGER) AS width,
-               CAST(16 AS INTEGER) AS height,
+               CAST({jpeg_w} AS INTEGER) AS width,
+               CAST({8 * _JPEG_BLOCKS[0]} AS INTEGER) AS height,
                CAST(64 * SUM(v) AS BIGINT) AS sum_all,
                CAST(64 * SUM(CASE WHEN v >= 128 THEN 1 ELSE 0 END)
                  AS BIGINT) AS n_bright,
-               CAST(SUM(v * (8192 * by + 512 * bx + 3808)) AS BIGINT)
+               CAST(SUM(v * ({jpeg_pos[0]} * by + 512 * bx + {jpeg_pos[1]})) AS BIGINT)
                  AS pos_checksum
         FROM b GROUP BY doc_id
         """,
         # one closed form, two codecs: the baseline-color and progressive
         # entries construct the SAME planes, so they share this SQL
-        "multimodal_jpeg_color": (_jpeg_planes_sql := """
+        "multimodal_jpeg_color": (_jpeg_planes_sql := f"""
         WITH y AS (
           SELECT d.doc_id, t.by, t2.bx,
-                 2 * ((d.doc_id * 7 + t.by * 5 + t2.bx * 3) % 128) AS v
+                 {y_v} AS v
           FROM documents d,
-               (SELECT unnest([0, 1]) AS by) t,
-               (SELECT unnest([0, 1, 2, 3]) AS bx) t2
+               (SELECT unnest({list(range(_YCBCR_BLOCKS[0]))}) AS by) t,
+               (SELECT unnest({list(range(_YCBCR_BLOCKS[1]))}) AS bx) t2
         ), c AS (
           SELECT d.doc_id, m.mx,
-                 2 * ((d.doc_id * 11 + m.mx * 9 + 5) % 128) AS cbv,
-                 2 * ((d.doc_id * 13 + m.mx * 3 + 1) % 128) AS crv
-          FROM documents d, (SELECT unnest([0, 1]) AS mx) m
+                 2 * (({cb_v}) % 128) AS cbv,
+                 2 * (({cr_v}) % 128) AS crv
+          FROM documents d, (SELECT unnest({list(range(_CHROMA_MBS))}) AS mx) m
         ), ya AS (
           SELECT doc_id,
                  CAST(64 * SUM(v) AS BIGINT) AS y_sum,
-                 CAST(SUM(v * (16384 * by + 512 * bx + 7392))
+                 CAST(SUM(v * ({y_pos[0]} * by + 512 * bx + {y_pos[1]}))
                    AS BIGINT) AS y_pos_checksum
           FROM y GROUP BY doc_id
         ), ca AS (
           SELECT doc_id,
                  CAST(64 * SUM(cbv) AS BIGINT) AS cb_sum,
-                 CAST(SUM(cbv * (512 * mx + 3808)) AS BIGINT)
+                 CAST(SUM(cbv * (512 * mx + {c_pos[1]})) AS BIGINT)
                    AS cb_pos_checksum,
                  CAST(64 * SUM(crv) AS BIGINT) AS cr_sum
           FROM c GROUP BY doc_id
         )
         SELECT ya.doc_id AS media_id,
-               CAST(32 AS INTEGER) AS width,
-               CAST(16 AS INTEGER) AS height,
+               CAST({ycc_w} AS INTEGER) AS width,
+               CAST({8 * _YCBCR_BLOCKS[0]} AS INTEGER) AS height,
                CAST(3 AS INTEGER) AS n_comp,
                y_sum, y_pos_checksum, cb_sum, cb_pos_checksum, cr_sum
         FROM ya JOIN ca ON ya.doc_id = ca.doc_id

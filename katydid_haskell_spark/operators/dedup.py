@@ -684,6 +684,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     Both engines refuse to return silent non-fixpoints: exceeding
     ``max_iter`` raises rather than yielding wrong clusters.
+
+    Input pairs are expected distinct.  Duplicates give the same
+    labeling, but min-label propagation does not deduplicate the edge
+    list, so every duplicate edge is joined again in every round.
     """
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     if algorithm == "label":
@@ -748,14 +752,16 @@ def _cc_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
             # convergence check below is a plain scan of the checkpoint —
             # not a per-round join of the new labels back to the old ones
             # (r9: saved one join job per round)
-            nlabel = F.least(F.col("label"),
-                             F.coalesce(F.col("nmin"), F.col("label")))
+            # old label read through `labels`, not by name: the same
+            # select aliases the NEW label as "label"
+            old = labels["label"]
+            nlabel = F.least(old, F.coalesce(F.col("nmin"), old))
             new_labels = (
                 labels.join(neighbor_min, labels.id == neighbor_min.a, "left")
                 .select(
                     "id",
                     nlabel.alias("label"),
-                    (nlabel != F.col("label")).alias("chg"),
+                    (nlabel != old).alias("chg"),
                 )
                 .localCheckpoint(eager=True)
             )

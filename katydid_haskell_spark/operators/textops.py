@@ -71,8 +71,11 @@ def n_words(col: Column) -> Column:
     """Canonical word COUNT: == ``F.size(words(col))`` by construction
     (the number of non-empty segments left by splitting on
     ``[^a-zA-Z0-9']+`` is exactly the number of maximal runs of
-    ``[a-zA-Z0-9']`` characters; ``lower()`` maps the class onto
-    itself, so the count is case-fold-invariant on the corpus).
+    ``[a-zA-Z0-9']`` characters).  It counts on ``lower(col)``, as
+    ``words`` does: ``lower()`` does NOT map the class onto itself.
+    KELVIN SIGN U+212A lowers to ``k`` and ``İ`` to ``i`` + U+0307, so
+    on the raw text the Kelvin sign alone counts 0 words instead of 1
+    and "İstanbul" 1 instead of 2.
 
     Exists because the split form is a measured r9 pathology: the
     NEGATED char class costs ~36 µs/doc in java.util.regex on this JVM
@@ -84,7 +87,7 @@ def n_words(col: Column) -> Column:
     this wherever only the COUNT is needed; fall back to ``words()``
     when the word list itself is consumed."""
     return F.coalesce(
-        F.regexp_count(col, F.lit("[a-zA-Z0-9']+")),
+        F.regexp_count(F.lower(col), F.lit("[a-zA-Z0-9']+")),
         F.lit(0))
 
 

@@ -113,6 +113,43 @@ class CheckPlan:
         return out
 
 
+def row_violation_structs(rules: Sequence[RowRule],
+                          oks: Sequence[Column]) -> List[Column]:
+    """Per row rule, ``struct(rule_id, detail)`` when its verdict column
+    is not True (NULL fails), else NULL; detail is the rule's detail or
+    its spec.  Shared by the batch sink and the violations stream."""
+    return [
+        F.when(
+            ~F.coalesce(ok, F.lit(False)),
+            F.struct(
+                F.lit(r.rule_id).alias("rule_id"),
+                F.lit(r.detail or r.spec).alias("detail"),
+            ),
+        )
+        for r, ok in zip(rules, oks)
+    ]
+
+
+def explode_violations(df: DataFrame, key_col: str,
+                       structs: Sequence[Column]) -> DataFrame:
+    """The violations sink rows ``(url, rule_id, detail)``: one per
+    non-NULL struct of each row of ``df``, with ``url`` the key column as
+    a string.  Rows without a failure are dropped before the explode."""
+    return (
+        df.select(
+            F.col(key_col),
+            F.array_compact(F.array(*structs)).alias("fails"),
+        )
+        .filter(F.size("fails") > 0)
+        .select(F.col(key_col), F.explode("fails").alias("f"))
+        .select(
+            F.col(key_col).cast("string").alias("url"),
+            F.col("f.rule_id").alias("rule_id"),
+            F.col("f.detail").alias("detail"),
+        )
+    )
+
+
 def _salted_duplicate_keys(df: DataFrame, key: str,
                            cfg: SkewSalt) -> DataFrame:
     """Skew-aware duplicate detection: hot keys (from the approx
@@ -341,16 +378,8 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
         )
 
     # ---- pass 2: violations (row rules + referential) ----
-    viol_structs = [
-        F.when(
-            ~F.coalesce(F.col(f"ok_{i}"), F.lit(False)),
-            F.struct(
-                F.lit(r.rule_id).alias("rule_id"),
-                F.lit(r.detail or r.spec).alias("detail"),
-            ),
-        )
-        for i, r in enumerate(rules)
-    ]
+    viol_structs = row_violation_structs(
+        rules, [F.col(f"ok_{i}") for i in range(len(rules))])
     for i, r in enumerate(plan.ref_rules):
         viol_structs.append(
             F.when(
@@ -366,19 +395,7 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
         )
     violations = None
     if viol_structs:
-        violations = (
-            checked.select(
-                F.col("__key"),
-                F.array_compact(F.array(*viol_structs)).alias("fails"),
-            )
-            .filter(F.size("fails") > 0)
-            .select(F.col("__key"), F.explode("fails").alias("f"))
-            .select(
-                F.col("__key").cast("string").alias("url"),
-                F.col("f.rule_id").alias("rule_id"),
-                F.col("f.detail").alias("detail"),
-            )
-        )
+        violations = explode_violations(checked, "__key", viol_structs)
 
     # ---- pass 3: all drift histograms in ONE grouping-sets scan ----
     if plan.drift_rules:

@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..plans.checkplan import CheckPlan
+from ..plans.checkplan import (
+    CheckPlan,
+    explode_violations,
+    row_violation_structs,
+)
 
 
 def _rule_cols(df: DataFrame, plan: CheckPlan):
@@ -32,23 +36,11 @@ def _rule_cols(df: DataFrame, plan: CheckPlan):
 
 def stream_violations(stream: DataFrame, plan: CheckPlan,
                       key_col: str = "url") -> DataFrame:
-    """Append-mode violations stream: (url, rule_id, detail)."""
-    pairs = _rule_cols(stream, plan)
-    structs = [
-        F.when(~F.coalesce(ok, F.lit(False)),
-               F.struct(F.lit(rid).alias("rule_id"),
-                        F.lit(rid).alias("detail")))
-        for rid, ok in pairs
-    ]
-    return (
-        stream.select(
-            F.col(key_col).cast("string").alias("url"),
-            F.array_compact(F.array(*structs)).alias("fails"),
-        )
-        .filter(F.size("fails") > 0)
-        .select("url", F.explode("fails").alias("f"))
-        .select("url", "f.rule_id", "f.detail")
-    )
+    """Append-mode violations stream: (url, rule_id, detail), the rows
+    the batch violations sink writes for the same row rules."""
+    oks = [ok for _, ok in _rule_cols(stream, plan)]
+    return explode_violations(
+        stream, key_col, row_violation_structs(plan.row_rules, oks))
 
 
 def windowed_verdicts(stream: DataFrame, plan: CheckPlan, ts_col: str,

@@ -151,6 +151,9 @@ def test_words_positive_class_parity(spark):
         "unicode café über straße", "'' '", "x'y'z",
         "trailing space ", " leading", "a!b@c#d$e%f", "\n\n\n",
         "0'0 ''a'' b", "é combining",
+        # lower() maps these into the ASCII word class: KELVIN SIGN ->
+        # "k", dotted capital I -> "i" + U+0307
+        "\u212a", "\u0130stanbul",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(cases)],
                                "i long, t string")

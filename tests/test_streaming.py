@@ -63,11 +63,18 @@ def test_stream_violations(spark, stream_dir):
     stream = spark.readStream.schema(SCHEMA).parquet(stream_dir)
     out = stream_violations(stream, PLAN, key_col="url")
     _run_to_memory(out, "viol")
-    rows = {(r["url"], r["rule_id"]) for r in spark.sql("select * from viol").collect()}
+    got = spark.sql("select * from viol").collect()
+    rows = {(r["url"], r["rule_id"]) for r in got}
     assert ("http://b/3", "url_https") in rows
     assert ("https://a/2", "lang_shape") in rows
     assert ("https://a/5", "lang_shape") in rows
     assert len(rows) == 3
+    # detail as the batch violations sink writes it: the rule's detail,
+    # else its spec
+    assert {(r["rule_id"], r["detail"]) for r in got} == {
+        ("url_https", '.url ^= "https://"'),
+        ("lang_shape", '.lang ~= "^[a-z]{2}$"'),
+    }
 
 
 def test_windowed_verdicts(spark, stream_dir):
@@ -280,3 +287,38 @@ def test_stream_route_matches_batch(spark, tmp_path):
     for i, (b, s, sh) in got.items():
         assert (b, s) == want_split[i]
         assert sh == want_shard[i]
+
+
+def test_table_stream_link_follows_the_table(spark, tmp_path, monkeypatch):
+    """The entry's file-stream source keys its symlink directory on the
+    table's absolute path, so a relative sf_dir from any cwd shares it,
+    and it repoints a link found there that names another file."""
+    import glob
+    import os
+    import shutil
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as e
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = str(sf / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": [1, 2, 3]}), src)
+    monkeypatch.chdir(tmp_path)
+    e._table_stream(spark, "sf", "documents")
+    links = [p for p in glob.glob(os.path.join(
+        tempfile.gettempdir(), "spark_graft_stream_*", "documents.parquet"))
+        if os.readlink(p) == src]
+    assert len(links) == 1
+    try:
+        os.remove(links[0])
+        os.symlink(str(tmp_path / "elsewhere.parquet"), links[0])
+        monkeypatch.chdir(sf)
+        out = e._drain(e._table_stream(spark, "../sf", "documents"))
+        assert os.readlink(links[0]) == src
+        assert sorted(r.doc_id for r in out.collect()) == [1, 2, 3]
+    finally:
+        shutil.rmtree(os.path.dirname(links[0]))
