@@ -259,15 +259,32 @@ def _table_stream(spark: SparkSession, sf_dir: str,
     return spark.readStream.schema(spark.read.parquet(src).schema).parquet(d)
 
 
-def _drain(out: DataFrame, mode: str = "append") -> DataFrame:
-    """Run a stream to completion (one availableNow pass) into a fresh
-    memory sink and return the sink's table."""
-    import uuid
+def _drain(out: DataFrame, query: str, mode: str = "append") -> DataFrame:
+    """Run a stream to completion (one availableNow pass) into the memory
+    sink named after ``query`` and return the sink's table.
 
-    name = "spark_graft_sink_" + uuid.uuid4().hex[:12]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode(mode).trigger(availableNow=True).start())
-    q.awaitTermination()
+    One sink name per streaming query: the memory sink registers its
+    table with ``createOrReplaceTempView``, so a re-run replaces its own
+    table instead of leaving one more result set in driver memory for
+    the life of the session.  A frame returned by an earlier run keeps
+    the rows of its own run.
+
+    Each run gets a fresh checkpoint: under a session-wide
+    ``spark.sql.streaming.checkpointLocation`` Spark would otherwise
+    checkpoint at ``<location>/<query name>`` and a re-run would resume
+    past the input it already read."""
+    import shutil
+    import tempfile
+
+    name = "spark_graft_sink_" + query
+    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+    try:
+        q = (out.writeStream.format("memory").queryName(name)
+             .option("checkpointLocation", ckpt)
+             .outputMode(mode).trigger(availableNow=True).start())
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return out.sparkSession.table(name)
 
 
@@ -382,7 +399,7 @@ def _q_stream_dedup(spark, sf_dir):
         "ts", F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id")))
     out = stream_dedup_normalized(stream, "text", "ts",
                                   watermark="10 minutes")
-    return _drain(out).select(
+    return _drain(out, "stream_dedup").select(
         F.md5(tx.normalize_ws(F.col("text"))).alias("fp"))
 
 
@@ -398,7 +415,7 @@ def _q_stream_route(spark, sf_dir):
     out = stream_route(_table_stream(spark, sf_dir, "documents"),
                        "doc_id", seed="split-v1",
                        n_shards=16, shard_seed="shuffle-v1")
-    return _drain(out)
+    return _drain(out, "stream_route")
 
 
 def _q_sampled_validation(spark, sf_dir):
@@ -714,7 +731,7 @@ def _q_stream_doc_violations(spark, sf_dir):
     ])
     out = stream_violations(_table_stream(spark, sf_dir, "documents"),
                             plan, key_col="doc_id")
-    return _drain(out).select(
+    return _drain(out, "stream_doc_violations").select(
         F.col("url").cast("bigint").alias("doc_id"), "rule_id")
 
 
@@ -744,7 +761,7 @@ def _q_stream_windowed_verdicts(spark, sf_dir):
     ])
     out = windowed_verdicts(stream, plan, ts_col="ts", window="1 hour",
                             watermark="2 hours")
-    return _drain(out, "complete").select(
+    return _drain(out, "stream_windowed_verdicts", "complete").select(
         "window_start", "window_end", "rows_checked",
         "pass_value_pos", "pass_type_known")
 
@@ -766,7 +783,7 @@ def _q_stream_monotonic(spark, sf_dir):
     out = monotonic_check(stream, key_col="user_id", seq_col="event_id",
                           ts_col="ts", watermark="2 hours",
                           sort_within_batch=True)
-    return _drain(out).select("user_id", "prev_seq", "seq")
+    return _drain(out, "stream_monotonic").select("user_id", "prev_seq", "seq")
 
 
 def _q_xml_validate(spark, sf_dir):
@@ -892,19 +909,12 @@ def _q_corpus_curation_full(spark, sf_dir):
     # would each become their own ArrowEvalPython eval now that the UDF
     # is nondeterministic (r9 plan showed [feats, feats, feats]), and a
     # deterministic call's filter sinks below the parallelize exchange
-    rep = F.col("__rep")
-    rep_flag = (
-        (rep.getField("dup_line_frac") > 0.30)
-        | (rep.getField("top_bigram_frac") > 0.20)
-        | (rep.getField("dup_trigram_frac") > 0.30)
-    )
     filtered = (
         train.filter(F.col("lang").isin("en", "de"))
         .withColumn("n_words", tx.n_words(F.col("text")))
         .filter(F.col("n_words") >= 40)
         .withColumn("__rep", tx.repetition_features_udf()(F.col("text")))
-        # Arrow hot path; bit-identical to tx.repetition_flag (parity test)
-        .filter(~rep_flag)
+        .filter(~tx.repetition_flag(F.col("__rep")))
         .drop("__rep")
         .withColumn("__fp", F.md5(normalized))
         # persist() is load-bearing: `filtered` feeds BOTH the
@@ -1771,7 +1781,7 @@ def _q_stream_warc(spark, sf_dir):
     payloads = stream.select(
         F.col("doc_id"),
         _warc_payload(F.col("doc_id"), F.col("text")).alias("payload"))
-    return _drain(stream_warc_records(payloads))
+    return _drain(stream_warc_records(payloads), "stream_warc")
 
 
 def _q_jsonl_roundtrip(spark, sf_dir):
@@ -2048,7 +2058,8 @@ def _q_stream_semantic_route(spark, sf_dir):
     stream = (_table_stream(spark, sf_dir, "embeddings")
               .repartition(spark.sparkContext.defaultParallelism))
     return _drain(stream_semantic_route(stream, cents, dim=64, n_shards=16,
-                                        shard_seed="shuffle-v1"))
+                                        shard_seed="shuffle-v1"),
+                  "stream_semantic_route")
 
 
 def _q_html_text_extract(spark, sf_dir):
@@ -2461,19 +2472,13 @@ def _q_sessionize_events(spark, sf_dir):
 
 def _q_gopher_quality(spark, sf_dir):
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1): per-doc
-    map-side pass, Arrow-vectorized (Catalyst formulation kept as the
-    parity reference in textops.repetition_features)."""
+    map-side pass through the Arrow UDF textops.repetition_features_udf."""
     docs = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism)
     # one projection of the nondeterministic struct, fields read from
     # the projected column (eight raw references would be eight
     # ArrowEvalPython evals — the corpus_curation_full r9 lesson)
     f = F.col("__rep")
-    flagged = (
-        (f.getField("dup_line_frac") > 0.30)
-        | (f.getField("top_bigram_frac") > 0.20)
-        | (f.getField("dup_trigram_frac") > 0.30)
-    )
     # int/int ratio columns are bit-identical by construction — deliberately
     # NOT rounded (ROUND itself can differ between engines at half-ulp).
     return docs.withColumn(
@@ -2484,7 +2489,7 @@ def _q_gopher_quality(spark, sf_dir):
         f.getField("dup_line_frac").alias("dup_line_frac"),
         f.getField("top_bigram_frac").alias("top_bigram_frac"),
         f.getField("dup_trigram_frac").alias("dup_trigram_frac"),
-        flagged.alias("flagged"),
+        tx.repetition_flag(f).alias("flagged"),
     )
 
 

@@ -32,9 +32,9 @@ def distinct_ngrams_udf(n: int, short_fallback: bool = False):
     docs at sf0.1 vs milliseconds for this UDF.  Same word split as
     textops.words / the SQL oracle.
 
-    ``short_fallback=True`` reproduces textops.shingles semantics for
-    documents shorter than n words (one whole-text shingle instead of no
-    grams) — used by the jaccard path, whose oracle mirrors it.
+    ``short_fallback=True`` gives documents shorter than n words one
+    whole-text shingle (the space-joined word list) instead of no grams —
+    used by the jaccard path, whose oracle mirrors it.
     """
     import re
 

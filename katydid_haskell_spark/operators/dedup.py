@@ -16,8 +16,7 @@ Five families, each designed around Spark's shuffle model:
 
 MinHash signatures use the classic ``(a*x + b) mod p`` permutations over
 md5-derived word/shingle hashes (md5 so the DuckDB oracle can re-derive
-the identical signatures), computed as Arrow-batched numpy on the hot
-path with pure-Catalyst formulations kept for cross-checks.
+the identical signatures), computed as Arrow-batched numpy.
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ from __future__ import annotations
 import re
 from functools import lru_cache
 from hashlib import md5
-from typing import Iterator, List, Sequence
 
 import numpy as np
 import pandas as pd
@@ -33,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .textops import fingerprint, rolling_fingerprints, words
+from .textops import fingerprint
 
 # Mersenne prime 2^31-1: (a*h+b) stays under 2^62, so the permutation
 # arithmetic cannot overflow a long even under ANSI mode (Spark 4 default).
@@ -113,71 +111,12 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(hashes: Column, num_hashes: int = 64) -> Column:
-    """Array<long> minhash signature from a shingle-hash array column.
-
-    ONE traversal of the hash array: the accumulator is the vector of
-    current minima and each step folds all permutations of one hash via
-    ``zip_with(acc, perms(h), least)`` — O(shingles × num_hashes) work in a
-    single Catalyst ``aggregate`` (no recomputation of the shingle
-    pipeline per permutation).
-    """
-    perms = _perm_params(num_hashes)
-    init = F.array_repeat(F.lit(_MERSENNE).cast("long"), num_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[
-                F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE))
-                for a, b in perms
-            ]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-
-
-def shingle_hashes(text: Column, shingle_k: int = 5) -> Column:
-    """Shingle hashes folded into [0, 2^31-1) for overflow-free perms.
-
-    Fast path: hash each WORD once (xxhash64 → 31 bits), then each k-shingle
-    hash is a small polynomial combination of word hashes — no k-word string
-    materialization, O(words · k) cheap integer ops.  All intermediates stay
-    < 2^53, safe under ANSI overflow checking.
-    """
-    wh = F.transform(words(text), lambda w: F.pmod(F.xxhash64(w), F.lit(_MERSENNE)))
-    n = F.size(wh)
-    weights = [pow(31, j, _MERSENNE) for j in range(shingle_k)]
-
-    def combo(i):
-        acc = F.lit(0).cast("long")
-        for j, w in enumerate(weights):
-            acc = acc + F.get(wh, i + j) * F.lit(w % (1 << 20))
-        return F.pmod(acc, F.lit(_MERSENNE))
-
-    whole = F.array(
-        F.pmod(
-            F.aggregate(wh, F.lit(0).cast("long"),
-                        lambda acc, h: F.pmod(acc * 31 + h, F.lit(_MERSENNE))),
-            F.lit(_MERSENNE),
-        )
-    )
-    idx = F.sequence(F.lit(0), F.greatest(n - shingle_k, F.lit(0)))
-    return F.when(n >= shingle_k, F.transform(idx, combo)).otherwise(whole)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized signature computation (the production hot path)
-# ---------------------------------------------------------------------------
-#
-# The pure-Catalyst signature pipeline above is kept for reference and
-# cross-checks, but Spark evaluates higher-order array functions in
-# *interpreted* mode (no whole-stage codegen): measured ~24 ms/doc for a
-# 32-permutation signature.  The Arrow path below does the same math as
-# vectorized numpy over record batches (~0.05 ms/doc), which is the
-# sanctioned fast path when built-ins can't express the computation
-# efficiently (SURVEY.md §2.3).
+# Signatures are Arrow-batched numpy over record batches (~0.05 ms/doc):
+# Spark evaluates the higher-order array functions a Catalyst formulation
+# would need in *interpreted* mode (no whole-stage codegen; measured
+# ~24 ms/doc for a 32-permutation signature), which makes vectorized
+# Arrow batches the sanctioned fast path here (SURVEY.md §2.3).  The
+# DuckDB oracles (:mod:`..oracles`) re-derive the same signatures.
 
 _WORD_RE = re.compile(r"[^a-zA-Z0-9']+")
 
@@ -455,38 +394,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 
 
-def simhash(text: Column, bits: int = 64, shingle_k: int = 2) -> Column:
-    """SimHash signature: sign-sum of feature-hash bits, via aggregate over
-    a per-bit counter array (JVM higher-order functions).
-
-    Shift amounts are compile-time constants (unrolled in Python) — Spark's
-    shiftright/shiftleft require literal bit counts."""
-    feats = rolling_fingerprints(text, shingle_k)
-    zero = F.array_repeat(F.lit(0), bits)
-    counts = F.aggregate(
-        feats,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[
-                F.when(
-                    F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1))
-                for i in range(bits)
-            ]),
-            lambda a, b: a + b,
-        ),
-    )
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        mask = (1 << i) if i < 63 else -(1 << 63)  # top bit = Long.MIN
-        out = out.bitwiseOR(
-            F.when(F.element_at(counts, i + 1) > 0,
-                   F.lit(mask).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return out
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -576,10 +483,10 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     sh = df.select(
         F.col(id_col).alias("doc_id"),
         # distinct ONCE per document, before the pair join fans out;
-        # Arrow UDF, not Catalyst shingles — interpreted array HOFs
+        # Arrow UDF, not a Catalyst n-gram array — interpreted array HOFs
         # re-evaluate the embedded word split per element (no CSE), ~8ms
-        # per doc.  short_fallback matches shingles()' <k-words semantics
-        # (and the SQL oracle's ELSE branch).
+        # per doc.  short_fallback keeps the whole word list as the one
+        # shingle of a doc under k words (the SQL oracle's ELSE branch).
         distinct_ngrams_udf(k, short_fallback=True)(
             F.col(text_col)).alias("sh"),
         (group_col if group_col is not None else F.lit(0)).alias("grp"),

@@ -128,29 +128,3 @@ def orphan_rows_bloom(fact: DataFrame, fk: str, dim: DataFrame,
     h1, h2 = _bloom_hashes(F.col(fk))
     return fact.filter(
         F.col(fk).isNull() | bloom_miss(h1, h2))
-
-
-def referential_violations(fact: DataFrame, fk: str, dim: DataFrame,
-                           dim_key: str, key_col: str = "url",
-                           rule_id: str = "lang_in_iso639") -> DataFrame:
-    return orphan_rows(fact, fk, dim, dim_key).select(
-        F.col(key_col).cast("string").alias("url"),
-        F.lit(rule_id).alias("rule_id"),
-        F.concat(F.lit(f"{fk}="),
-                 F.coalesce(F.col(fk).cast("string"), F.lit("NULL")),
-                 F.lit(" not in dimension")).alias("detail"),
-    )
-
-
-def referential_verdict(fact: DataFrame, fk: str, dim: DataFrame,
-                        dim_key: str, rule_id: str = "lang_in_iso639") -> DataFrame:
-    agg = orphan_rows(fact, fk, dim, dim_key).agg(
-        F.count(F.lit(1)).alias("orphans")
-    )
-    return agg.select(
-        F.lit(rule_id).alias("rule_id"),
-        F.lit("table").alias("scope"),
-        (F.col("orphans") == 0).alias("pass"),
-        F.col("orphans").cast("double").alias("metric"),
-        F.concat(F.lit("orphan rows="), F.col("orphans")).alias("detail"),
-    )

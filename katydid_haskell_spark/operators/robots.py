@@ -19,13 +19,10 @@ robots.txt matcher documentation):
   the raw pattern text); at equal length ``Allow`` wins; no matching
   rule → allowed.
 
-100-TB shape: robots bodies are parsed ONCE per host into a narrow
-(host, agent, allow, pattern, prio) rule table — a per-host Arrow
-projection; URL matching joins URLs to that table host-keyed (a
-rules table is orders of magnitude smaller than a crawl frontier;
-AQE broadcasts it when it fits) and reduces with one ``max_by``
-aggregation — no window, no per-URL Python.  The robots text itself
-never crosses an exchange: only rule rows shuffle.
+Plan shape: :func:`robots_decide_udf` is one Arrow projection over
+(robots body, agent, path) rows — each distinct body is parsed once per
+batch and each pattern compiled once per worker (:func:`_compiled`), so
+URL admission adds no exchange of its own.
 """
 
 from __future__ import annotations
@@ -35,8 +32,6 @@ import re
 from typing import List, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 Rule = Tuple[str, bool, str]  # (agent lowercase, allow, raw pattern)
@@ -46,8 +41,7 @@ Rule = Tuple[str, bool, str]  # (agent lowercase, allow, raw pattern)
 def _compiled(regex: str):
     """Compiled-pattern cache: robots rule sets repeat across millions of
     URLs per host, so per-match re.compile would dominate the Arrow
-    matcher (the same reason the Catalyst RLIKE path pays a per-row
-    Pattern.compile for a non-literal pattern column)."""
+    matcher."""
     return re.compile(regex)
 
 
@@ -138,113 +132,3 @@ def robots_decide_udf():
 
     return run
 
-
-def rules_table(robots: DataFrame, host_col: str = "host",
-                text_col: str = "robots_txt") -> DataFrame:
-    """(host, robots body) → exploded narrow rule rows
-    (host, agent, allow, pattern, prio, regex) — parsed once per host
-    in an Arrow projection; the body never leaves the map side."""
-
-    @pandas_udf("array<struct<agent: string, allow: boolean,"
-                " pattern: string>>")
-    def parse(texts: pd.Series) -> pd.Series:
-        return pd.Series([
-            [{"agent": a, "allow": al, "pattern": p}
-             for a, al, p in parse_robots(t or "")]
-            for t in texts
-        ])
-
-    return (robots
-            .select(F.col(host_col).alias("host"),
-                    F.explode(parse(F.col(text_col))).alias("r"))
-            .select("host", "r.agent", "r.allow", "r.pattern")
-            .withColumn("prio", F.length("pattern"))
-            .withColumn("regex", _regex_expr(F.col("pattern"))))
-
-
-def _regex_expr(pattern):
-    """Catalyst mirror of :func:`pattern_regex` for LITERAL-free rule
-    tables: escape the regex specials char-by-char, then rewrite ``*``
-    and the trailing ``$``.  Kept in the Java/RE2 common subset."""
-    esc = pattern
-    # escape regex metacharacters EXCEPT * and $ (handled below)
-    for ch in ["\\", ".", "+", "?", "(", ")", "[", "]", "{", "}", "|",
-               "^"]:
-        esc = F.replace(esc, F.lit(ch), F.lit("\\" + ch))
-    has_end = esc.endswith("$")
-    body = F.when(has_end, F.substring(esc, 1, F.length(esc) - 1)) \
-        .otherwise(esc)
-    body = F.replace(body, F.lit("*"), F.lit(".*"))
-    # a non-trailing $ is a literal dollar
-    body = F.replace(body, F.lit("$"), F.lit("\\$"))
-    return F.concat(F.lit("^"), body,
-                    F.when(has_end, F.lit("$")).otherwise(F.lit("")))
-
-
-def match_urls(urls: DataFrame, rules: DataFrame, agent: str,
-               host_col: str = "host",
-               path_col: str = "path") -> DataFrame:
-    """Distributed URL admission: join each URL's host to its rule rows
-    (the requesting agent's group, else the ``*`` group), regexp-match
-    the path, reduce with ``max_by`` on (prio, allow) — longest match
-    wins, Allow breaks ties — default allowed.  One host-keyed join +
-    one aggregation; no window, no Python in the match path."""
-    agent = agent.lower()
-    grp = rules.filter(F.lower(F.col("agent")).isin(agent, "*"))
-    # exact-agent group presence beats '*': keep rows of the most
-    # specific agent present per host
-    best_agent = (grp.groupBy("host")
-                  .agg(F.max(F.when(F.lower(F.col("agent")) == agent,
-                                    F.lit(1)).otherwise(F.lit(0)))
-                       .alias("has_exact")))
-    grp = (grp.join(best_agent, "host")
-           .filter((F.lower(F.col("agent")) == agent)
-                   | (F.col("has_exact") == 0)))
-    u = urls.select(F.col(host_col).alias("host"),
-                    F.col(path_col).alias("path"))
-    hits = (u.join(grp, "host", "left")
-            # Column.rlike takes a str literal only; RLIKE with a column
-            # pattern is Spark-SQL-level
-            .withColumn("m", F.expr("path RLIKE regex"))
-            .withColumn("hit", F.coalesce(F.col("m"), F.lit(False))))
-    return (hits.groupBy("host", "path")
-            .agg(F.max_by(
-                F.col("allow"),
-                F.when(F.col("hit"),
-                       F.struct(F.col("prio"),
-                                F.col("allow").cast("int")))
-            ).alias("best_allow"),
-                F.max(F.when(F.col("hit"), F.col("prio"))
-                      .otherwise(F.lit(0))).alias("match_len"))
-            .select("host", "path",
-                    F.coalesce("best_allow", F.lit(True)).alias("allowed"),
-                    F.coalesce("match_len", F.lit(0)).alias("match_len")))
-
-
-def match_urls_arrow(urls: DataFrame, robots: DataFrame, agent: str,
-                     host_col: str = "host",
-                     text_col: str = "robots_txt",
-                     path_col: str = "path") -> DataFrame:
-    """Arrow-batched URL admission: join each URL to its host's robots
-    BODY (the robots table is per-host and tiny next to a frontier —
-    AQE broadcasts it), then one vectorized projection running the SAME
-    parse/decide engine as the oracled entry — parse cached per
-    distinct body per batch, compiled patterns cached process-wide
-    (:func:`_compiled`).
-
-    The alternative plan shape to :func:`match_urls`: that one stays
-    JVM-side but RLIKE with a pattern COLUMN recompiles per row; this
-    one pays the Python batch transfer but compiles each pattern once
-    per worker.  Same decisions (parity-tested); pick by deployment —
-    huge frontiers with few rules favor this path."""
-    u = urls.select(F.col(host_col).alias("host"),
-                    F.col(path_col).alias("path"))
-    b = robots.select(F.col(host_col).alias("host"),
-                      F.col(text_col).alias("__rb"))
-    d = robots_decide_udf()(F.coalesce(F.col("__rb"), F.lit("")),
-                            F.lit(agent), F.col("path"))
-    return (u.join(F.broadcast(b), "host", "left")
-            .withColumn("d", d)
-            .select("host", "path",
-                    F.col("d.allowed").alias("allowed"),
-                    F.col("d.match_len").alias("match_len")))

@@ -12,8 +12,8 @@ Vector math runs as Arrow-batched numpy (pandas UDFs): Spark evaluates
 higher-order array functions *interpreted* (no codegen; measured 14-19×
 slower) and giant literal expressions cost seconds of Janino compilation,
 so the sanctioned fast path for this math is vectorized Arrow batches.
-Catalyst formulations (dot/norm/cosine/lsh_code/_cell_sims/ivf_cell) are
-kept as the cross-check reference implementations.
+The DuckDB oracles (:mod:`..oracles`) re-derive every sign, argmax and
+ordering decision with left-to-right double folds.
 """
 
 from __future__ import annotations
@@ -22,30 +22,10 @@ from typing import List, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
-
-
-def dot(a: Column, b: Column) -> Column:
-    # Widen to double BEFORE the multiply: float32 products lose ~7 digits,
-    # which is enough to flip LSH sign bits / argmax cell choices near the
-    # boundary and diverge from any double-precision oracle.
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -140,17 +120,6 @@ def _hyperplane(dim: int, bit: int, seed: int = 1234) -> List[float]:
     return out
 
 
-def lsh_code(vec: Column, dim: int, n_bits: int = 12, seed: int = 1234) -> Column:
-    """Random-hyperplane signature: n_bits sign bits packed into a long."""
-    code = F.lit(0).cast("long")
-    for b in range(n_bits):
-        plane = F.array(*[F.lit(w) for w in _hyperplane(dim, b, seed)])
-        bit = F.when(dot(vec, plane) >= 0,
-                     F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-        code = code.bitwiseOR(bit)
-    return code
-
-
 def _stack(vecs: pd.Series, dim: int) -> "np.ndarray":
     if len(vecs) == 0:
         return np.zeros((0, dim), dtype=np.float64)
@@ -166,9 +135,8 @@ _REL_MARGIN = 1e-9
 
 def _ordered_matmul(x: "np.ndarray", p: "np.ndarray") -> "np.ndarray":
     """``x @ p`` with summation as a strict left-to-right IEEE-double fold
-    over the shared dimension — bit-identical to the Catalyst
-    ``aggregate(zip_with(a, b, *), 0.0, +)`` fold in :func:`dot` and the
-    DuckDB oracle's ordered list fold, vectorized across (row, column).
+    over the shared dimension — the summation order of the DuckDB
+    oracles' ``list_inner_product`` — vectorized across (row, column).
 
     This is the parity anchor for every sign / argmax / ordering decision
     the Arrow paths make: BLAS matmul reorders the summation (ulp-scale
@@ -181,8 +149,8 @@ def _ordered_matmul(x: "np.ndarray", p: "np.ndarray") -> "np.ndarray":
 
 
 def _ordered_self_dot(x: "np.ndarray") -> "np.ndarray":
-    """Per-row ordered-fold self dot (for norms bit-identical to
-    ``sqrt(dot(v, v))`` in the Catalyst formulation)."""
+    """Per-row ordered-fold self dot (for norms bit-identical to an
+    ordered ``sqrt(sum(v*v))`` fold)."""
     out = np.zeros(x.shape[0], dtype=np.float64)
     for k in range(x.shape[1]):
         out += x[:, k] * x[:, k]
@@ -192,17 +160,19 @@ def _ordered_self_dot(x: "np.ndarray") -> "np.ndarray":
 def lsh_codes_udf(dim: int, n_bits: int, seeds: Sequence[int]):
     """Arrow-vectorized hyperplane codes, one per seed → array<long>.
 
-    Same math as :func:`lsh_code` (double-precision dots against the
-    deterministic hyperplanes) but evaluated as one numpy matmul per batch
-    instead of per-row interpreted higher-order functions — Spark runs
-    array HOFs without codegen, measured 14-19× slower (docs/PLANS.md).
+    Bit ``b`` of a code is set when the double-precision dot of the
+    vector with hyperplane ``_hyperplane(dim, b, seed)`` is >= 0 (the
+    DuckDB oracle's ``oracles._code_expr``), evaluated as one numpy
+    matmul per batch instead of per-row interpreted higher-order
+    functions — Spark runs array HOFs without codegen, measured 14-19×
+    slower (docs/PLANS.md).
 
     Float-discipline guarantee: BLAS matmul reorders the summation, so a
     dot within reordering distance of 0.0 could flip its sign bit vs the
-    Catalyst/DuckDB ordered fold.  Rows with any |dot| inside the
+    oracle's ordered fold.  Rows with any |dot| inside the
     ``_REL_MARGIN`` guard band recompute through :func:`_ordered_matmul`
     (the exact ordered fold), so every SIGN decision this UDF makes is
-    identical to the Catalyst ``dot()`` formulation — bucket membership is
+    the ordered fold's — bucket membership is
     summation-order-independent.
     """
     planes = [
@@ -234,8 +204,9 @@ def lsh_codes_udf(dim: int, n_bits: int, seeds: Sequence[int]):
 
 
 def cell_assign_udf(centroids: List[List[float]], dim: int):
-    """Arrow-vectorized nearest-centroid assignment (first-max ties, same
-    as :func:`ivf_cell`).
+    """Arrow-vectorized nearest-centroid assignment: the 0-based cell of
+    the largest cosine sim to a unit-norm centroid, the FIRST such cell
+    on a tie (0 for a zero vector).
 
     Argmax parity guarantee: rows whose top-2 sim gap is inside the
     reordering guard band recompute their dots via the exact ordered fold
@@ -267,8 +238,9 @@ def cell_assign_udf(centroids: List[List[float]], dim: int):
 
 def cosine_pairs_udf(dim: int):
     """Arrow-vectorized cosine over pairs of vector columns — the candidate
-    verification path.  Same semantics as :func:`cosine` (0.0 on zero
-    norms) but one numpy batch op instead of per-row interpreted HOFs."""
+    verification path: double-precision dot over the norm product, 0.0
+    on a zero norm; one numpy batch op instead of per-row interpreted
+    HOFs."""
 
     @pandas_udf("double")
     def cospair(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -284,17 +256,16 @@ def cosine_pairs_udf(dim: int):
 
 def probe_cells_udf(centroids: List[List[float]], dim: int, nprobe: int):
     """Arrow-vectorized top-nprobe probe cells per query, ordered by
-    (sim DESC, cell DESC) — the exact order of
-    ``reverse(array_sort(zip_with(sims, cells, struct)))`` in the Catalyst
-    formulation (which is kept for cross-checks but not used in the hot
-    path: a 16×64-literal Catalyst expression costs seconds of Janino
-    compilation per fresh plan).
+    (sim DESC, cell DESC) — the order of a descending sort of
+    (sim, cell) structs, as the IVF oracle probes (a 16×64-literal
+    Catalyst expression would cost seconds of Janino compilation per
+    fresh plan).
 
     Ordering parity guarantee: this UDF runs on the (small) QUERY side, so
     it computes every dot and norm with the exact ordered fold
     (:func:`_ordered_matmul` / :func:`_ordered_self_dot`) — the sims are
-    bit-identical to the Catalyst ``_cell_sims`` doubles, so the probe
-    ORDER (incl. near-ties) is summation-order-independent."""
+    bit-identical ordered-fold doubles, so the probe ORDER (incl.
+    near-ties) is summation-order-independent."""
     c = np.array(centroids, dtype=np.float64)
     n_cells = len(centroids)
     take = min(nprobe, n_cells)
@@ -449,22 +420,6 @@ def kmeans_unit(x: "np.ndarray", n_cells: int, iters: int = 8,
                 if n > 0:
                     cents[c] = m / n
     return [c.tolist() for c in cents]
-
-
-def _cell_sims(vec: Column, centroids: List[List[float]]) -> Column:
-    """Array of cosine sims to each centroid (centroids are unit-norm)."""
-    n = norm(vec)
-    return F.array(*[
-        F.when(n > 0, dot(vec, F.array(*[F.lit(w) for w in c])) / n)
-        .otherwise(F.lit(0.0))
-        for c in centroids
-    ])
-
-
-def ivf_cell(vec: Column, centroids: List[List[float]]) -> Column:
-    """Nearest-centroid cell id (0-based)."""
-    sims = _cell_sims(vec, centroids)
-    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
 
 
 def auto_nprobe(n_cells: int, fraction: float = 0.4) -> int:

@@ -11,7 +11,7 @@ pre-aggregated values.  Distinct counts use per-bucket HLL sketches
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, List, Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -84,38 +84,6 @@ def _check(op: str, m: Column, v, v_hi=None) -> Column:
     if op == "between":
         return (m >= v) & (m <= v_hi)
     raise ValueError(f"unknown stat op: {op}")
-
-
-def column_profile(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """Wide single-pass profile: for each column count/nulls/min/max/distinct.
-
-    Output (long format): column, n_rows, n_nonnull, null_rate, min_str,
-    max_str, approx_distinct.
-    """
-    aggs: List[Column] = [F.count(F.lit(1)).alias("n_rows")]
-    for c in columns:
-        aggs += [
-            F.count(c).alias(f"{c}__nonnull"),
-            F.min(F.col(c).cast("string")).alias(f"{c}__min"),
-            F.max(F.col(c).cast("string")).alias(f"{c}__max"),
-            F.approx_count_distinct(c).alias(f"{c}__distinct"),
-        ]
-    wide = df.agg(*aggs)
-    stacks = []
-    for c in columns:
-        stacks.append(
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col("n_rows").alias("n_rows"),
-                F.col(f"{c}__nonnull").alias("n_nonnull"),
-                ((F.col("n_rows") - F.col(f"{c}__nonnull"))
-                 / F.col("n_rows")).alias("null_rate"),
-                F.col(f"{c}__min").alias("min_str"),
-                F.col(f"{c}__max").alias("max_str"),
-                F.col(f"{c}__distinct").alias("approx_distinct"),
-            )
-        )
-    return wide.select(F.explode(F.array(*stacks)).alias("s")).select("s.*")
 
 
 def hll_bucket_sketches(df: DataFrame, column: str,

@@ -1,12 +1,13 @@
 """Text analysis for large-scale training-data pipelines.
 
 Token counting and fingerprinting are built-in Catalyst expressions (JVM
-regexp_count / xxhash64, whole-stage codegen).  Language-ID and quality
-scoring exist twice: a Catalyst Column recipe (the cross-check reference)
-and an Arrow-batched pandas UDF (the hot path) — Spark evaluates
-``array_intersect``-over-words higher-order functions *interpreted*
-(~0.4 ms/doc measured), so profile intersection is the one text op where
-vectorized Python wins.  Both produce identical values (parity-tested).
+regexp_count / xxhash64, whole-stage codegen).  Language-ID, quality
+scoring and the Gopher repetition signals are Arrow-batched pandas UDFs:
+Spark evaluates their ``array_intersect``-over-words / n-gram higher-order
+function formulations *interpreted* (~0.4 ms/doc measured), so profile
+intersection and n-gram counting are the text ops where vectorized Python
+wins.  Their reference is the DuckDB oracle SQL of the queries that run
+them (``doc_lang_id``, ``doc_quality``, ``gopher_quality``).
 """
 
 from __future__ import annotations
@@ -118,78 +119,16 @@ def token_count_bpe(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_ISH))
 
 
-def quality_features(col: Column) -> Column:
-    """Struct of quality signals: n_chars, n_words, avg_word_len,
-    punct_ratio, digit_ratio, stopword_ratio, upper_ratio."""
-    ws = words(col)
-    n_chars = F.length(col)
-    n_words = F.size(ws)
-    n_punct = F.regexp_count(col, F.lit(PUNCT_RE))
-    n_digit = F.regexp_count(col, F.lit(r"[0-9]"))
-    n_upper = F.regexp_count(col, F.lit(r"[A-Z]"))
-    n_stop = F.size(F.array_intersect(ws, F.array(*[F.lit(w) for w in STOPWORDS_EN])))
-    safe = lambda num, den: F.when(den > 0, num.cast("double") / den).otherwise(F.lit(0.0))
-    return F.struct(
-        n_chars.alias("n_chars"),
-        n_words.alias("n_words"),
-        safe(n_chars, n_words).alias("avg_word_len"),
-        safe(n_punct, n_chars).alias("punct_ratio"),
-        safe(n_digit, n_chars).alias("digit_ratio"),
-        safe(n_stop, n_words).alias("stopword_ratio"),
-        safe(n_upper, n_chars).alias("upper_ratio"),
-    )
-
-
-def quality_score(col: Column) -> Column:
-    """Scalar [0,1] quality score from the features (fixed linear recipe)."""
-    f = quality_features(col)
-    score = (
-        F.lit(0.5)
-        + F.least(f.getField("n_words").cast("double") / 400.0, F.lit(0.25))
-        - f.getField("punct_ratio") * 0.5
-        - f.getField("digit_ratio") * 0.5
-        + F.least(f.getField("stopword_ratio"), F.lit(0.25))
-    )
-    return F.greatest(F.lit(0.0), F.least(F.lit(1.0), score))
-
-
-def lang_scores(col: Column) -> Column:
-    """Map<lang, matches>: distinct stopword hits per language profile."""
-    ws = words(col)
-    entries = []
-    for lang, prof in LANG_PROFILES.items():
-        hits = F.size(
-            F.array_intersect(ws, F.array(*[F.lit(w) for w in prof]))
-        )
-        entries.append(F.struct(F.lit(lang).alias("lang"), hits.alias("hits")))
-    return F.array(*entries)
-
-
-def lang_id(col: Column) -> Column:
-    """Argmax language over the stopword profiles; 'und' when no hits.
-
-    Ties break alphabetically (sort by (-hits, lang)) — deterministic and
-    reproducible in ANSI SQL oracles.
-    """
-    scores = lang_scores(col)
-    best = F.array_min(
-        F.transform(
-            scores,
-            lambda s: F.struct(
-                (-s.getField("hits")).alias("neg"), s.getField("lang").alias("lang")
-            ),
-        )
-    )
-    return F.when(-best.getField("neg") > 0, best.getField("lang")).otherwise(
-        F.lit("und")
-    )
-
-
 def quality_features_udf():
-    """Arrow-vectorized quality_features — identical values (same word
-    split, same distinct-stopword semantics, int/int double ratios), one
-    Python pass per batch instead of interpreted ``array_intersect`` HOFs
-    (Spark evaluates array HOFs without codegen; measured ~0.4 ms/doc)."""
+    """Struct of quality signals per document: n_chars, n_words,
+    avg_word_len, punct_ratio, digit_ratio, stopword_ratio (distinct
+    ``STOPWORDS_EN`` hits over words), upper_ratio — int/int double
+    ratios, 0.0 on a zero denominator.
+
+    Arrow-batched: one Python pass per batch.  Spark evaluates the
+    ``array_intersect``-over-words formulation as interpreted array HOFs
+    (no codegen; measured ~0.4 ms/doc).  The ``doc_quality`` oracle
+    re-derives the words, ratios and stopword hits in DuckDB."""
     import re
 
     from pyspark.sql.functions import pandas_udf
@@ -226,8 +165,10 @@ def quality_features_udf():
 
 
 def lang_id_udf():
-    """Arrow-vectorized lang_id — same argmax + alphabetical tie-break as
-    the Catalyst formulation (kept as the cross-check reference)."""
+    """Argmax language over the ``LANG_PROFILES`` stopword profiles by
+    distinct word hits; 'und' when nothing hits.  Ties break
+    alphabetically (min over (-hits, lang)), as the ``doc_lang_id``
+    oracle's ``ORDER BY h DESC, lang`` does."""
     import re
 
     from pyspark.sql.functions import pandas_udf
@@ -248,108 +189,21 @@ def lang_id_udf():
     return lid
 
 
-def _word_ngrams(ws: Column, n: int) -> Column:
-    """Array of n-word grams (space-joined); empty array below n words."""
-    size = F.size(ws)
-    idx = F.sequence(F.lit(1), size - (n - 1))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(ws, i + j) for j in range(n)]
-        ),
-    )
-    return F.when(size >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _max_run_length(arr: Column) -> Column:
-    """Count of the most frequent element of a string array (0 if empty).
-
-    Sorts the array and folds a run-length scan — the mode COUNT is
-    order-independent, so no tie-break is needed (unlike the mode value).
-    Stays in Catalyst HOFs: no shuffle, no UDF.
-    """
-    srt = F.array_sort(arr)
-    acc0 = F.struct(
-        F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-    )
-    run = lambda acc, x: F.when(x == acc.getField("prev"),
-                                acc.getField("run") + 1).otherwise(F.lit(1))
-    return F.aggregate(
-        srt,
-        acc0,
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            run(acc, x).alias("run"),
-            F.greatest(acc.getField("best"), run(acc, x)).alias("best"),
-        ),
-        lambda acc: acc.getField("best"),
-    )
-
-
-def repetition_features(col: Column) -> Column:
-    """Gopher-style repetition/format signals as a struct (pure Catalyst).
+def repetition_features_udf():
+    """Gopher-style repetition/format signals as a struct (Rae et al.
+    2021 §A1.1), one map-side pass, no shuffle.
 
     Columns: n_lines, dup_line_frac (1 - distinct/total over trimmed
-    non-empty lines), bullet_ratio (lines starting ``-``/``*``/bullet),
-    ellipsis_ratio (lines ending ``...``/ellipsis), top_bigram_frac
-    (fraction of word bigrams equal to the most frequent bigram),
-    dup_trigram_frac (1 - distinct/total over word trigrams).
+    non-empty lines, the :func:`line_array` semantics), bullet_ratio
+    (lines starting ``-``/``*``/bullet), ellipsis_ratio (lines ending
+    ``...``/ellipsis), top_bigram_frac (fraction of word bigrams equal
+    to the most frequent bigram), dup_trigram_frac (1 - distinct/total
+    over word trigrams) — int/int double ratios, 0.0 on a zero
+    denominator.
 
-    These are the per-document repetition filters of Gopher-class corpus
-    curation (Rae et al. 2021 §A1.1), each computable per row with no
-    shuffle — the 100-TB shape is a single map-side pass.
-
-    NOTE: this Catalyst formulation is the cross-check REFERENCE, not the
-    hot path — array HOFs run interpreted without common-subexpression
-    elimination, so the embedded ``words()`` pipeline re-evaluates per
-    element (measured ~8ms/doc).  Production uses
-    :func:`repetition_features_udf` (bit-identical, parity-tested).
-    """
-    lines = line_array(col)
-    n_lines = F.size(lines)
-    n_bullet = F.size(F.filter(lines, lambda l: l.rlike("^[-*•]")))
-    n_ellipsis = F.size(
-        F.filter(lines, lambda l: l.rlike("(\\.\\.\\.|…)$"))
-    )
-    ws = words(col)
-    bigrams = _word_ngrams(ws, 2)
-    trigrams = _word_ngrams(ws, 3)
-    n_bi = F.size(bigrams)
-    n_tri = F.size(trigrams)
-    safe = lambda num, den: F.when(
-        den > 0, num.cast("double") / den
-    ).otherwise(F.lit(0.0))
-    return F.struct(
-        n_lines.alias("n_lines"),
-        safe(n_lines - F.size(F.array_distinct(lines)), n_lines).alias(
-            "dup_line_frac"
-        ),
-        safe(n_bullet, n_lines).alias("bullet_ratio"),
-        safe(n_ellipsis, n_lines).alias("ellipsis_ratio"),
-        safe(_max_run_length(bigrams), n_bi).alias("top_bigram_frac"),
-        safe(n_tri - F.size(F.array_distinct(trigrams)), n_tri).alias(
-            "dup_trigram_frac"
-        ),
-    )
-
-
-def repetition_flag(col: Column) -> Column:
-    """Gopher-style repetition rejection flag (fixed thresholds)."""
-    f = repetition_features(col)
-    return (
-        (f.getField("dup_line_frac") > 0.30)
-        | (f.getField("top_bigram_frac") > 0.20)
-        | (f.getField("dup_trigram_frac") > 0.30)
-    )
-
-
-def repetition_features_udf():
-    """Arrow-vectorized repetition_features — identical values to the
-    Catalyst formulation (same line/word splits, same int/int double
-    ratios), one Python pass per batch instead of interpreted array-HOF
-    evaluation (Spark runs array HOFs without codegen)."""
+    Arrow-batched: the array-HOF formulation runs interpreted without
+    common-subexpression elimination (measured ~8 ms/doc).  The
+    ``gopher_quality`` oracle re-derives every field it reports."""
     import re
     from collections import Counter
 
@@ -397,6 +251,21 @@ def repetition_features_udf():
     # Exchange).  Values are unchanged — the fn is pure; only optimizer
     # reordering freedom is removed.
     return feats.asNondeterministic()
+
+
+def repetition_flag(rep: Column) -> Column:
+    """Gopher-style repetition rejection flag over a
+    :func:`repetition_features_udf` struct column (fixed thresholds; the
+    ``gopher_quality`` oracle SQL spells the same three).
+
+    Pass a column that PROJECTS the struct, not the raw UDF call: each
+    field reference on the nondeterministic call would become its own
+    ArrowEvalPython eval."""
+    return (
+        (rep.getField("dup_line_frac") > 0.30)
+        | (rep.getField("top_bigram_frac") > 0.20)
+        | (rep.getField("dup_trigram_frac") > 0.30)
+    )
 
 
 def normalize_ws(col: Column) -> Column:
@@ -538,26 +407,6 @@ def remove_boilerplate(df: DataFrame, id_col: str, text_col: str,
         (F.size(lines_arr) - F.size(kept_arr)).cast("long")
         .alias("n_removed"),
     )
-
-
-def shingles(col: Column, k: int = 5) -> Column:
-    """Array of k-word shingles (strings) from normalized text."""
-    ws = words(col)
-    n = F.size(ws)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n >= k, F.transform(
-        idx, lambda i: F.array_join(F.slice(ws, i + 1, k), " ")
-    )).otherwise(F.array(F.array_join(ws, " ")))
-
-
-def rolling_fingerprints(col: Column, k: int = 5) -> Column:
-    """Array of shingle hashes — the winnowing-style document sketch."""
-    return F.transform(shingles(col, k), lambda s: F.xxhash64(s))
-
-
-def doc_sketch_min(col: Column, k: int = 5) -> Column:
-    """Minimum shingle hash — a 1-perm MinHash style document key."""
-    return F.array_min(rolling_fingerprints(col, k))
 
 
 # ---------------------------------------------------------------------------

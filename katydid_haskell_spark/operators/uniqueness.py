@@ -4,8 +4,7 @@ Duplicate detection is a hash-aggregate shuffle on the key.  At 10^12 rows
 the aggregate is partial+final (map-side combine shrinks the shuffle to one
 row per distinct key per task); AQE splits skewed reducers.  Violations are
 produced directly from the aggregate — no join back to the fact table is
-needed for (key, count) reporting; ``duplicate_rows`` joins back only when
-full rows are requested.
+needed for (key, count) reporting.
 """
 
 from __future__ import annotations
@@ -22,45 +21,4 @@ def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("dup_count"))
         .filter(F.col("dup_count") > 1)
-    )
-
-
-def duplicate_rows(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """All rows participating in a duplicate key (window count, single
-    shuffle on the key — no second scan)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*keys)
-    return (
-        df.withColumn("dup_count", F.count(F.lit(1)).over(w))
-        .filter(F.col("dup_count") > 1)
-    )
-
-
-def uniqueness_violations(df: DataFrame, key: str,
-                          rule_id: str = "unique_url") -> DataFrame:
-    """Violations frame (url, rule_id, detail) for a duplicated key."""
-    return duplicate_keys(df, [key]).select(
-        F.col(key).cast("string").alias("url"),
-        F.lit(rule_id).alias("rule_id"),
-        F.concat(F.lit("duplicate count="), F.col("dup_count")).alias("detail"),
-    )
-
-
-def uniqueness_verdict(df: DataFrame, key: str,
-                       rule_id: str = "unique_url") -> DataFrame:
-    """One verdict row: rule_id, scope, pass, metric (dup key count), detail."""
-    agg = duplicate_keys(df, [key]).agg(
-        F.count(F.lit(1)).alias("dup_keys"),
-        F.coalesce(F.sum("dup_count"), F.lit(0)).alias("dup_rows"),
-    )
-    return agg.select(
-        F.lit(rule_id).alias("rule_id"),
-        F.lit("table").alias("scope"),
-        (F.col("dup_keys") == 0).alias("pass"),
-        F.col("dup_keys").cast("double").alias("metric"),
-        F.concat(
-            F.lit("duplicate keys="), F.col("dup_keys"),
-            F.lit(" rows in duplicates="), F.col("dup_rows"),
-        ).alias("detail"),
     )

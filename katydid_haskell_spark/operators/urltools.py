@@ -35,8 +35,3 @@ def normalize_url(col: Column) -> Column:
     r = F.regexp_replace(r, r"[?&]+$", "")                     # dangling sep
     r = F.regexp_replace(r, r"/$", "")                         # trailing /
     return F.concat(norm_prefix, r)
-
-
-def with_normalized_url(df, url_col: str = "url",
-                        out_col: str = "norm_url"):
-    return df.withColumn(out_col, normalize_url(F.col(url_col)))

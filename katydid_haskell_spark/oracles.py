@@ -242,18 +242,18 @@ def _plane_lit(dim: int, bit: int, seed: int) -> str:
 
 
 def _code_expr(vec: str, dim: int, n_bits: int, seed: int) -> str:
-    """Packed sign-bit code — list_inner_product over DOUBLE[] matches the
-    Spark Catalyst dot() (double-widened elements, ordered fold)
-    bit-for-bit.
+    """Packed sign-bit code — list_inner_product over DOUBLE[]
+    (double-widened elements, left-to-right fold).
 
-    CAVEAT (float discipline): the bit-for-bit claim holds for the
-    CATALYST formulation only.  The Arrow hot path
-    (``similarity.lsh_codes_udf`` etc.) computes the same dots via BLAS
-    matmul, whose summation order differs; a dot within reordering error
-    of 0.0 (~ulp scale for these 64-dim unit-ish vectors) could flip a
-    sign bit and diverge bucket membership from this oracle.  Accepted
-    risk, deterministic per (BLAS build, shape) — see
-    ``similarity.lsh_codes_udf``'s docstring for the same caveat."""
+    Float discipline: the Arrow path (``similarity.lsh_codes_udf``)
+    computes the same dots via BLAS matmul, whose summation order
+    differs; rows with a dot inside the ``similarity._REL_MARGIN`` guard
+    band re-decide through the left-to-right fold
+    (``similarity._ordered_matmul``).  DuckDB reads each plane literal
+    as DECIMAL(18,17), so a few plane constants here are not the exact
+    Python doubles: a dot within that rounding of 0.0 can still decide
+    differently.  ``test_near_zero_dot_sign_parity`` pins engineered
+    near-zero dots against this expression."""
     terms = " + ".join(
         f"CASE WHEN list_inner_product(CAST({vec} AS DOUBLE[]), "
         f"{_plane_lit(dim, b, seed)}) >= 0 THEN {1 << b} ELSE 0 END"

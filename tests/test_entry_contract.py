@@ -2,10 +2,9 @@
 oracle_sql() entry matches the Spark result (row count + order-insensitive
 values) at sf0.01 — a local mirror of the driver's CORRECTNESS gate."""
 
-import math
-
 import duckdb
 import pytest
+from conftest import oracle_result, oracles, spark_result
 
 import __spark_entry__ as entry_mod
 
@@ -24,25 +23,7 @@ def duck():
     return con
 
 
-def normalize(rows, columns):
-    """Sort columns by name, normalize values, return sorted tuple set."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float):
-                if math.isnan(v):
-                    v = "nan"
-                else:
-                    v = round(v, 6)
-            vals.append(str(v))
-        out.append(tuple(vals))
-    return sorted(out)
-
-
-ORACLES = entry_mod.oracle_sql()
+ORACLES = oracles()
 QUERIES = entry_mod.queries()
 
 
@@ -52,21 +33,11 @@ def test_oracles_subset_of_queries():
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    ddf = duck.sql(ORACLES[name])
-    dcols = [c.lower() for c in ddf.columns]
-    # Go through pandas, as the driver does: DuckDB HUGEINT (e.g. SUM(CASE..))
-    # lands as float64 there, so an un-CAST oracle produces "53.0" vs Spark's
-    # "53" — the exact round-1 gate-red failure mode.  fetchall() would hide it.
-    dpdf = ddf.df()
-    drows = [tuple(r) for r in dpdf.itertuples(index=False, name=None)]
-    assert sorted(c.lower() for c in scols) == sorted(dcols), (
+    scols, s_norm = spark_result(QUERIES[name](spark, SF_DIR))
+    dcols, d_norm = oracle_result(name, duck)
+    assert sorted(scols) == sorted(dcols), (
         f"schema mismatch: spark={scols} duck={dcols}"
     )
-    s_norm = normalize(srows, [c.lower() for c in scols])
-    d_norm = normalize(drows, dcols)
     assert len(s_norm) == len(d_norm), (
         f"row count: spark={len(s_norm)} duck={len(d_norm)}"
     )

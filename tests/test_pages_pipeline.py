@@ -174,6 +174,28 @@ def test_violations_match_duckdb_rederivation(spark):
     assert got == want
 
 
+def test_topk_violations_bounds_each_rule(spark):
+    """topk_violations keeps at most k rows per rule_id, the first k by
+    (url, detail): a tie on url at the cut is decided by detail, and a
+    rule with fewer than k violations is kept whole."""
+    from katydid_haskell_spark.plans.checkplan import topk_violations
+
+    rows = [("u1", "a", "d3"), ("u9", "a", "c"), ("u1", "a", "d1"),
+            ("u0", "a", "z"), ("u1", "a", "d2"),
+            ("u5", "b", "x"), ("u4", "b", "y")]
+    v = spark.createDataFrame(rows,
+                              "url string, rule_id string, detail string")
+    out = topk_violations(v, k=3)
+    assert out.columns == ["url", "rule_id", "detail"]
+    got = {}
+    for r in out.collect():
+        got.setdefault(r.rule_id, []).append((r.url, r.detail))
+    assert {rid: sorted(x) for rid, x in got.items()} == {
+        "a": [("u0", "z"), ("u1", "d1"), ("u1", "d2")],
+        "b": [("u4", "y"), ("u5", "x")],
+    }
+
+
 def test_fused_plan_prunes_unused_columns(spark, tmp_path):
     """Column pruning must reach the scan: the fused plan reads
     url/warc_ts/text/lang/bucket — never the html payload (which is most

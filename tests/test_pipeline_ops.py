@@ -171,15 +171,16 @@ def test_textops(spark, docs):
     row = docs.filter("doc_id = 0").select(
         tx.token_count_ws(F.col("text")).alias("ws"),
         tx.token_count_bpe(F.col("text")).alias("bpe"),
-        tx.lang_id(F.col("text")).alias("lang"),
-        tx.quality_score(F.col("text")).alias("q"),
+        tx.lang_id_udf()(F.col("text")).alias("lang"),
+        tx.quality_features_udf()(F.col("text")).alias("q"),
     ).collect()[0]
     assert row["ws"] == 9
     assert row["bpe"] == 9
     assert row["lang"] == "en"
-    assert 0.0 <= row["q"] <= 1.0
+    assert row["q"].n_words == 9
+    assert 0.0 <= row["q"].stopword_ratio <= 1.0
     langs = {r.doc_id: r.l for r in docs.select(
-        "doc_id", tx.lang_id(F.col("text")).alias("l")).collect()}
+        "doc_id", tx.lang_id_udf()(F.col("text")).alias("l")).collect()}
     assert langs[3] == "de"
     assert langs[5] == "fr"
 
@@ -534,57 +535,125 @@ def test_ivf_centroids_deterministic(spark, vectors):
     assert c1 == c2
 
 
-def test_arrow_paths_match_catalyst_reference(spark):
-    """The Arrow-vectorized hot paths (codes / cell assignment / pair
-    cosine) must agree with the kept Catalyst reference formulations."""
+def _fold_dot(a, b):
+    """a·b as a left-to-right float64 fold — the reference order for the
+    Arrow paths' sign, argmax and cosine decisions."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+def _as_float32(vecs):
+    """The values an array<float> column holds for python float lists."""
+    import numpy as np
+
+    return [[float(np.float32(x)) for x in v] for v in vecs]
+
+
+def _ref_cell(v, cents):
+    """Nearest-centroid cell by ordered-fold cosine; first max wins."""
+    n = math.sqrt(_fold_dot(v, v))
+    sims = [_fold_dot(v, c) / n if n > 0 else 0.0 for c in cents]
+    return sims.index(max(sims))
+
+
+def _duck_codes(rows, dim, n_bits, seed):
+    """vec_id -> LSH code from the DuckDB oracle's ``_code_expr`` over
+    the float32 vectors."""
+    import duckdb
+    import pandas as pd
+
+    from katydid_haskell_spark import oracles as orc
+
+    con = duckdb.connect()
+    con.register("vecs", pd.DataFrame(rows, columns=["vec_id", "v"]))
+    code = orc._code_expr("CAST(v AS FLOAT[])", dim, n_bits, seed)
+    got = dict(con.execute(f"SELECT vec_id, {code} FROM vecs").fetchall())
+    con.close()
+    return got
+
+
+def test_arrow_paths_match_oracle_reference(spark):
+    """The Arrow-vectorized hot paths agree with references that are not
+    the code under test: LSH codes with the DuckDB oracle's
+    ``_code_expr``; cell assignment (first max wins a tie) and pair cosine
+    with a left-to-right float64 fold."""
     import random
 
     rnd = random.Random(3)
     rows = [(i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, v array<float>").cache()
+    v32 = dict(zip([r[0] for r in rows], _as_float32([r[1] for r in rows])))
 
     # lsh codes
     arrow = df.select(
         "vec_id",
         sim.lsh_codes_udf(16, 6, [42])(F.col("v")).getItem(0).alias("c"))
-    cata = df.select("vec_id", sim.lsh_code(F.col("v"), 16, 6, 42).alias("c"))
     a = {r.vec_id: r.c for r in arrow.collect()}
-    b = {r.vec_id: r.c for r in cata.collect()}
-    assert a == b
+    assert a == _duck_codes(rows, 16, 6, 42)
 
-    # cell assignment + probe order
+    # cell assignment
     cents = sim.kmeans_unit(
         __import__("numpy").array([r[1] for r in rows], dtype="float64"),
         n_cells=8)
     aa = {r.vec_id: r.c for r in df.select(
         "vec_id", sim.cell_assign_udf(cents, 16)(F.col("v")).alias("c")).collect()}
-    cc = {r.vec_id: r.c for r in df.select(
-        "vec_id", sim.ivf_cell(F.col("v"), cents).alias("c")).collect()}
-    assert aa == cc
+    assert aa == {i: _ref_cell(v, cents) for i, v in v32.items()}
 
-    # pair cosine (within float tolerance of the Catalyst fold)
+    # pair cosine (within float tolerance of the ordered fold)
     pairs = df.alias("l").join(df.alias("r"),
                                F.col("l.vec_id") + 1 == F.col("r.vec_id"))
-    got = pairs.select(
-        sim.cosine_pairs_udf(16)(F.col("l.v"), F.col("r.v")).alias("a"),
-        sim.cosine(F.col("l.v"), F.col("r.v")).alias("b")).collect()
-    assert all(abs(r.a - r.b) < 1e-12 for r in got)
+    got = pairs.select("l.vec_id", sim.cosine_pairs_udf(16)(
+        F.col("l.v"), F.col("r.v")).alias("a")).collect()
+    assert len(got) == 199
+    for r in got:
+        x, y = v32[r.vec_id], v32[r.vec_id + 1]
+        d = math.sqrt(_fold_dot(x, x)) * math.sqrt(_fold_dot(y, y))
+        want = _fold_dot(x, y) / d if d > 0 else 0.0
+        assert abs(r.a - want) < 1e-12, r.vec_id
 
 
-def test_textops_arrow_matches_catalyst(spark, docs):
-    got_c = docs.select(
+def test_textops_udfs_match_oracles(spark, docs, tmp_path):
+    """The ``doc_lang_id`` and ``doc_quality`` entries (lang_id_udf and
+    quality_features_udf) equal their oracle SQL run in DuckDB over the
+    same rows; the struct fields no oracle reports are re-derived in
+    DuckDB inline."""
+    import duckdb
+    import pandas as pd
+    from conftest import entry_and_oracle
+
+    import __spark_entry__ as entry_mod
+
+    pdf = pd.DataFrame(DOCS, columns=["doc_id", "text", "lang"])
+    for name in ("doc_lang_id", "doc_quality"):
+        got, want = entry_and_oracle(spark, name, tmp_path, documents=pdf)
+        assert got == want, name
+
+    f = F.col("f")
+    rest = docs.select(
+        "doc_id", tx.quality_features_udf()(F.col("text")).alias("f")
+    ).select(
         "doc_id",
-        tx.lang_id(F.col("text")).alias("lang"),
-        tx.quality_features(F.col("text")).alias("f"),
-    ).collect()
-    got_a = docs.select(
-        "doc_id",
-        tx.lang_id_udf()(F.col("text")).alias("lang"),
-        tx.quality_features_udf()(F.col("text")).alias("f"),
-    ).collect()
-    ca = {r.doc_id: (r.lang, tuple(r.f)) for r in got_c}
-    aa = {r.doc_id: (r.lang, tuple(r.f)) for r in got_a}
-    assert ca == aa
+        f.getField("n_chars").alias("n_chars"),
+        f.getField("avg_word_len").alias("avg_word_len"),
+        f.getField("upper_ratio").alias("upper_ratio"))
+    con = duckdb.connect()
+    con.register("d", pdf)
+    want = con.execute(f"""
+        SELECT doc_id, length(text) AS n_chars,
+               CASE WHEN len(w) > 0 THEN length(text) * 1.0 / len(w)
+                    ELSE 0.0 END AS avg_word_len,
+               len(regexp_extract_all(text, '[A-Z]')) * 1.0
+                 / length(text) AS upper_ratio
+        FROM (SELECT doc_id, text, {entry_mod._WORDS_SQL} AS w FROM d)
+        ORDER BY doc_id
+    """).fetchall()
+    con.close()
+    got = sorted(tuple(r) for r in rest.collect())
+    assert [r[:2] for r in got] == [r[:2] for r in want]
+    for g, w in zip(got, want):
+        assert g[2:] == pytest.approx(w[2:], abs=1e-12), g[0]
 
 
 def test_connected_components(spark):
@@ -798,9 +867,10 @@ def test_exact_dup_groups_bounded(spark):
 
 def test_near_zero_dot_sign_parity(spark):
     """Engineered near-zero hyperplane dots and near-tie centroid argmax:
-    the Arrow paths must make the SAME decision as the Catalyst ordered
-    fold (the round-3 BLAS-reordering caveat, now closed by the
-    _ordered_matmul margin fallback)."""
+    the Arrow paths must make the SAME decision as the DuckDB oracle's
+    ``_code_expr`` and a left-to-right float64 fold (the round-3
+    BLAS-reordering caveat, closed by the _ordered_matmul margin
+    fallback)."""
     import numpy as np
 
     dim, n_bits, seed = 16, 6, 42
@@ -820,21 +890,25 @@ def test_near_zero_dot_sign_parity(spark):
         "vec_id",
         sim.lsh_codes_udf(dim, n_bits, [seed])(F.col("v")).getItem(0)
         .alias("c")).collect()}
-    cata = {r.vec_id: r.c for r in df.select(
-        "vec_id", sim.lsh_code(F.col("v"), dim, n_bits, seed).alias("c"))
-        .collect()}
-    assert arrow == cata
+    rows = list(enumerate(vecs))
+    v32 = _as_float32(vecs)
+    fold = {i: sum(1 << b for b in range(n_bits)
+                   if _fold_dot(v, planes[b]) >= 0)
+            for i, v in enumerate(v32)}
+    assert arrow == fold
+    assert arrow == _duck_codes(rows, dim, n_bits, seed)
 
     # centroid argmax near-ties: c1 is a tiny perturbation of c0, so many
-    # vectors land within the guard band between them
+    # vectors land within the guard band between them; c4 repeats c0
+    # exactly, an exact tie the first max (c0) must win
     cents = [list(rng.normal(size=dim)) for _ in range(4)]
     cents[1] = [w + 1e-13 for w in cents[0]]
+    cents.append(list(cents[0]))
     aa = {r.vec_id: r.c for r in df.select(
         "vec_id", sim.cell_assign_udf(cents, dim)(F.col("v")).alias("c"))
         .collect()}
-    cc = {r.vec_id: r.c for r in df.select(
-        "vec_id", sim.ivf_cell(F.col("v"), cents).alias("c")).collect()}
-    assert aa == cc
+    assert aa == {i: _ref_cell(v, cents) for i, v in enumerate(v32)}
+    assert 0 in aa.values()
 
 
 REP_DOCS = [
@@ -845,39 +919,47 @@ REP_DOCS = [
 
 
 def test_repetition_features_hand_computed(spark):
-    """Gopher repetition signals hand-derived on a known fixture (both
-    the Catalyst HOF formulation and the Arrow UDF)."""
+    """Gopher repetition signals of the Arrow UDF, hand-derived on a
+    known fixture."""
     df = spark.createDataFrame(REP_DOCS, "doc_id long, text string")
-    for expr in (tx.repetition_features(F.col("text")),
-                 tx.repetition_features_udf()(F.col("text"))):
-        rows = {r.doc_id: r.f for r in
-                df.select("doc_id", expr.alias("f")).collect()}
-        f0 = rows[0]
-        assert f0.n_lines == 5
-        assert f0.dup_line_frac == pytest.approx(1 / 5)   # 'line one' dup
-        assert f0.bullet_ratio == pytest.approx(1 / 5)
-        assert f0.ellipsis_ratio == pytest.approx(1 / 5)
-        assert f0.top_bigram_frac == pytest.approx(3 / 11)  # 'a b' x3
-        assert f0.dup_trigram_frac == pytest.approx(2 / 10)
-        f1 = rows[1]
-        assert (f1.n_lines, f1.dup_line_frac, f1.bullet_ratio) == (1, 0.0, 0.0)
-        assert f1.top_bigram_frac == pytest.approx(1 / 6)
-        assert f1.dup_trigram_frac == 0.0
-        f2 = rows[2]
-        assert f2.bullet_ratio == pytest.approx(1 / 2)    # unicode bullet
-        assert f2.ellipsis_ratio == pytest.approx(1 / 2)  # unicode ellipsis
-
-
-def test_repetition_arrow_matches_catalyst(spark, docs):
-    """Arrow hot path == Catalyst reference, bit-exact, on the shared
-    dedup fixture (includes dup/near-dup/multilingual texts)."""
-    both = docs.select(
+    rows = {r.doc_id: r.f for r in df.select(
         "doc_id",
-        tx.repetition_features(F.col("text")).alias("cat"),
-        tx.repetition_features_udf()(F.col("text")).alias("arw"),
-    ).collect()
-    for r in both:
-        assert r.cat == r.arw, r.doc_id
+        tx.repetition_features_udf()(F.col("text")).alias("f")).collect()}
+    f0 = rows[0]
+    assert f0.n_lines == 5
+    assert f0.dup_line_frac == pytest.approx(1 / 5)   # 'line one' dup
+    assert f0.bullet_ratio == pytest.approx(1 / 5)
+    assert f0.ellipsis_ratio == pytest.approx(1 / 5)
+    assert f0.top_bigram_frac == pytest.approx(3 / 11)  # 'a b' x3
+    assert f0.dup_trigram_frac == pytest.approx(2 / 10)
+    f1 = rows[1]
+    assert (f1.n_lines, f1.dup_line_frac, f1.bullet_ratio) == (1, 0.0, 0.0)
+    assert f1.top_bigram_frac == pytest.approx(1 / 6)
+    assert f1.dup_trigram_frac == 0.0
+    f2 = rows[2]
+    assert f2.bullet_ratio == pytest.approx(1 / 2)    # unicode bullet
+    assert f2.ellipsis_ratio == pytest.approx(1 / 2)  # unicode ellipsis
+
+
+def _gopher_vs_oracle(spark, tmp_path, rows):
+    """The ``gopher_quality`` entry (repetition_features_udf and
+    tx.repetition_flag) and its oracle SQL over (doc_id, text) rows."""
+    import pandas as pd
+    from conftest import entry_and_oracle
+
+    return entry_and_oracle(spark, "gopher_quality", tmp_path,
+                            documents=pd.DataFrame(
+                                rows, columns=["doc_id", "text"]))
+
+
+def test_repetition_udf_matches_oracle(spark, tmp_path):
+    """The ``gopher_quality`` entry (repetition_features_udf and
+    tx.repetition_flag) equals its oracle SQL run in DuckDB, on the
+    shared dedup fixture (dup/near-dup/multilingual texts) plus
+    REP_DOCS."""
+    rows = [(i, t) for i, t, _ in DOCS] + [(100 + i, t) for i, t in REP_DOCS]
+    got, want = _gopher_vs_oracle(spark, tmp_path, rows)
+    assert got == want
 
 
 NASTY_WS_DOCS = [
@@ -892,7 +974,7 @@ NASTY_WS_DOCS = [
 ]
 
 
-def test_whitespace_parity_crlf_tab_vt(spark):
+def test_whitespace_parity_crlf_tab_vt(spark, tmp_path):
     """The explicit whitespace classes (tx.WS_RE / LINE_TRIM_RE /
     PUNCT_RE) make Catalyst (Java regex), the Arrow UDFs (Python re) and
     the DuckDB oracles (RE2) agree bit-for-bit on CRLF / tab / vertical-
@@ -903,23 +985,25 @@ def test_whitespace_parity_crlf_tab_vt(spark):
 
     df = spark.createDataFrame(NASTY_WS_DOCS, "doc_id long, text string")
 
-    # 1) repetition features: Catalyst HOF vs Arrow UDF
-    both = df.select(
-        "doc_id",
-        tx.repetition_features(F.col("text")).alias("cat"),
-        tx.repetition_features_udf()(F.col("text")).alias("arw"),
-    ).collect()
-    for r in both:
-        assert r.cat == r.arw, (r.doc_id, r.cat, r.arw)
+    # 1) repetition features: Arrow UDF vs the gopher_quality oracle SQL
+    got, want = _gopher_vs_oracle(spark, tmp_path, NASTY_WS_DOCS)
+    assert got == want
     # CRLF doc: '\r' is trimmed, so 'Line one.' dedups and 'end...' ends
     # with the ellipsis (would both fail under space-only trim)
-    feats = {r.doc_id: r.cat for r in both}
+    feats = {r.doc_id: r.f for r in df.select(
+        "doc_id",
+        tx.repetition_features_udf()(F.col("text")).alias("f")).collect()}
     assert feats[0].n_lines == 4
     assert feats[0].dup_line_frac == pytest.approx(1 / 4)
     assert feats[0].bullet_ratio == pytest.approx(1 / 4)
     assert feats[0].ellipsis_ratio == pytest.approx(1 / 4)
     # VT-only line trims to empty and is dropped
     assert feats[1].n_lines == 3
+    # the gopher_quality oracle reports no bullet/ellipsis ratios: CRLF
+    # and tab-trimmed bullet and unicode-ellipsis lines, by hand
+    assert feats[3].n_lines == 4
+    assert feats[3].bullet_ratio == pytest.approx(1 / 4)
+    assert feats[3].ellipsis_ratio == pytest.approx(1 / 4)
 
     # 2) normalize_ws fingerprint + punct + ws-token counts vs DuckDB,
     # re-derived with the SAME literal pattern text (RE2 dialect)
@@ -1010,8 +1094,11 @@ def test_repetition_flag(spark):
     df = spark.createDataFrame(
         [(0, "spam spam spam spam spam spam spam"), (1, REP_DOCS[1][1])],
         "doc_id long, text string")
-    got = {r.doc_id: r.flag for r in df.select(
-        "doc_id", tx.repetition_flag(F.col("text")).alias("flag")).collect()}
+    rep = df.withColumn(
+        "__rep", tx.repetition_features_udf()(F.col("text")))
+    got = {r.doc_id: r.flag for r in rep.select(
+        "doc_id",
+        tx.repetition_flag(F.col("__rep")).alias("flag")).collect()}
     assert got == {0: True, 1: False}
 
 
@@ -2741,10 +2828,10 @@ def test_robots_parse_decide_hand_cases():
     assert rb.decide(r2, "c", "/early") == (True, 0)  # no group, no UA
 
 
-def test_robots_match_urls_parity(spark):
-    """The distributed Catalyst match path (rules_table + host join +
-    regexp + max_by) returns the SAME decisions as the pure decide()
-    engine for every (host, path), including no-robots hosts."""
+def test_robots_decide_udf_parity(spark):
+    """robots_decide_udf over (robots body, agent, path) rows returns the
+    SAME decisions as the pure decide() engine for every (host, path),
+    including a no-robots host (NULL body, as a left join leaves it)."""
     from katydid_haskell_spark.operators import robots as rb
 
     bodies = {
@@ -2753,24 +2840,20 @@ def test_robots_match_urls_parity(spark):
         "b.com": ("User-agent: bot\nDisallow: /only\n"
                   "User-agent: *\nDisallow: /\n"),
     }
-    robots_df = spark.createDataFrame(
-        list(bodies.items()), "host string, robots_txt string")
     paths = ["/p/ok/z", "/p/x", "/t/a.gz", "/t/a.gzx", "/only/f", "/"]
     urls = spark.createDataFrame(
-        [(h, p) for h in ["a.com", "b.com", "norobots.com"]
+        [(h, bodies.get(h), p) for h in ["a.com", "b.com", "norobots.com"]
          for p in paths],
-        "host string, path string")
-    rules = rb.rules_table(robots_df)
-    got = {(r.host, r.path): (r.allowed, r.match_len)
-           for r in rb.match_urls(urls, rules, "bot").collect()}
-    got_arrow = {(r.host, r.path): (r.allowed, r.match_len)
-                 for r in rb.match_urls_arrow(urls, robots_df,
-                                              "bot").collect()}
+        "host string, robots_txt string, path string")
+    d = rb.robots_decide_udf()(F.col("robots_txt"), F.lit("bot"),
+                               F.col("path"))
+    got = {(r.host, r.path): (r.d.allowed, r.d.match_len)
+           for r in urls.select("host", "path", d.alias("d")).collect()}
+    assert len(got) == 18
     for h in ["a.com", "b.com", "norobots.com"]:
         rl = rb.parse_robots(bodies.get(h, ""))
         for p in paths:
             assert got[(h, p)] == rb.decide(rl, "bot", p), (h, p)
-            assert got_arrow[(h, p)] == got[(h, p)], ("arrow", h, p)
     assert got[("norobots.com", "/")] == (True, 0)
 
 

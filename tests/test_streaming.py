@@ -317,8 +317,40 @@ def test_table_stream_link_follows_the_table(spark, tmp_path, monkeypatch):
         os.remove(links[0])
         os.symlink(str(tmp_path / "elsewhere.parquet"), links[0])
         monkeypatch.chdir(sf)
-        out = e._drain(e._table_stream(spark, "../sf", "documents"))
+        out = e._drain(e._table_stream(spark, "../sf", "documents"),
+                       "table_stream_link")
         assert os.readlink(links[0]) == src
         assert sorted(r.doc_id for r in out.collect()) == [1, 2, 3]
     finally:
         shutil.rmtree(os.path.dirname(links[0]))
+
+
+def test_streaming_query_reruns_replace_their_sink(spark, tmp_path):
+    """Re-running one streaming entry query in a session replaces its own
+    memory sink table instead of registering one more per run, and a
+    frame returned by the first run still collects its rows after the
+    third — also under a session-wide streaming checkpoint location,
+    where a fixed query name would otherwise resume the first run's
+    checkpoint."""
+    import __spark_entry__ as e
+
+    def sinks():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("spark_graft_sink_")}
+
+    before = sinks()
+    run = e.queries()["stream_route"]
+    spark.conf.set("spark.sql.streaming.checkpointLocation", str(tmp_path))
+    try:
+        first = run(spark, "/root/testdata/sf0.001")
+        want = sorted(tuple(r) for r in first.collect())
+        assert want
+        run(spark, "/root/testdata/sf0.001")
+        third = run(spark, "/root/testdata/sf0.001")
+    finally:
+        spark.conf.unset("spark.sql.streaming.checkpointLocation")
+    after = sinks()
+    assert len(after - before) <= 1, after - before
+    assert "spark_graft_sink_stream_route" in after
+    assert sorted(tuple(r) for r in first.collect()) == want
+    assert sorted(tuple(r) for r in third.collect()) == want
